@@ -33,11 +33,11 @@ across constant revisions silently yields garbage similarities.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_etl_pipeline_spark.operators import broadcast_if_fits
 from spark_etl_pipeline_spark.operators.store_meta import (
     check_store_stamp,
     write_store_stamp,
@@ -203,30 +203,7 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-def _pair_side(df: DataFrame, broadcast: bool | str) -> DataFrame:
-    """Candidate-pair join-side policy shared by the LSH verifiers.
-
-    ``True``  — explicit ``F.broadcast`` hint: right whenever pairs are
-    known-small (the common LSH case), zero planning risk.
-    ``"auto"`` — no hint: AQE sees the pair table's RUNTIME size at the
-    shuffle boundary and picks broadcast vs shuffle hash join itself.
-    This is the 100-TB-safe default: on a dup-heavy corpus the pair set
-    can approach corpus cardinality, and an unconditional broadcast of
-    a >8 GB table OOMs every executor; AQE broadcasts only under the
-    configured threshold.
-    ``False`` — ``shuffle_hash`` hint: force the shuffle path (testing,
-    or driver-memory-constrained deployments).
-    """
-    if broadcast is True:
-        return F.broadcast(df)
-    if broadcast is False:
-        return df.hint("shuffle_hash")
-    return df
-
-
-def jaccard_verified(
-    pairs: DataFrame, shingles: DataFrame, broadcast: bool | str = "auto"
-) -> DataFrame:
+def jaccard_verified(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
     """(doc_a, doc_b, jaccard): exact shingle-set Jaccard per pair.
 
     The candidate-pair table (the LSH output) joins — twice — against
@@ -234,13 +211,12 @@ def jaccard_verified(
     per-row ``array_intersect``: there is no pair-times-shingles row
     explosion. Per-doc arrays are bounded by document length (never by
     corpus size), so the aggregated row width is the same order as the
-    document itself. ``broadcast`` picks the pair-side join strategy
-    (see :func:`_pair_side`): the default lets AQE broadcast the pair
-    table only when its runtime size allows, so a dup-heavy corpus
-    whose pair set rivals the corpus falls back to a shuffle hash join
-    on doc_id instead of OOMing the executors.
+    document itself. The pair-side joins carry no hint: AQE sees the
+    pair table's runtime size and broadcasts it only when it fits, so a
+    dup-heavy corpus whose pair set rivals the corpus falls back to a
+    shuffle join on doc_id instead of OOMing the executors.
     """
-    return jaccard_verified_sets(pairs, shingle_sets(shingles), broadcast)
+    return jaccard_verified_sets(pairs, shingle_sets(shingles))
 
 
 def shingle_sets(shingles: DataFrame) -> DataFrame:
@@ -254,19 +230,17 @@ def shingle_sets(shingles: DataFrame) -> DataFrame:
     return shingles.groupBy("doc_id").agg(F.collect_set("s").alias("ss"))
 
 
-def jaccard_verified_sets(
-    pairs: DataFrame, ss: DataFrame, broadcast: bool | str = "auto"
-) -> DataFrame:
+def jaccard_verified_sets(pairs: DataFrame, ss: DataFrame) -> DataFrame:
     """:func:`jaccard_verified` over pre-aggregated (doc_id, ss) arrays —
     the entry point when the sets come from a materialized store
     instead of an in-plan aggregation (same join topology either way).
     """
     a = ss.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("ssa"))
     b = ss.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("ssb"))
-    with_a = a.join(_pair_side(pairs, broadcast), "doc_a")
+    with_a = a.join(pairs, "doc_a")
     i = F.size(F.array_intersect("ssa", "ssb")).cast("long")
     return (
-        b.join(_pair_side(with_a, broadcast), "doc_b")
+        b.join(with_a, "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -738,45 +712,12 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: assignment — no code change, no new registry plumbing.
 CC_MAX_ITERS = 25
 
-#: Join-side policy for the per-round label-propagation joins (r15
-#: optimization). ``True`` broadcasts the label table into the edge
-#: join and the per-node neighbor-minimum into the label update — the
-#: checkpointed tables carry no size statistics, so without the hint
-#: every round plans BOTH joins as sort-merge (two full shuffles of
-#: the edge list per round; AQE's runtime rewrite still pays the
-#: shuffle write). The dup-pair graph is the NEAR-DUPLICATE subset of
-#: the corpus — vertices are bounded by the duplicate count, far
-#: smaller than the corpus — so the broadcast is bounded by dup rate,
-#: not corpus size. ``False`` disables the hint unconditionally.
-CC_BROADCAST_LABELS = True
-
-#: Runtime guard on that policy (r16, VERDICT r15 item 2): the hint is
-#: applied only while the label table's ROW COUNT — one row per dup-
-#: graph vertex, known exactly and for free from the eager vertex
-#: checkpoint, constant across rounds — stays at or under this bound.
-#: A template-heavy corpus whose dup graph genuinely rivals executor
-#: memory now degrades to sort-merge rounds at runtime instead of an
-#: executor-fatal forced broadcast behind a compile-time boolean. The
-#: default (2M rows ≈ 128 MB at a conservative 64 B/vertex-label pair)
-#: sits well under executor memory while staying far above Spark's
-#: 10 MB auto-broadcast cutoff — the hint exists precisely because the
-#: stat-less checkpoint can't qualify for auto-broadcast. Override per
-#: deployment via ``SPARK_GRAFT_CC_BROADCAST_MAX_ROWS``.
-CC_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CC_BROADCAST_MAX_ROWS", 2_000_000)
-)
-
-
-def _label_side(df: DataFrame, bcast: bool) -> DataFrame:
-    return F.broadcast(df) if bcast else df
-
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iters: int | None = None,
-    fallback: str | None = "star",
 ) -> DataFrame:
     """(id, component) for every vertex of an undirected edge list,
     where ``component`` is the smallest vertex id reachable from ``id``.
@@ -811,13 +752,14 @@ def connected_components(
     (default :data:`CC_MAX_ITERS`, resolved at call time) exhaust before
     the fixpoint — a component whose DIAMETER exceeds the budget;
     templated/boilerplate text produces exactly such long dup chains —
-    the function hands the graph to
-    :func:`connected_components_star` (``fallback="star"``, the
-    default), whose large-star/small-star contraction converges in
-    O(log² n) rounds on any graph shape. With ``fallback=None`` it
-    raises instead of silently returning partial labels, which would
-    split one component into several and leave multiple "canonical"
-    survivors of one duplicate cluster.
+    the function hands the graph to :func:`connected_components_star`,
+    whose large-star/small-star contraction converges in O(log² n)
+    rounds on any graph shape. Partial labels are never returned: they
+    would split one component into several and leave multiple
+    "canonical" survivors of one duplicate cluster.
+
+    The round joins and the returned labels carry a broadcast hint
+    while the vertex count fits (:func:`broadcast_if_fits`).
     """
     if max_iters is None:
         max_iters = CC_MAX_ITERS
@@ -838,24 +780,23 @@ def connected_components(
         .select(F.col("s").alias("id"), F.least("s", "_md").alias("label"))
         .localCheckpoint()
     )
-    # Size-gated join policy (r16): the label table holds exactly one
-    # row per vertex in EVERY round, so one pass over the already-
-    # materialized checkpoint (cached-block reads, no recompute)
-    # decides the policy for the whole query; ``neigh`` is a per-vertex
-    # aggregate and shares the bound. The same collect seeds the
-    # convergence baseline with the seed state's label sum.
-    first = labels.agg(F.count(F.lit(1)), F.sum("label")).collect()[0]
-    bcast = CC_BROADCAST_LABELS and first[0] <= CC_BROADCAST_MAX_ROWS
-    prev_sum = first[1]
+    # The label table holds exactly one row per vertex in EVERY round,
+    # so one pass over the already-materialized checkpoint (cached-block
+    # reads, no recompute) counts the rows that gate every hint below;
+    # ``neigh`` is a per-vertex aggregate and shares the bound. The same
+    # collect seeds the convergence baseline with the label sum.
+    n_verts, prev_sum = labels.agg(F.count(F.lit(1)), F.sum("label")).collect()[0]
     converged = False
     for _ in range(max_iters):
         neigh = (
-            sym.join(_label_side(labels, bcast), sym.d == labels.id)
+            sym.join(broadcast_if_fits(labels, n_verts), sym.d == labels.id)
             .groupBy("s")
             .agg(F.min("label").alias("nl"))
         )
         labels = (
-            labels.join(_label_side(neigh, bcast), labels.id == neigh.s, "left")
+            labels.join(
+                broadcast_if_fits(neigh, n_verts), labels.id == neigh.s, "left"
+            )
             .select(
                 "id",
                 F.least(
@@ -875,18 +816,10 @@ def connected_components(
             break
         prev_sum = cur_sum
     if not converged:
-        if fallback == "star":
-            # Diameter exceeded the budget: re-solve with the
-            # O(log² n)-round contraction rather than failing. Partial
-            # labels are never used — star restarts from the raw edges.
-            return connected_components_star(edges, src, dst)
-        raise RuntimeError(
-            f"connected_components did not reach a fixpoint within "
-            f"{max_iters} iterations — a component's diameter exceeds the "
-            f"budget; raise max_iters, or use fallback='star' "
-            f"(large-star/small-star contraction) rather than partial "
-            f"(wrong) labels"
-        )
+        # Diameter exceeded the budget: re-solve with the O(log² n)-round
+        # contraction rather than failing. Partial labels are never
+        # used — star restarts from the raw edges.
+        return connected_components_star(edges, src, dst)
     # r16: the returned labels are dup-graph-vertex sized and every
     # downstream consumer that joins them against the CORPUS
     # (docs_dedup_corpus anti-join, the split/source taggers) would
@@ -895,7 +828,7 @@ def connected_components(
     # rides the SAME runtime size gate as the in-loop joins and
     # propagates through the consumers' filters/projections to their
     # join; select-only consumers simply drop it.
-    return F.broadcast(labels) if bcast else labels
+    return broadcast_if_fits(labels, n_verts)
 
 
 def connected_components_star(
@@ -1012,9 +945,7 @@ def connected_components_star(
     # Same gated downstream-broadcast contract as connected_components:
     # the output is vertex-sized; corpus-joining consumers get a BHJ
     # while the gate holds, SMJ otherwise.
-    if CC_BROADCAST_LABELS and verts.count() <= CC_BROADCAST_MAX_ROWS:
-        out = F.broadcast(out)
-    return out
+    return broadcast_if_fits(out, verts.count())
 
 
 #: Shared by ``dedup_components`` (label propagation) and
@@ -1199,13 +1130,8 @@ def incremental_survivors(docs: DataFrame, in_delta) -> DataFrame:
         # return; an adversarial all-dup corpus degrades to SMJ.
         .localCheckpoint(eager=False)
     )
-    drop_side = (
-        F.broadcast(dropped)
-        if dropped.count() <= CC_BROADCAST_MAX_ROWS
-        else dropped
-    )
     return docs.filter(in_delta(F.col("doc_id"))).join(
-        drop_side, "doc_id", "left_anti"
+        broadcast_if_fits(dropped, dropped.count()), "doc_id", "left_anti"
     )
 
 
@@ -1390,23 +1316,21 @@ def docs_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_THRESHOLD = 0.9
 
 
-def containment_verified(
-    pairs: DataFrame, shingles: DataFrame, broadcast: bool | str = "auto"
-) -> DataFrame:
+def containment_verified(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
     """(doc_a, doc_b, cont_a, cont_b): exact shingle containment per
     candidate pair — ``cont_a = |A∩B| / |A|`` (how much of A lies inside
     B) and symmetrically for B. The asymmetric complement to
     :func:`jaccard_verified`: a short doc quoted wholesale inside a long
     one scores near-1 containment while its Jaccard stays low. Same
-    join topology (pair side policy via :func:`_pair_side`, per-row
-    ``array_intersect``, no row explosion)."""
+    join topology (un-hinted pair side, per-row ``array_intersect``, no
+    row explosion)."""
     ss = shingles.groupBy("doc_id").agg(F.collect_set("s").alias("ss"))
     a = ss.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("ssa"))
     b = ss.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("ssb"))
-    with_a = a.join(_pair_side(pairs, broadcast), "doc_a")
+    with_a = a.join(pairs, "doc_a")
     i = F.size(F.array_intersect("ssa", "ssb")).cast("long")
     return (
-        b.join(_pair_side(with_a, broadcast), "doc_b")
+        b.join(with_a, "doc_b")
         .select(
             "doc_a",
             "doc_b",

@@ -23,12 +23,14 @@ checkpointing needed at 3 iterations (lineage depth stays bounded).
 
 from __future__ import annotations
 
-import os
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_etl_pipeline_spark import operators
+from spark_etl_pipeline_spark.operators import broadcast_if_fits
 from spark_etl_pipeline_spark.plans.registry import register, table
 
 #: Rank scale (1.0 == RANK_SCALE). 1e9 leaves 85·in_degree·SCALE
@@ -562,41 +564,74 @@ def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Join-side policy for the per-round BFS joins (r15 optimization).
-#: ``True`` broadcasts the frontier / frontier-order sets into the two
-#: incidence-list joins of every round, so the (large) incidence list
-#: is NEVER shuffled — without the hint both sides plan as sort-merge
-#: (the checkpointed frontier carries no size statistics, so neither
-#: auto-broadcast nor AQE's plan-time conversion fires, and even AQE's
-#: runtime SMJ→BHJ rewrite only kicks in AFTER the incidence list has
-#: paid its shuffle write). Measured at sf0.1: 2.64 s → 2.00 s with
-#: identical output. The frontier of a bounded blast-radius query is
-#: the seed set's ≤``max_hops``-neighborhood — small by construction;
-#: ``False`` disables the hint unconditionally.
-BFS_BROADCAST_FRONTIER = True
+def _bfs_walk(
+    seeds: DataFrame,
+    max_hops: int,
+    n_bound: int,
+    expand: Callable[[DataFrame, int], DataFrame],
+) -> DataFrame:
+    """The round loop shared by :func:`bfs_hops` and
+    :func:`bfs_hops_bipartite`: ``(node, hop)`` for every node within
+    ``max_hops`` of ``seeds(node)``. ``expand(frontier, n_rows)``
+    returns the frontier's one-hop neighbors as ``(node)`` rows (may
+    repeat nodes already seen; the loop anti-joins them away) and hints
+    its frontier-sized join sides through :func:`broadcast_if_fits`
+    with ``n_rows``.
 
-#: Runtime guard on that policy (r16, VERDICT r15 item 2): the hint is
-#: applied unconditionally only when the WHOLE vertex set provably
-#: fits (one cached-read count of the incidence/edge table — frontier
-#: ⊆ vertices); otherwise each round's hint requires THAT round's
-#: frontier row count to fit, so a wide seed set (seed = half the
-#: graph) degrades to sort-merge rounds at runtime instead of an
-#: executor-sized forced broadcast behind a compile-time boolean.
-#: Default mirrors ``dedup.CC_BROADCAST_MAX_ROWS``:
-#: 2M rows ≈ 128 MB at a conservative 64 B/node-id — well under
-#: executor memory, far above the 10 MB auto-broadcast cutoff the
-#: stat-less checkpoint can never qualify for. Override per
-#: deployment via ``SPARK_GRAFT_BFS_BROADCAST_MAX_ROWS``. The derived
-#: ``orders`` set (bipartite rounds) inherits its round's policy: it
-#: is the frontier's one-hop order-neighborhood, the same blast-radius
-#: bound the frontier count witnesses.
-BFS_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BFS_BROADCAST_MAX_ROWS", 2_000_000)
-)
+    Join strategy: the checkpointed frontier carries no size statistics,
+    so without a hint every expansion join plans sort-merge and shuffles
+    the (large) edge/incidence list each round. ``n_bound`` is the row
+    count of that list and bounds every frontier; when it fits under
+    :data:`~spark_etl_pipeline_spark.operators.BROADCAST_MAX_ROWS` every
+    round broadcasts with no per-round gating job. Otherwise each round
+    pays an exact frontier count — it doubles as the lazy checkpoint's
+    materialization and buys an exact empty-frontier early exit — so a
+    wide seed set degrades to sort-merge rounds instead of an
+    executor-sized broadcast.
 
+    Lineage bound (deep-hop safety): every per-round frontier EXCEPT
+    THE LAST is ``localCheckpoint``-ed BEFORE it joins the distance
+    map, and the map is ONE flat union over those frontiers — so the
+    returned plan is a union of checkpointed leaf scans plus at most
+    one live round, linear in hops. Pinned at hops=10 by
+    ``tests/test_graph_triangles.py::test_bfs_deep_hops_plan_bounded``.
+    The last round's frontier has exactly one consumer (its level row),
+    so its checkpoint would be a pure driver stall: Dataset.checkpoint
+    calls queryExecution.toRdd, and on an AQE plan that materializes
+    every query stage on the spot even with eager=False (measured
+    0.7-1.3 s blocking per round at sf0.1). Earlier rounds keep their
+    checkpoints — each has three consumers (seen-union, next round's
+    join, level row).
 
-def _frontier_side(df: DataFrame, bcast: bool) -> DataFrame:
-    return F.broadcast(df) if bcast else df
+    The visited set is a FLAT UNION of the already-checkpointed
+    frontiers rather than its own re-checkpointed table, which saved
+    one materialization job per round; checkpoints are LAZY
+    (``eager=False``), so each frontier materializes inside the next
+    round's job (or the final action). Measured together at sf0.1:
+    eager-everything 3.16 s → 1.56 s, identical output.
+
+    Durability (deliberate tradeoff, ARCHITECTURE.md "localCheckpoint
+    durability"): the per-round frontiers are EXECUTOR-LOCAL
+    checkpoints; an executor loss deletes them with no recompute path,
+    and the recovery unit is restart-the-query — cheap for a
+    ``max_hops``-bounded walk whose inputs re-derive from parquet.
+    Hour-scale deployments swap in reliable ``checkpoint()`` here.
+    """
+    frontier = seeds.select("node").distinct().localCheckpoint(eager=False)
+    frontiers = [frontier]
+    levels = [frontier.select("node", F.lit(0).alias("hop"))]
+    for k in range(1, max_hops + 1):
+        n_rows = n_bound
+        if n_bound > operators.BROADCAST_MAX_ROWS:
+            n_rows = frontier.count()
+            if n_rows == 0:
+                break
+        seen = reduce(DataFrame.unionByName, frontiers)
+        cand = expand(frontier, n_rows).join(seen, "node", "left_anti")
+        frontier = cand if k == max_hops else cand.localCheckpoint(eager=False)
+        frontiers.append(frontier)
+        levels.append(frontier.select("node", F.lit(k).alias("hop")))
+    return reduce(DataFrame.unionByName, levels)
 
 
 def bfs_hops_bipartite(
@@ -607,90 +642,28 @@ def bfs_hops_bipartite(
     they share an ``ok``), from a ``seeds(node)`` set, bounded at
     ``max_hops``. Returns ``(node, hop)``. One part-hop = two joins on
     the incidence list — pairwise edges are never materialized; see
-    :func:`graph_reachability` for the scale argument and A/B.
-
-    Lineage bound (deep-hop safety): every per-round frontier EXCEPT
-    THE LAST is ``localCheckpoint``-ed BEFORE it joins the distance
-    map, and the map is assembled as ONE flat union over those
-    materialized frontiers at the end — so the returned plan is a
-    union of checkpointed leaf scans plus at most ONE live round (the
-    final frontier has no later consumer, so its checkpoint would be
-    a pure driver stall — r16): linear in hops, no nested lineage
-    back into earlier rounds' joins, never rebuilt per round. Pinned
-    at hops=10 by
-    ``tests/test_graph_triangles.py::test_bfs_deep_hops_plan_bounded``.
-
-    r15 job-count optimization: the visited set is a FLAT UNION of the
-    already-checkpointed per-round frontiers instead of its own
-    re-checkpointed table — the anti-join reads the same materialized
-    RDDs either way, but the old shape paid one extra eager
-    materialization job per round that re-wrote the (growing) visited
-    set every round (guide §1.2 step 1: remove work, then tune). With
-    :data:`BFS_BROADCAST_FRONTIER` the incidence list is never
-    shuffled; each round is one job whose only exchanges are the two
-    tiny ``distinct`` aggregates. Frontier checkpoints are LAZY
-    (``eager=False``): each round's frontier materializes inside the
-    next round's broadcast job (or the final action) instead of its
-    own driver-blocking job — the checkpointed RDD is persisted on
-    first compute and every later consumer (seen-union, level-union,
-    next round) reads the persisted rows. Measured together at sf0.1:
-    eager-everything 3.16 s → 1.56 s, identical output.
-
-    Durability (deliberate tradeoff, ARCHITECTURE.md "localCheckpoint
-    durability"): the per-round frontiers are EXECUTOR-LOCAL
-    checkpoints; an executor loss deletes them with no recompute path,
-    and the recovery unit is restart-the-query — cheap for a
-    ``max_hops``-bounded walk whose inputs re-derive from parquet.
-    Hour-scale deployments swap in reliable ``checkpoint()`` here.
+    :func:`graph_reachability` for the scale argument and A/B. The
+    round loop, join strategy and lineage bound are :func:`_bfs_walk`'s;
+    callers pass an eagerly checkpointed ``op``, so its row count is a
+    cached-block read.
     """
-    # Size-gated join policy (r16): every frontier is a subset of the
-    # incidence list's part-vertex set, so if the WHOLE table fits
-    # under the cap every round trivially does — one count (a cached-
-    # block read: callers pass the eagerly checkpointed incidence
-    # list) decides all rounds and no per-round gating job exists at
-    # all on the fast path. Only above the bound does each round pay
-    # an exact frontier count — that job doubles as the lazy
-    # checkpoint's materialization action (the same compute the
-    # broadcast/SMJ job would otherwise run) and is noise next to the
-    # round cost at the scale that triggers it; it also buys an exact
-    # empty-frontier early exit.
-    all_fit = BFS_BROADCAST_FRONTIER and op.count() <= BFS_BROADCAST_MAX_ROWS
-    frontier = seeds.select("node").distinct().localCheckpoint(eager=False)
-    frontiers = [frontier]
-    levels = [frontier.select("node", F.lit(0).alias("hop"))]
-    for k in range(1, max_hops + 1):
-        if all_fit:
-            bcast = True
-        else:
-            cnt = frontier.count()
-            if cnt == 0:
-                break
-            bcast = BFS_BROADCAST_FRONTIER and cnt <= BFS_BROADCAST_MAX_ROWS
-        seen = reduce(DataFrame.unionByName, frontiers)
+
+    def expand(frontier: DataFrame, n_rows: int) -> DataFrame:
+        # The derived order set is the frontier's one-hop order
+        # neighborhood: the same blast-radius bound the frontier's
+        # count witnesses, so it shares the round's gate.
         orders = (
-            op.join(_frontier_side(frontier, bcast), op["pk"] == frontier["node"])
+            op.join(broadcast_if_fits(frontier, n_rows), op["pk"] == frontier["node"])
             .select("ok")
             .distinct()
         )
-        cand = (
-            op.join(_frontier_side(orders, bcast), "ok")
+        return (
+            op.join(broadcast_if_fits(orders, n_rows), "ok")
             .select(F.col("pk").alias("node"))
             .distinct()
-            .join(seen, "node", "left_anti")
         )
-        # r16: the LAST round's frontier has exactly one consumer (its
-        # hop-level row in the final union) — nothing later reuses the
-        # persisted rows, so its checkpoint is a pure driver stall:
-        # Dataset.checkpoint calls queryExecution.toRdd, and on an AQE
-        # plan AdaptiveSparkPlanExec.doExecute materializes every
-        # query stage on the spot even with eager=False (measured
-        # 0.7-1.3 s blocking per round at sf0.1). Earlier rounds keep
-        # their checkpoints — each has three consumers (seen-union,
-        # next round's join, level row) plus the lineage bound.
-        frontier = cand if k == max_hops else cand.localCheckpoint(eager=False)
-        frontiers.append(frontier)
-        levels.append(frontier.select("node", F.lit(k).alias("hop")))
-    return reduce(DataFrame.unionByName, levels)
+
+    return _bfs_walk(seeds, max_hops, op.count(), expand)
 
 
 def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
@@ -699,38 +672,19 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
     ``max_hops``. Returns ``(node, hop)`` — the explicit-edge twin of
     :func:`bfs_hops_bipartite` for graphs that arrive AS edge lists;
     same shrinking-frontier discipline and the same linear lineage
-    bound (flat union of checkpointed per-round frontiers).
+    bound (union of checkpointed leaf scans plus at most one live
+    round; see :func:`_bfs_walk`).
     """
     ed = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    # Same size-gated policy as the bipartite walk above: the vertex
-    # set is bounded by the symmetrized edge rows, so one edge count
-    # decides all rounds on the fast path.
-    all_fit = BFS_BROADCAST_FRONTIER and ed.count() <= BFS_BROADCAST_MAX_ROWS
-    frontier = seeds.select("node").distinct().localCheckpoint(eager=False)
-    frontiers = [frontier]
-    levels = [frontier.select("node", F.lit(0).alias("hop"))]
-    for k in range(1, max_hops + 1):
-        if all_fit:
-            bcast = True
-        else:
-            cnt = frontier.count()
-            if cnt == 0:
-                break
-            bcast = BFS_BROADCAST_FRONTIER and cnt <= BFS_BROADCAST_MAX_ROWS
-        seen = reduce(DataFrame.unionByName, frontiers)
-        cand = (
-            ed.join(_frontier_side(frontier, bcast), ed["src"] == frontier["node"])
+
+    def expand(frontier: DataFrame, n_rows: int) -> DataFrame:
+        return (
+            ed.join(broadcast_if_fits(frontier, n_rows), ed["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(seen, "node", "left_anti")
         )
-        # Same last-round rule as bfs_hops_bipartite: the final
-        # frontier feeds only its own level row, so skipping its
-        # checkpoint removes one eager AQE stage-materialization stall
-        # with zero reuse lost.
-        frontier = cand if k == max_hops else cand.localCheckpoint(eager=False)
-        frontiers.append(frontier)
-        levels.append(frontier.select("node", F.lit(k).alias("hop")))
-    return reduce(DataFrame.unionByName, levels)
+
+    # The vertex set is bounded by the symmetrized edge rows.
+    return _bfs_walk(seeds, max_hops, ed.count(), expand)

@@ -1037,9 +1037,7 @@ _DUCK_CAND_MULTIPROBE = """cand AS (
     WHERE {_duck_cos('ea.v', 'eb.v')} >= {COS_DUP_THRESHOLD}
     """,
 )
-def dedup_embedding_cosine(
-    spark: SparkSession, sf_dir: str, broadcast: bool | str = "auto"
-) -> DataFrame:
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-table LSH with
     probe-side MULTIPROBE (hamming<=1 bucket probes).
 
@@ -1058,21 +1056,14 @@ def dedup_embedding_cosine(
     This is the dedup-family twin of the text-shingle pipeline for
     modalities that live in embedding space (image/audio near-dups in
     an LLM data pipeline).
-
-    ``broadcast`` picks the candidate-pair join strategy (same policy
-    as ``dedup._pair_side``): the default lets AQE broadcast the pair
-    table only when its runtime size is under the threshold — on a
-    dup-heavy corpus the pair set can rival the corpus, and the
-    fallback is a shuffle hash join on vec_id, not an executor OOM.
     """
     emb = load_vectors(spark, sf_dir)
-    return embedding_near_dup_pairs(emb, broadcast=broadcast)
+    return embedding_near_dup_pairs(emb)
 
 
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = COS_DUP_THRESHOLD,
-    broadcast: bool | str = "auto",
     bits: int = BITS_PER_TABLE,
     tables: int = N_TABLES,
     radius: int = PROBE_RADIUS,
@@ -1085,15 +1076,14 @@ def embedding_near_dup_pairs(
     ``tools/scale_bench.py``'s fixed-bits vs scaled-bits A/B and the
     BASELINE.md 10× section for the measured curve).
     """
-    from spark_etl_pipeline_spark.operators.dedup import _pair_side
-
     cand = embedding_candidate_pairs(emb, bits, tables, radius)
     # The candidate table (LSH output) joins against the corpus twice to
     # fetch both vectors — the corpus side is never shuffled for
-    # verification when the pair side broadcasts (same pattern as
-    # dedup.jaccard_verified; strategy picked by ``broadcast``, AQE by
-    # default). Norms ride along (one sqrt-fold per vector, not per
-    # pair); bit-identical to the oracle's inline form.
+    # verification when AQE broadcasts the pair side (same un-hinted
+    # joins as dedup.jaccard_verified: a dup-heavy pair set that rivals
+    # the corpus falls back to a shuffle join on vec_id, not an executor
+    # OOM). Norms ride along (one sqrt-fold per vector, not per pair);
+    # bit-identical to the oracle's inline form.
     nrm = F.expr(f"sqrt({dot_expr('v', 'v')})")
     ea = emb.select(
         F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), nrm.alias("na")
@@ -1101,9 +1091,9 @@ def embedding_near_dup_pairs(
     eb = emb.select(
         F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), nrm.alias("nb")
     )
-    with_a = ea.join(_pair_side(cand, broadcast), "vec_a")
+    with_a = ea.join(cand, "vec_a")
     return (
-        eb.join(_pair_side(with_a, broadcast), "vec_b")
+        eb.join(with_a, "vec_b")
         .select(
             "vec_a",
             "vec_b",
@@ -1439,7 +1429,6 @@ def probe_embedding_store(
     an unstamped one) — bucket keys from a different plane set join
     meaninglessly, returning silent garbage rather than an error.
     """
-    from spark_etl_pipeline_spark.operators.dedup import _pair_side
     from spark_etl_pipeline_spark.operators.store_meta import check_store_stamp
 
     check_store_stamp(
@@ -1488,9 +1477,9 @@ def probe_embedding_store(
     eb = vecs.select(
         F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
     )
-    with_a = ea.join(_pair_side(cand, "auto"), "vec_a")
+    with_a = ea.join(cand, "vec_a")
     return (
-        eb.join(_pair_side(with_a, "auto"), "vec_b")
+        eb.join(with_a, "vec_b")
         .select(
             "vec_a",
             "vec_b",

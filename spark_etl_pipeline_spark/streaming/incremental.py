@@ -61,6 +61,14 @@ def _commit_pointer(snapshot_dir: str, generation: str) -> None:
     os.replace(tmp, pointer)
 
 
+def _commit_generation(df: DataFrame, snapshot_dir: str, batch_id: int) -> None:
+    # the generation is fully written before the pointer moves to it
+    generation = f"v{batch_id}"
+    os.makedirs(snapshot_dir, exist_ok=True)
+    df.write.mode("overwrite").parquet(os.path.join(snapshot_dir, generation))
+    _commit_pointer(snapshot_dir, generation)
+
+
 def upsert_snapshot_sink(
     key: str, snapshot_dir: str
 ) -> Callable[[DataFrame, int], None]:
@@ -77,12 +85,7 @@ def upsert_snapshot_sink(
         spark = batch_df.sparkSession
         current = read_snapshot(spark, snapshot_dir)
         merged = batch_df if current is None else upsert(current, batch_df, key)
-        generation = f"v{batch_id}"
-        os.makedirs(snapshot_dir, exist_ok=True)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(snapshot_dir, generation)
-        )
-        _commit_pointer(snapshot_dir, generation)
+        _commit_generation(merged, snapshot_dir, batch_id)
 
     return apply
 
@@ -141,12 +144,7 @@ def latest_state_sink(
             F.col("s.event_type").alias("event_type"),
             F.col("s.value").alias("value"),
         )
-        generation = f"v{batch_id}"
-        os.makedirs(snapshot_dir, exist_ok=True)
-        compact.write.mode("overwrite").parquet(
-            os.path.join(snapshot_dir, generation)
-        )
-        _commit_pointer(snapshot_dir, generation)
+        _commit_generation(compact, snapshot_dir, batch_id)
 
     return apply
 

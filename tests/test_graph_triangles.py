@@ -101,10 +101,13 @@ def test_bfs_deep_hops_plan_bounded(spark):
             f"{n_joins} join operators — more than the final round's own:\n"
             + plan
         )
-        # Leaf scans stay linear in hops: ≤ hops checkpointed frontiers
-        # feeding the union and ≤ hops + 2 more references inside the
-        # live last round (its seen-union + expansion inputs).
+        # Leaf scans are exactly linear in hops: the hops checkpointed
+        # frontiers each feed the level union once, the live last
+        # round's seen-union references the same hops frontiers again,
+        # and the live round reads 3 inputs (its frontier plus two
+        # edge/incidence scans: both sides of the symmetrized edge
+        # union, or the incidence list once per expansion join).
         n_scans = plan.count("Scan ExistingRDD")
-        assert 0 < n_scans <= 2 * (hops + 1) + 2, (
+        assert n_scans == 2 * hops + 3, (
             f"{n_scans} leaf scans for {hops} hops — union not flat/bounded"
         )

@@ -312,14 +312,15 @@ def test_bipartite_bfs_matches_python_bfs(spark):
 
 
 def test_bfs_broadcast_gate_fallback(spark, monkeypatch):
-    """The r16 runtime guard on BFS_BROADCAST_FRONTIER: with the row
-    cap at 0 neither the all-fit fast path nor any per-round gate can
+    """The runtime broadcast gate on the BFS frontier: with the row cap
+    at 0 neither the all-fit fast path nor any per-round gate can
     broadcast, so every round degrades to un-hinted (sort-merge) joins
     — the wide-seed-set OOM-safety path — with an identical hop map
-    from both BFS variants. Also pins the plan shape of both branches
-    on a round-shaped join (the loop's joins hide behind checkpoint
-    materialization, so strategy is asserted on the identical
-    construction)."""
+    from both BFS variants. Also pins the plan shape of both sides of
+    the gate on a round-shaped join through ``broadcast_if_fits`` (the
+    loop's joins hide behind checkpoint materialization, so strategy is
+    asserted on the identical construction)."""
+    from spark_etl_pipeline_spark import operators
     from spark_etl_pipeline_spark.operators import graph
 
     rng = random.Random(48)
@@ -338,7 +339,7 @@ def test_bfs_broadcast_gate_fallback(spark, monkeypatch):
     op = spark.createDataFrame(inc, "ok long, pk long")
     edf = spark.createDataFrame(edges, "a long, b long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
-    monkeypatch.setattr(graph, "BFS_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(operators, "BROADCAST_MAX_ROWS", 0)
     got_bip = {
         r["node"]: r["hop"] for r in graph.bfs_hops_bipartite(op, sdf, 3).collect()
     }
@@ -347,7 +348,10 @@ def test_bfs_broadcast_gate_fallback(spark, monkeypatch):
     assert got_edge == expected
 
     frontier = sdf.localCheckpoint()
-    for bcast, needle in ((True, "BroadcastHashJoin"), (False, "SortMergeJoin")):
-        j = op.join(graph._frontier_side(frontier, bcast), op["pk"] == frontier["node"])
+    n = len(seeds)
+    monkeypatch.setattr(operators, "BROADCAST_MAX_ROWS", n)
+    for n_rows, needle in ((n, "BroadcastHashJoin"), (n + 1, "SortMergeJoin")):
+        side = operators.broadcast_if_fits(frontier, n_rows)
+        j = op.join(side, op["pk"] == frontier["node"])
         plan = j._jdf.queryExecution().executedPlan().toString()
-        assert needle in plan, f"bcast={bcast}: {plan}"
+        assert needle in plan, f"n_rows={n_rows}: {plan}"

@@ -371,3 +371,36 @@ def test_table_plan_memo_eviction_and_unfingerprintable(spark, tmp_path):
     empty.mkdir(parents=True)
     assert registry._table_fingerprint(str(empty)) is None
     assert registry._table_fingerprint(str(tmp_path / "missing")) is None
+
+
+#: The only environment variables the engine package may read: where to
+#: run and how big the driver is. Tuning policy (join strategies, row
+#: caps, budgets) lives in module constants, not in the environment.
+_DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "MASTER",
+    "SPARK_MASTER",
+}
+
+
+def test_engine_reads_only_deployment_env_vars():
+    import re
+    from pathlib import Path
+
+    import spark_etl_pipeline_spark
+
+    any_read = re.compile(r"\benviron\b|\bgetenv\b")
+    named_read = re.compile(
+        r"""(?:\benviron\s*(?:\.get\s*\(|\[)|\bgetenv\s*\()\s*(['"])(\w+)\1"""
+    )
+    pkg = Path(spark_etl_pipeline_spark.__file__).parent
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text(encoding="utf-8")
+        names = [m.group(2) for m in named_read.finditer(src)]
+        where = path.relative_to(pkg.parent)
+        if len(names) != len(any_read.findall(src)):
+            bad.append(f"{where}: environment access without a literal name")
+        bad += [f"{where}: {n}" for n in names if n not in _DEPLOYMENT_ENV]
+    assert not bad, f"non-deployment environment reads: {bad}"

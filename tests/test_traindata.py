@@ -295,12 +295,14 @@ def test_connected_components_resolves_transitive_clusters(spark):
 
 
 def test_connected_components_broadcast_gate_fallback(spark, monkeypatch):
-    """The r16 runtime guard on CC_BROADCAST_LABELS: a label table over
-    CC_BROADCAST_MAX_ROWS degrades to un-hinted (sort-merge) rounds at
-    runtime with identical labels — the 100TB dup graph OOM-safety
-    path. Also pins the plan shape of both branches on a round-shaped
-    join (the loop's own joins hide behind checkpoint materialization,
-    so the strategy is asserted on the identical construction)."""
+    """The runtime broadcast gate: a label table over BROADCAST_MAX_ROWS
+    degrades to un-hinted (sort-merge) rounds with identical labels —
+    the 100TB dup graph OOM-safety path. Also pins the plan shape of
+    both sides of the gate on a round-shaped join through
+    ``broadcast_if_fits`` (the loop's own joins hide behind checkpoint
+    materialization, so the strategy is asserted on the identical
+    construction)."""
+    from spark_etl_pipeline_spark import operators
     from spark_etl_pipeline_spark.operators import dedup
 
     edges = spark.createDataFrame(
@@ -308,23 +310,24 @@ def test_connected_components_broadcast_gate_fallback(spark, monkeypatch):
         "src long, dst long",
     )
     want = {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 7, 20: 20, 21: 20}
-    monkeypatch.setattr(dedup, "CC_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(operators, "BROADCAST_MAX_ROWS", 0)
     got = {r.id: r.label for r in dedup.connected_components(edges).collect()}
     assert got == want
 
-    # plan pin: the same round-shaped join with the hint plans BHJ,
-    # without it SMJ (the checkpointed side carries no stats)
+    # plan pin: at the cap the round-shaped join plans BHJ, one row over
+    # it SMJ (the checkpointed side carries no stats)
     sym = edges.selectExpr("src s", "dst d").localCheckpoint()
     labels = sym.selectExpr("s id", "s label").distinct().localCheckpoint()
-    for bcast, needle in ((True, "BroadcastHashJoin"), (False, "SortMergeJoin")):
-        j = sym.join(dedup._label_side(labels, bcast), sym.d == labels.id)
+    n = labels.count()
+    monkeypatch.setattr(operators, "BROADCAST_MAX_ROWS", n)
+    for n_rows, needle in ((n, "BroadcastHashJoin"), (n + 1, "SortMergeJoin")):
+        side = operators.broadcast_if_fits(labels, n_rows)
+        j = sym.join(side, sym.d == labels.id)
         plan = j._jdf.queryExecution().executedPlan().toString()
-        assert needle in plan, f"bcast={bcast}: {plan}"
+        assert needle in plan, f"n_rows={n_rows}: {plan}"
 
 
 def test_connected_components_chain_exhaustion_and_star_fallback(spark):
-    import pytest
-
     from spark_etl_pipeline_spark.operators.dedup import (
         connected_components,
         connected_components_star,
@@ -332,24 +335,17 @@ def test_connected_components_chain_exhaustion_and_star_fallback(spark):
 
     # A 31-vertex chain has diameter 30: min-label propagation moves one
     # hop per round, so the default 25-round budget exhausts before the
-    # fixpoint. With fallback disabled the guard must raise — never
-    # return partial labels.
+    # fixpoint.
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "src long, dst long"
     )
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(chain, fallback=None)
     want = {i: 0 for i in range(31)}
-    # The DEFAULT path now hands the exhausted graph to star contraction
-    # and still converges — the pipeline no longer hard-fails on long
-    # dup chains.
+    # The exhausted graph goes to star contraction and still converges —
+    # never partial labels, never a hard failure on long dup chains.
     got = {r.id: r.label for r in connected_components(chain).collect()}
     assert got == want
     # A bumped budget converges by propagation alone.
-    got = {
-        r.id: r.label
-        for r in connected_components(chain, max_iters=40, fallback=None).collect()
-    }
+    got = {r.id: r.label for r in connected_components(chain, max_iters=40).collect()}
     assert got == want
     # Star contraction converges DIRECTLY with the default budget —
     # O(log² n) rounds, diameter-independent.
