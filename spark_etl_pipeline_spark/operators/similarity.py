@@ -25,7 +25,6 @@ DuckDB oracles (same element order, same IEEE-754 ops; verified).
 from __future__ import annotations
 
 import hashlib
-from itertools import combinations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,24 +40,6 @@ CENTROID_STRIDE = 50  # vec_id % STRIDE == 0 → stand-in centroid set
 N_TABLES = 2  # independent hash tables (recall ~ 1-(1-P_table)^tables)
 BITS_PER_TABLE = 6  # 64 buckets/table: Σ bucket² stays ~n²/64 per table
 COS_DUP_THRESHOLD = 0.4
-#: Probe-side multiprobe radius for the DEDUP pair queries: each vector
-#: probes its own bucket plus every 1-bit-flip neighbor bucket
-#: (hamming <= PROBE_RADIUS), so P_table rises from p^b to
-#: Σ_{k<=r} C(b,k)·p^(b-k)·(1-p)^k with p = 1 - θ/π — at cos 0.8 the
-#: two-table recall goes 0.44 → 0.87, and at this corpus's 0.4–0.6
-#: dup band 0.15 → ~0.49 (measured 9/59 → 29/59 true pairs at
-#: sf0.01), for extra probe rows on ONE join side and ZERO extra
-#: stored tables — the storage-free alternative to stacking more hash
-#: tables (multi-probe LSH, Lv et al., VLDB'07). Every signature
-#: consumer (cosine dedup, the embedding store probe, quantized
-#: rerank, cluster profiling, the threshold histogram) probes at this
-#: radius, each oracle carrying the same hamming<=1 candidate
-#: predicate. SELF-JOIN consumers reach the radius with the SET-BIT
-#: probe (1 + popcount rows ≈ 4 instead of 1 + b = 7 at b=6, same
-#: candidate set — see :func:`embedding_setbit_probe_signatures` and
-#: the round-9 A/B in BASELINE.md); the asymmetric store probe keeps
-#: the full mask expansion (or its directed-probes budget knob).
-PROBE_RADIUS = 1
 
 
 def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,22 +305,25 @@ HYPERPLANE_CONSTANTS_VERSION = hashlib.md5(
          [_plane(j) for j in range(N_TABLES * BITS_PER_TABLE)])
     ).encode()
 ).hexdigest()
-_SIG_SPARK = " + ".join(
-    "(CASE WHEN {dot} > 0.0 THEN {bit} ELSE 0 END)".format(
-        dot=dot_expr(
-            "v", "array({})".format(",".join(f"{w}.0D" for w in _PLANES[j]))
-        ),
-        bit=1 << j,
-    )
-    for j in range(NBITS)
-)
-_SIG_DUCK = " + ".join(
-    "(CASE WHEN {dot} > 0.0 THEN {bit} ELSE 0 END)".format(
-        dot=_duck_dot("v", "([{}]::DOUBLE[])".format(",".join(map(str, _PLANES[j])))),
-        bit=1 << j,
-    )
-    for j in range(NBITS)
-)
+
+
+def _table_sig(engine: str, t: int, bits: int) -> str:
+    """``bits``-bit signature of hash table ``t`` (plane j = t·bits+r);
+    ``sim_ann_hyperplane`` hashes with table 0 at ``NBITS``."""
+    terms = []
+    for r in range(bits):
+        j = t * bits + r
+        plane = _plane(j)
+        if engine == "spark":
+            dot = dot_expr(
+                "v", "array({})".format(",".join(f"{w}.0D" for w in plane))
+            )
+        else:
+            dot = _duck_dot(
+                "v", "([{}]::DOUBLE[])".format(",".join(map(str, plane)))
+            )
+        terms.append(f"(CASE WHEN {dot} > 0.0 THEN {1 << r} ELSE 0 END)")
+    return " + ".join(terms)
 
 
 @register(
@@ -347,7 +331,7 @@ _SIG_DUCK = " + ".join(
     oracle=f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
          WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    sigs AS (SELECT vec_id, CAST({_SIG_DUCK} AS BIGINT) AS sig FROM e)
+    sigs AS (SELECT vec_id, CAST({_table_sig('duck', 0, NBITS)} AS BIGINT) AS sig FROM e)
     SELECT vec_id, sig,
            COUNT(*) OVER (PARTITION BY sig) AS bucket_size
     FROM sigs
@@ -367,7 +351,8 @@ def sim_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated per bucket, Σ bucket² work.
     """
     emb = load_vectors(spark, sf_dir)
-    sigs = emb.select("vec_id", F.expr(_SIG_SPARK).cast("bigint").alias("sig"))
+    sig = F.expr(_table_sig("spark", 0, NBITS)).cast("bigint")
+    sigs = emb.select("vec_id", sig.alias("sig"))
     counts = sigs.groupBy("sig").agg(F.count(F.lit(1)).alias("bucket_size"))
     return sigs.join(F.broadcast(counts), "sig").select(
         "vec_id", "sig", "bucket_size"
@@ -721,36 +706,17 @@ def sim_ann_recall_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding-cosine near-duplicate detection (dedup-family operator)
 # ---------------------------------------------------------------------------
 
-def _table_sig(engine: str, t: int, bits: int = BITS_PER_TABLE) -> str:
-    """``bits``-bit signature of hash table ``t`` (plane j = t·bits+r)."""
-    terms = []
-    for r in range(bits):
-        j = t * bits + r
-        plane = _plane(j)
-        if engine == "spark":
-            dot = dot_expr(
-                "v", "array({})".format(",".join(f"{w}.0D" for w in plane))
-            )
-        else:
-            dot = _duck_dot(
-                "v", "([{}]::DOUBLE[])".format(",".join(map(str, plane)))
-            )
-        terms.append(f"(CASE WHEN {dot} > 0.0 THEN {1 << r} ELSE 0 END)")
-    return " + ".join(terms)
-
-
 _DUCK_TABLE_SIGS = "\n        UNION ALL ".join(
-    f"SELECT vec_id, {t} AS t, CAST({_table_sig('duck', t)} AS BIGINT) AS sig FROM e"
+    f"SELECT vec_id, {t} AS t, "
+    f"CAST({_table_sig('duck', t, BITS_PER_TABLE)} AS BIGINT) AS sig FROM e"
     for t in range(N_TABLES)
 )
 
 
-def embedding_signatures(
-    emb: DataFrame, bits: int = BITS_PER_TABLE, tables: int = N_TABLES
-) -> DataFrame:
+def embedding_signatures(emb: DataFrame, bits: int = BITS_PER_TABLE) -> DataFrame:
     """(vec_id, t, sig): one signature row per vector per hash table.
 
-    The per-row explode of ``tables`` struct literals keeps signature
+    The per-row explode of ``N_TABLES`` struct literals keeps signature
     computation a single JVM projection (no shuffle); this is also the
     storable form the embedding store materializes. ``bits`` is the
     occupancy knob: at corpus size n, b ≈ log2(n/β) holds expected
@@ -769,59 +735,65 @@ def embedding_signatures(
                         .cast("bigint")
                         .alias("sig"),
                     )
-                    for t in range(tables)
+                    for t in range(N_TABLES)
                 ]
             )
         ).alias("x"),
     ).select("vec_id", "x.t", "x.sig")
 
 
-def _probe_masks(bits: int, radius: int) -> list[int]:
-    """All XOR masks of popcount <= radius over ``bits`` positions, in
-    (popcount, bit-position) order — Σ_{k<=r} C(bits, k) masks."""
-    return [
-        sum(1 << p for p in pos)
-        for k in range(radius + 1)
-        for pos in combinations(range(bits), k)
-    ]
+def _probe_masks(bits: int) -> list[int]:
+    """The radius-1 XOR masks: 0 (the bucket itself), then each single
+    bit ``1 << 0 … 1 << (bits-1)`` — the order the registered plans
+    snapshot.
+
+    Radius 1 is the engine's one multiprobe shape: each vector probes
+    its own bucket plus every 1-bit-flip neighbor bucket, so the
+    per-table collision probability rises from p^b to
+    p^b + b·p^(b-1)·(1-p) with p = 1 - θ/π — at cos 0.8 the two-table
+    recall goes 0.44 → 0.87, and at this corpus's 0.4–0.6 dup band
+    0.15 → ~0.49 (measured 9/59 → 29/59 true pairs at sf0.01), for
+    extra probe rows on ONE join side and ZERO extra stored tables —
+    the storage-free alternative to stacking more hash tables
+    (multi-probe LSH, Lv et al., VLDB'07). Every signature consumer
+    probes at this radius, each oracle carrying the same hamming<=1
+    candidate predicate. Self-joins reach it with the set-bit probe
+    (:func:`setbit_probe_signatures`); the asymmetric store probe
+    keeps the full expansion (:func:`embedding_probe_signatures`).
+    """
+    return [0] + [1 << r for r in range(bits)]
 
 
 def embedding_probe_signatures(
-    emb: DataFrame,
-    bits: int = BITS_PER_TABLE,
-    tables: int = N_TABLES,
-    radius: int = PROBE_RADIUS,
+    emb: DataFrame, bits: int = BITS_PER_TABLE
 ) -> DataFrame:
-    """(vec_id, t, sig): each vector's bucket keys EXPANDED to its
-    hamming<=``radius`` probe set (the bucket itself plus every
-    <=radius-bit-flip neighbor — Σ_{k<=r} C(bits, k) rows per table;
-    1 + BITS_PER_TABLE at the registered defaults).
+    """(vec_id, t, sig): each vector's bucket keys EXPANDED to the full
+    radius-1 probe set — the bucket itself plus every 1-bit-flip
+    neighbor, 1 + ``bits`` rows per table.
 
-    Probe-side multiprobe: the stored/base signature side stays one row
-    per (vector, table) — only the probing side fans out, so the
-    candidate join is still a bucket-equi-join (Σ probe·base per
-    bucket, never n²) and stored signature tables (the embedding
-    store) need no rebuild. A hamming-1 pair (a, b) is always found
-    from the probing side alone: flipping a's differing bit lands
-    exactly on b's bucket.
+    The ASYMMETRIC probe (``probe_embedding_store``): the stored side
+    stays one row per (vector, table) — only the probing side fans
+    out, so the candidate join is still a bucket-equi-join (Σ
+    probe·base per bucket, never n²) and stored signature tables need
+    no rebuild. A hamming-1 pair (a, b) is always found from the
+    probing side alone: flipping a's differing bit lands exactly on
+    b's bucket.
     """
-    masks = F.array(*[F.lit(m) for m in _probe_masks(bits, radius)])
+    masks = F.array(*[F.lit(m) for m in _probe_masks(bits)])
     return (
-        embedding_signatures(emb, bits, tables)
+        embedding_signatures(emb, bits)
         .select("vec_id", "t", "sig", F.explode(masks).alias("m"))
         .select("vec_id", "t", F.expr("sig ^ m").alias("sig"))
     )
 
 
-def embedding_setbit_probe_signatures(
-    emb: DataFrame,
-    bits: int = BITS_PER_TABLE,
-    tables: int = N_TABLES,
-) -> DataFrame:
-    """(vec_id, t, sig, self_probe): the SELF-JOIN radius-1 probe set —
-    each vector probes its own bucket plus only the neighbors reached
-    by flipping a SET bit down (1 + popcount(sig) rows instead of the
-    full 1 + bits).
+def setbit_probe_signatures(sigs: DataFrame, bits: int) -> DataFrame:
+    """(vec_id, t, sig, self_probe): the SELF-JOIN radius-1 probe rows
+    of an existing (vec_id, t, sig) signature table — each vector
+    probes its own bucket plus only the neighbors reached by flipping
+    a SET bit down (1 + popcount(sig) rows instead of the full
+    1 + bits). Taking the signature table rather than the vectors lets
+    a caller that materialized it pay only the explode.
 
     Why this loses nothing *for a self-join*: a hamming-1 pair differs
     in exactly one bit j, which is SET in exactly one of the two
@@ -837,23 +809,13 @@ def embedding_setbit_probe_signatures(
     (round-9 A/B in BASELINE.md). It does NOT apply to the
     asymmetric store probe (``probe_embedding_store``): there only the
     delta side probes, so when the differing bit is set on the STORED
-    side nothing would reach it — that path keeps full radius-1 (or
-    the directed knob).
+    side nothing would reach it — that path keeps the full expansion.
     """
-    return _setbit_probe_from_sigs(embedding_signatures(emb, bits, tables), bits)
-
-
-def _setbit_probe_from_sigs(sigs: DataFrame, bits: int) -> DataFrame:
-    """Set-bit probe rows derived from an EXISTING (vec_id, t, sig)
-    table — the probe-row expansion of
-    :func:`embedding_setbit_probe_signatures` without re-deriving the
-    signatures, so a caller that already holds (or materialized) the
-    signature table pays only the explode."""
     # Explode the STATIC mask array (a codegen generator over a
     # literal), then drop unset-bit rows with a vectorized filter —
     # building a per-row mask array (filter(transform(sequence(...))))
     # measured ~10% slower end-to-end than this explode-then-filter.
-    masks = F.array(*[F.lit(m) for m in _probe_masks(bits, 1)])
+    masks = F.array(*[F.lit(m) for m in _probe_masks(bits)])
     return (
         sigs.select("vec_id", "t", "sig", F.explode(masks).alias("m"))
         .filter(F.expr("m = 0 OR (sig & m) != 0"))
@@ -867,19 +829,14 @@ def _setbit_probe_from_sigs(sigs: DataFrame, bits: int) -> DataFrame:
 
 
 def embedding_candidate_pairs(
-    emb: DataFrame,
-    bits: int = BITS_PER_TABLE,
-    tables: int = N_TABLES,
-    radius: int = PROBE_RADIUS,
+    emb: DataFrame, bits: int = BITS_PER_TABLE
 ) -> DataFrame:
-    """(vec_a, vec_b) distinct hamming<=``radius`` bucket-collision
-    candidates over a SELF-JOINED corpus — the shared candidate stage
-    of every pair-dedup consumer (``dedup_embedding_cosine``,
-    ``sim_threshold_profile``, and their downstream CC pipelines).
-
-    At the registered ``radius=1`` this uses the set-bit probe
-    (:func:`embedding_setbit_probe_signatures` — same candidate set,
-    ~4/7 the probe rows); other radii keep the generic mask expansion.
+    """(vec_a, vec_b) distinct hamming<=1 bucket-collision candidates
+    over a SELF-JOINED corpus, via the set-bit probe — the shared
+    candidate stage of every pair-dedup consumer
+    (``dedup_embedding_cosine``, ``sim_threshold_profile``, their
+    downstream CC pipelines, and the delta×delta half of
+    ``probe_embedding_store``).
     """
     # r15: the signature table feeds BOTH join sides (base buckets and
     # probe rows). A LAZY localCheckpoint materializes the 12-dot-
@@ -889,34 +846,22 @@ def embedding_candidate_pairs(
     # signature table is (vec_id, t, sig) longs — rows = n·tables,
     # independent of vector dimension, so the persisted footprint is
     # negligible next to the corpus at any scale.)
-    sigs = embedding_signatures(emb, bits, tables).localCheckpoint(eager=False)
+    sigs = embedding_signatures(emb, bits).localCheckpoint(eager=False)
+    a = setbit_probe_signatures(sigs, bits).alias("a")
     base = sigs.alias("b")
-    if radius == 1:
-        a = _setbit_probe_from_sigs(sigs, bits).alias("a")
-        cond = (
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (~F.col("a.self_probe") | (F.col("a.vec_id") < F.col("b.vec_id")))
-        )
-        pairs = a.join(base, cond).select(
-            F.least("a.vec_id", "b.vec_id").alias("vec_a"),
-            F.greatest("a.vec_id", "b.vec_id").alias("vec_b"),
-        )
-        # A flip row can't match its own base row (sig^bit != sig), so
-        # no (x, x) self-pair is ever emitted; least/greatest
-        # canonicalizes the flip rows that land with a.vec_id > b.
-        return _spread_pairs(pairs.distinct())
-    a = embedding_probe_signatures(emb, bits, tables, radius).alias("a")
-    return _spread_pairs(
-        a.join(
-            base,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
+    cond = (
+        (F.col("a.t") == F.col("b.t"))
+        & (F.col("a.sig") == F.col("b.sig"))
+        & (~F.col("a.self_probe") | (F.col("a.vec_id") < F.col("b.vec_id")))
     )
+    pairs = a.join(base, cond).select(
+        F.least("a.vec_id", "b.vec_id").alias("vec_a"),
+        F.greatest("a.vec_id", "b.vec_id").alias("vec_b"),
+    )
+    # A flip row can't match its own base row (sig^bit != sig), so
+    # no (x, x) self-pair is ever emitted; least/greatest
+    # canonicalizes the flip rows that land with a.vec_id > b.
+    return _spread_pairs(pairs.distinct())
 
 
 def _spread_pairs(pairs: DataFrame) -> DataFrame:
@@ -934,78 +879,6 @@ def _spread_pairs(pairs: DataFrame) -> DataFrame:
     ``defaultParallelism`` (cluster-adaptive), never a constant."""
     n = pairs.sparkSession.sparkContext.defaultParallelism
     return pairs.repartition(n)
-
-
-def embedding_directed_probe_signatures(
-    emb: DataFrame,
-    probes: int,
-    bits: int = BITS_PER_TABLE,
-    tables: int = N_TABLES,
-) -> DataFrame:
-    """(vec_id, t, sig): QUERY-DIRECTED multiprobe — each vector probes
-    its own bucket plus only the ``probes`` 1-bit-flip neighbors whose
-    hyperplane margins are smallest (Lv et al., VLDB'07: probe buckets
-    in order of boundary distance, not exhaustively).
-
-    A hamming-1 pair differs exactly on a plane that separates the two
-    vectors, and the probability a θ-pair straddles plane j falls as
-    its margin |⟨v, h_j⟩| grows — so flipping the low-margin bits first
-    buys most of radius-1 recall at (1 + probes)/(1 + bits) of the
-    probe rows: the knob between ``radius=0`` and full radius-1 when
-    the probe side's fan-out is the cost driver (e.g. probing a very
-    large stored signature table). ``probes=bits`` IS radius-1
-    multiprobe (equivalence pinned by
-    ``test_directed_probes_equivalences``).
-
-    All-JVM single projection per table: one dot array feeds both the
-    signature bits (same ``dot > 0.0`` predicate as
-    :func:`embedding_signatures`, so buckets agree bit-for-bit) and
-    the margin ranking (``array_sort`` on (|dot|, bit) structs —
-    deterministic tie-break on bit index).
-    """
-    if not 0 <= probes <= bits:
-        raise ValueError(f"probes must be in [0, {bits}], got {probes}")
-    per_table = []
-    for t in range(tables):
-        dots = "array({})".format(
-            ",".join(
-                dot_expr(
-                    "v",
-                    "array({})".format(
-                        ",".join(f"{w}.0D" for w in _plane(t * bits + r))
-                    ),
-                )
-                for r in range(bits)
-            )
-        )
-        per_table.append(
-            f"""named_struct(
-                't', {t},
-                'sig', aggregate(
-                    zip_with({dots}, sequence(0, {bits - 1}),
-                             (d, r) -> CASE WHEN d > 0.0D
-                                       THEN shiftleft(1L, r) ELSE 0L END),
-                    0L, (s, x) -> s + x),
-                'masks', transform(
-                    slice(array_sort(
-                        zip_with({dots}, sequence(0, {bits - 1}),
-                                 (d, r) -> named_struct('m', abs(d), 'r', r))
-                    ), 1, {probes}),
-                    x -> shiftleft(1L, x.r)))"""
-        )
-    all_tables = "array({})".format(",".join(per_table))
-    return (
-        emb.select("vec_id", F.explode(F.expr(all_tables)).alias("x"))
-        .select(
-            "vec_id",
-            "x.t",
-            "x.sig",
-            F.explode(
-                F.concat(F.array(F.lit(0).cast("long")), F.col("x.masks"))
-            ).alias("m"),
-        )
-        .select("vec_id", "t", F.expr("sig ^ m").alias("sig"))
-    )
 
 
 #: Shared oracle candidate CTE: hamming<=1 bucket collision in any
@@ -1042,17 +915,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-side MULTIPROBE (hamming<=1 bucket probes).
 
     Independent 6-bit hyperplane tables bucket the corpus; each vector
-    probes its own bucket plus every 1-bit-flip neighbor
-    (:func:`embedding_probe_signatures` — see the ``PROBE_RADIUS``
-    comment for the measured recall gain and the Lv et al. multi-probe
-    reference), then exact cosine confirms pairs above the threshold.
-    The scale contract matches MinHash-LSH: Σ probe·bucket candidate
-    work via a bucket equi-join, never n² — and multiprobe buys its
-    recall with probe rows instead of extra stored tables (the
-    SET-BIT probe: 1 + popcount(sig) ≈ 4 rows per (vector, table) for
-    the identical hamming<=1 candidate set full radius-1's 7 rows
-    reach — :func:`embedding_setbit_probe_signatures`), which is what
-    makes it viable against a materialized signature store at 100 TB.
+    probes its own bucket plus the 1-bit-flip neighbors reached by
+    flipping one of its SET bits (the set-bit probe,
+    :func:`setbit_probe_signatures` — 1 + popcount(sig) ≈ 4 rows per
+    (vector, table) for the identical hamming<=1 candidate set the full
+    1 + b = 7-row expansion reaches; see :func:`_probe_masks` for the
+    measured recall gain and the Lv et al. multi-probe reference),
+    then exact cosine confirms pairs above the threshold. The scale
+    contract matches MinHash-LSH: Σ probe·bucket candidate work via a
+    bucket equi-join, never n² — and multiprobe buys its recall with
+    probe rows instead of extra stored tables, which is what makes it
+    viable against a materialized signature store at 100 TB.
     This is the dedup-family twin of the text-shingle pipeline for
     modalities that live in embedding space (image/audio near-dups in
     an LLM data pipeline).
@@ -1061,45 +934,53 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_dup_pairs(emb)
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = COS_DUP_THRESHOLD,
-    bits: int = BITS_PER_TABLE,
-    tables: int = N_TABLES,
-    radius: int = PROBE_RADIUS,
-) -> DataFrame:
-    """The multiprobe-LSH near-dup pipeline over ``emb(vec_id, v)``,
-    with every scale knob exposed: :func:`dedup_embedding_cosine` calls
-    it at the registered sf-corpus defaults; a 100-TB deployment raises
-    ``bits`` with corpus size (b ≈ log2(n/β) for target bucket
-    occupancy β keeps candidate work ~n·β, i.e. linear — see
-    ``tools/scale_bench.py``'s fixed-bits vs scaled-bits A/B and the
-    BASELINE.md 10× section for the measured curve).
+def _with_nrm(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm): vectors with their norms — one sqrt-fold per
+    vector, never per pair."""
+    return emb.select(
+        "vec_id", "v", F.expr(f"sqrt({dot_expr('v', 'v')})").alias("nrm")
+    )
+
+
+def _pair_cosines(cand: DataFrame, vecs: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, cos): the exact cosine of every candidate pair,
+    fetching both vectors and their norms from ``vecs(vec_id, v, nrm)``.
+
+    The candidate table (LSH output) joins against the vectors twice —
+    the vector side is never shuffled for verification when AQE
+    broadcasts the pair side (same un-hinted joins as
+    dedup.jaccard_verified: a dup-heavy pair set that rivals the corpus
+    falls back to a shuffle join on vec_id, not an executor OOM).
+    Bit-identical to the oracles' inline cosine.
     """
-    cand = embedding_candidate_pairs(emb, bits, tables, radius)
-    # The candidate table (LSH output) joins against the corpus twice to
-    # fetch both vectors — the corpus side is never shuffled for
-    # verification when AQE broadcasts the pair side (same un-hinted
-    # joins as dedup.jaccard_verified: a dup-heavy pair set that rivals
-    # the corpus falls back to a shuffle join on vec_id, not an executor
-    # OOM). Norms ride along (one sqrt-fold per vector, not per pair);
-    # bit-identical to the oracle's inline form.
-    nrm = F.expr(f"sqrt({dot_expr('v', 'v')})")
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), nrm.alias("na")
+    ea = vecs.select(
+        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), nrm.alias("nb")
+    eb = vecs.select(
+        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
     )
-    with_a = ea.join(cand, "vec_a")
-    return (
-        eb.join(with_a, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (F.expr(dot_expr("va", "vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
+    return eb.join(ea.join(cand, "vec_a"), "vec_b").select(
+        "vec_a",
+        "vec_b",
+        (F.expr(dot_expr("va", "vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
+    )
+
+
+def embedding_near_dup_pairs(
+    emb: DataFrame, bits: int = BITS_PER_TABLE
+) -> DataFrame:
+    """The multiprobe-LSH near-dup pipeline over ``emb(vec_id, v)``:
+    set-bit candidates, exact cosine, the ``COS_DUP_THRESHOLD`` cut.
+    :func:`dedup_embedding_cosine` calls it at the registered sf-corpus
+    ``bits``, its one knob: a 100-TB deployment raises ``bits`` with
+    corpus size (b ≈ log2(n/β) for target bucket occupancy β keeps
+    candidate work ~n·β, i.e. linear — see ``tools/scale_bench.py``'s
+    fixed-bits vs scaled-bits A/B and the BASELINE.md 10× section for
+    the measured curve).
+    """
+    cand = embedding_candidate_pairs(emb, bits)
+    return _pair_cosines(cand, _with_nrm(emb)).filter(
+        F.col("cos") >= COS_DUP_THRESHOLD
     )
 
 
@@ -1381,49 +1262,32 @@ def build_embedding_store(emb: DataFrame, store_path: str) -> None:
     embedding_signatures(emb).repartition("vec_id").write.mode(
         "overwrite"
     ).parquet(f"{store_path}/sigs")
-    emb.withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})")).repartition(
-        "vec_id"
-    ).write.mode("overwrite").parquet(f"{store_path}/vectors")
+    _with_nrm(emb).repartition("vec_id").write.mode("overwrite").parquet(
+        f"{store_path}/vectors"
+    )
     write_store_stamp(
         emb.sparkSession, store_path, "hyperplane", HYPERPLANE_CONSTANTS_VERSION
     )
 
 
 def probe_embedding_store(
-    spark: SparkSession,
-    store_path: str,
-    delta_emb: DataFrame,
-    probes: int | None = None,
+    spark: SparkSession, store_path: str, delta_emb: DataFrame
 ) -> DataFrame:
     """Near-dup pairs touching the DELTA batch, against a stored corpus.
 
     Emits (vec_a, vec_b, cos) for every pair with cosine ≥ threshold
     where at least one side is in the delta — delta×base pairs come
     from MULTIPROBING the stored signature table on (t, sig) (the
-    delta side carries its hamming<=1 probe set,
+    delta side carries its full radius-1 probe set,
     :func:`embedding_probe_signatures`; the STORED side stays one row
     per bucket, which is why multiprobe composes with an append-only
     store: recall rises with zero store rebuild), delta×delta pairs
-    from the in-batch probe self-join. The stored side is never
+    from the in-batch set-bit self-join
+    (:func:`embedding_candidate_pairs`). The stored side is never
     re-hashed and its norms are read back, so per-batch work is
     Σ_bucket |delta probes ∩ bucket| × |bucket|, exactly the
     incremental-text contract (:func:`dedup.probe_signature_store`)
     in embedding space.
-
-    ``probes`` (default None = full radius-1) switches the delta side
-    to QUERY-DIRECTED probing
-    (:func:`embedding_directed_probe_signatures`): only the ``probes``
-    lowest-margin bit flips are probed — the knob for when the stored
-    corpus is so large that candidate volume, not recall, is the
-    binding constraint. Two distinct recall metrics are measured, don't
-    conflate them: on PLANTED true dups (high cosine, so the margin
-    heuristic has signal) 2 directed probes keep ~0.9 of full radius-1
-    true-pair recall at ~3/7 of the probe rows
-    (``test_directed_probes_concentrate_recall_on_true_pairs``); on
-    the full hamming<=1 CONTRACT pair set (dominated by
-    near-threshold pairs, where margins carry less signal) p=2 keeps
-    only ~0.58–0.64 (round-9 A/B, BASELINE.md) — and the budget must
-    scale with ``bits`` (p=4 recall falls 0.87→0.64 going b=6→b=10).
 
     Refuses a store stamped under different hyperplane constants (or
     an unstamped one) — bucket keys from a different plane set join
@@ -1438,57 +1302,18 @@ def probe_embedding_store(
     base_vecs = spark.read.parquet(f"{store_path}/vectors")
 
     delta_emb = delta_emb.select("vec_id", "v")
-    delta_probes = (
-        embedding_probe_signatures(delta_emb)
-        if probes is None
-        else embedding_directed_probe_signatures(delta_emb, probes)
-    )
-    delta_vecs = delta_emb.withColumn(
-        "nrm", F.expr(f"sqrt({dot_expr('v', 'v')})")
-    )
-
     cand_base = (
-        delta_probes.alias("d")
+        embedding_probe_signatures(delta_emb)
+        .alias("d")
         .join(base_sigs.alias("b"), ["t", "sig"])
         .select(
             F.least("d.vec_id", "b.vec_id").alias("vec_a"),
             F.greatest("d.vec_id", "b.vec_id").alias("vec_b"),
         )
     )
-    d1 = delta_probes.alias("d1")
-    d2 = embedding_signatures(delta_emb).alias("d2")
-    cand_delta = (
-        d1.join(
-            d2,
-            (F.col("d1.t") == F.col("d2.t"))
-            & (F.col("d1.sig") == F.col("d2.sig"))
-            & (F.col("d1.vec_id") < F.col("d2.vec_id")),
-        )
-        .select(
-            F.col("d1.vec_id").alias("vec_a"), F.col("d2.vec_id").alias("vec_b")
-        )
-    )
-    cand = cand_base.union(cand_delta).distinct()
-
-    vecs = base_vecs.unionByName(delta_vecs)
-    ea = vecs.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    eb = vecs.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    with_a = ea.join(cand, "vec_a")
-    return (
-        eb.join(with_a, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (F.expr(dot_expr("va", "vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cos"
-            ),
-        )
-        .filter(F.col("cos") >= COS_DUP_THRESHOLD)
-    )
+    cand = cand_base.union(embedding_candidate_pairs(delta_emb)).distinct()
+    vecs = base_vecs.unionByName(_with_nrm(delta_emb))
+    return _pair_cosines(cand, vecs).filter(F.col("cos") >= COS_DUP_THRESHOLD)
 
 
 @register(
@@ -1890,22 +1715,7 @@ def sim_threshold_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is bit-identical on both engines.
     """
     emb = load_vectors(spark, sf_dir)
-    cand = embedding_candidate_pairs(emb)
-    nrm = F.expr(f"sqrt({dot_expr('v', 'v')})")
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), nrm.alias("na")
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), nrm.alias("nb")
-    )
-    scored = (
-        eb.join(ea.join(cand, "vec_a"), "vec_b")
-        .select(
-            (F.expr(dot_expr("va", "vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cos"
-            )
-        )
-    )
+    scored = _pair_cosines(embedding_candidate_pairs(emb), _with_nrm(emb))
     return scored.groupBy(
         F.floor(F.col("cos") * 10.0).cast("int").alias("cos_bin")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))

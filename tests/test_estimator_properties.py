@@ -495,10 +495,10 @@ def test_embedding_multiprobe_recall_vs_exact_ground_truth(spark):
 
 
 def test_multiprobe_collision_matches_analytic_curve(spark):
-    """The hamming<=PROBE_RADIUS multiprobe contract on random
-    controlled-angle pairs: per-table candidate probability must track
-    the analytic Σ_{k<=r} C(b,k)·p^(b-k)·(1-p)^k with p = 1 - θ/π
-    (the binomial tail the ``PROBE_RADIUS`` comment promises), and at
+    """The hamming<=1 multiprobe contract on random controlled-angle
+    pairs: per-table candidate probability must track the analytic
+    Σ_{k<=1} C(b,k)·p^(b-k)·(1-p)^k with p = 1 - θ/π (the binomial
+    tail the ``_probe_masks`` comment promises), and at
     every angle it must strictly dominate the exact-bucket rate p^b —
     the measured statement of WHY multiprobe exists. Same
     engine-independent geometry as the bit-agreement test; only the
@@ -506,7 +506,6 @@ def test_multiprobe_collision_matches_analytic_curve(spark):
     from spark_etl_pipeline_spark.operators.similarity import (
         BITS_PER_TABLE,
         N_TABLES,
-        PROBE_RADIUS,
         embedding_signatures,
     )
 
@@ -524,7 +523,7 @@ def test_multiprobe_collision_matches_analytic_curve(spark):
             math.comb(BITS_PER_TABLE, k)
             * p ** (BITS_PER_TABLE - k)
             * (1 - p) ** k
-            for k in range(PROBE_RADIUS + 1)
+            for k in range(2)
         )
         analytic_exact = p**BITS_PER_TABLE
         multi = exact = n = 0
@@ -534,7 +533,7 @@ def test_multiprobe_collision_matches_analytic_curve(spark):
             for t in range(N_TABLES):
                 n += 1
                 ham = bin(sigs[(va, t)] ^ sigs[(vb, t)]).count("1")
-                multi += ham <= PROBE_RADIUS
+                multi += ham <= 1
                 exact += ham == 0
         m_rate, e_rate = multi / n, exact / n
         se = math.sqrt(analytic_multi * (1 - analytic_multi) / n)
@@ -554,11 +553,11 @@ def test_multiprobe_collision_matches_analytic_curve(spark):
 def test_probe_join_equals_hamming_radius(spark):
     """Mechanical multiprobe equivalence, no statistics: the engine's
     probe-side explode + bucket EQUI-join must produce exactly the
-    pairs whose per-table signatures differ in <= PROBE_RADIUS bits in
+    pairs whose per-table signatures differ in <= 1 bit in
     at least one table — computed here by brute-force plain-Python
     hamming over the signature map. Pins the xor/mask explode in
     ``embedding_probe_signatures`` (a wrong mask set or a dropped
-    radius-0 probe silently degrades recall, never correctness of the
+    own-bucket probe silently degrades recall, never correctness of the
     verified pairs, so only an equivalence test catches it)."""
     import random
 
@@ -567,7 +566,6 @@ def test_probe_join_equals_hamming_radius(spark):
     from spark_etl_pipeline_spark.operators.similarity import (
         DIM,
         N_TABLES,
-        PROBE_RADIUS,
         embedding_probe_signatures,
         embedding_signatures,
     )
@@ -590,7 +588,7 @@ def test_probe_join_equals_hamming_radius(spark):
         for i, a in enumerate(ids)
         for b in ids[i + 1 :]
         if any(
-            bin(sigs[(a, t)] ^ sigs[(b, t)]).count("1") <= PROBE_RADIUS
+            bin(sigs[(a, t)] ^ sigs[(b, t)]).count("1") <= 1
             for t in range(N_TABLES)
         )
     }
@@ -622,8 +620,8 @@ def test_probe_join_equals_hamming_radius(spark):
 
 
 def test_probe_masks_and_bits_knob_contract(spark):
-    """API pins for the scale knobs: the mask set is exactly the
-    popcount<=radius neighborhood (count Σ C(b,k), radius-0 probe
+    """API pins for the one scale knob: the mask set is exactly the
+    popcount<=1 neighborhood (1 + bits masks, the own-bucket probe
     first — the order the registered plans snapshot), and signatures
     built at non-default bits stay inside their 2^bits bucket space
     across all tables."""
@@ -632,14 +630,12 @@ def test_probe_masks_and_bits_knob_contract(spark):
         embedding_signatures,
     )
 
-    assert _probe_masks(6, 1) == [0, 1, 2, 4, 8, 16, 32]
-    for bits, radius in ((6, 1), (10, 1), (6, 2), (8, 3)):
-        masks = _probe_masks(bits, radius)
-        assert len(masks) == sum(
-            math.comb(bits, k) for k in range(radius + 1)
-        )
+    assert _probe_masks(6) == [0, 1, 2, 4, 8, 16, 32]
+    for bits in (6, 10):
+        masks = _probe_masks(bits)
+        assert len(masks) == 1 + bits
         assert len(set(masks)) == len(masks)
-        assert all(bin(m).count("1") <= radius and m < 2**bits for m in masks)
+        assert all(bin(m).count("1") <= 1 and m < 2**bits for m in masks)
         assert masks[0] == 0
 
     from spark_etl_pipeline_spark.operators.similarity import DIM
@@ -658,7 +654,7 @@ def test_probe_masks_and_bits_knob_contract(spark):
         assert len({r.sig for r in rows}) > 10
 
 
-def _cand_set(probe_df, emb):
+def _cand_set(probe_df, emb, bits):
     """Candidate pairs from a probe-side frame joined on (t, sig)."""
     from pyspark.sql import functions as F
 
@@ -666,7 +662,7 @@ def _cand_set(probe_df, emb):
         embedding_signatures,
     )
 
-    a, b = probe_df.alias("a"), embedding_signatures(emb).alias("b")
+    a, b = probe_df.alias("a"), embedding_signatures(emb, bits).alias("b")
     return {
         (r.va, r.vb)
         for r in a.join(
@@ -683,40 +679,6 @@ def _cand_set(probe_df, emb):
     }
 
 
-def test_directed_probes_equivalences(spark):
-    """Query-directed probing's exact contracts on a random corpus:
-    probes=0 is the exact-bucket join, probes=bits IS radius-1
-    multiprobe, and the candidate set grows monotonically with the
-    probe budget (each larger budget is a superset)."""
-    from spark_etl_pipeline_spark.operators.similarity import (
-        BITS_PER_TABLE,
-        DIM,
-        embedding_directed_probe_signatures,
-        embedding_probe_signatures,
-        embedding_signatures,
-    )
-
-    rng = random.Random(11)
-    emb = spark.createDataFrame(
-        [(i, [rng.gauss(0, 1) for _ in range(DIM)]) for i in range(150)],
-        "vec_id long, v array<double>",
-    )
-    exact = _cand_set(embedding_signatures(emb), emb)
-    full = _cand_set(embedding_probe_signatures(emb), emb)
-    n_all = 150 * 149 // 2
-    assert 0 < len(exact) < len(full) < n_all, "degenerate corpus"
-
-    d0 = _cand_set(embedding_directed_probe_signatures(emb, probes=0), emb)
-    d2 = _cand_set(embedding_directed_probe_signatures(emb, probes=2), emb)
-    d4 = _cand_set(embedding_directed_probe_signatures(emb, probes=4), emb)
-    dfull = _cand_set(
-        embedding_directed_probe_signatures(emb, probes=BITS_PER_TABLE), emb
-    )
-    assert d0 == exact
-    assert dfull == full
-    assert exact <= d2 <= d4 <= full
-
-
 def test_setbit_probes_equal_full_radius_one(spark):
     """The set-bit (downward-flip) probe's exact contract on a random
     corpus: the self-join candidate set is IDENTICAL to full radius-1
@@ -726,16 +688,19 @@ def test_setbit_probes_equal_full_radius_one(spark):
     (vector, table) instead of 1 + bits (round-9 A/B in BASELINE.md).
     This is the equal-recall-cheaper form the registered pair-dedup
     queries default to; the oracle's hamming<=1 contract is unchanged.
+    Checked at the registered b=6 and at a scaled-up b=9, since
+    ``bits`` is the one knob deployments (and ``tools/scale_bench.py``)
+    raise with corpus size.
     """
     from pyspark.sql import functions as F
 
     from spark_etl_pipeline_spark.operators.similarity import (
-        BITS_PER_TABLE,
         DIM,
         N_TABLES,
         embedding_candidate_pairs,
         embedding_probe_signatures,
-        embedding_setbit_probe_signatures,
+        embedding_signatures,
+        setbit_probe_signatures,
     )
 
     rng = random.Random(17)
@@ -743,71 +708,30 @@ def test_setbit_probes_equal_full_radius_one(spark):
         [(i, [rng.gauss(0, 1) for _ in range(DIM)]) for i in range(150)],
         "vec_id long, v array<double>",
     )
-    full = _cand_set(embedding_probe_signatures(emb), emb)
-    setbit = {
-        (r.vec_a, r.vec_b)
-        for r in embedding_candidate_pairs(emb).collect()
-    }
-    assert 0 < len(full), "degenerate corpus"
-    assert setbit == full
+    for bits in (6, 9):
+        full = _cand_set(embedding_probe_signatures(emb, bits), emb, bits)
+        setbit = {
+            (r.vec_a, r.vec_b)
+            for r in embedding_candidate_pairs(emb, bits).collect()
+        }
+        assert 0 < len(full), f"bits={bits}: degenerate corpus"
+        assert setbit == full, f"bits={bits}"
 
-    # every emitted pair is canonical (vec_a < vec_b), no self-pairs
-    assert all(a < b for a, b in setbit)
+        # every emitted pair is canonical (vec_a < vec_b), no self-pairs
+        assert all(a < b for a, b in setbit)
 
-    # probe-row economics: exactly Σ (1 + popcount(sig)) rows, strictly
-    # fewer than the (1 + bits) mask expansion on any non-degenerate sig
-    n_setbit = embedding_setbit_probe_signatures(emb).count()
-    n_full = embedding_probe_signatures(emb).count()
-    assert n_full == 150 * N_TABLES * (1 + BITS_PER_TABLE)
-    assert n_setbit < n_full
-    popcount_sum = (
-        embedding_probe_signatures(emb, radius=0)
-        .select(F.expr("bit_count(sig)").alias("pc"))
-        .groupBy()
-        .agg(F.sum("pc").alias("s"), F.count("*").alias("n"))
-        .collect()[0]
-    )
-    assert n_setbit == popcount_sum.s + popcount_sum.n
-
-
-def test_directed_probes_concentrate_recall_on_true_pairs(spark):
-    """The margin heuristic's measured value (Lv et al., VLDB'07): with
-    a 2-of-6-bit probe budget (3 probe rows/table instead of 7),
-    directed probing keeps >=80% of full radius-1 recall on TRUE
-    close pairs (measured 0.98 at θ=0.35, 0.87 at θ=0.6) while on
-    ISOTROPIC pairs the same budget captures only ~its fair share of
-    the candidate increment (measured 0.53 for 3/6 bits at probes=3;
-    pinned <=0.65) — i.e. the low-margin-first ordering is SELECTIVE
-    for genuinely-straddling planes, not just a bigger candidate set."""
-    from spark_etl_pipeline_spark.operators.similarity import (
-        DIM,
-        embedding_directed_probe_signatures,
-        embedding_probe_signatures,
-        embedding_signatures,
-    )
-
-    rows, meta = _angle_pair_corpus(808, (0.35, 0.6), 100)
-    emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    full = _cand_set(embedding_probe_signatures(emb), emb)
-    d2 = _cand_set(embedding_directed_probe_signatures(emb, probes=2), emb)
-    for theta in (0.35, 0.6):
-        tp = {(a, b) for a, b, th in meta if th == theta}
-        f, d = len(tp & full), len(tp & d2)
-        assert f > 0
-        assert d / f >= 0.80, (
-            f"theta={theta}: directed-2 keeps {d}/{f} of full recall"
+        # probe-row economics: exactly Σ (1 + popcount(sig)) rows,
+        # strictly fewer than the (1 + bits) mask expansion on any
+        # non-degenerate sig
+        sigs = embedding_signatures(emb, bits)
+        n_setbit = setbit_probe_signatures(sigs, bits).count()
+        n_full = embedding_probe_signatures(emb, bits).count()
+        assert n_full == 150 * N_TABLES * (1 + bits)
+        assert n_setbit < n_full
+        popcount_sum = (
+            sigs.select(F.expr("bit_count(sig)").alias("pc"))
+            .groupBy()
+            .agg(F.sum("pc").alias("s"), F.count("*").alias("n"))
+            .collect()[0]
         )
-
-    rng = random.Random(11)
-    iso = spark.createDataFrame(
-        [(i, [rng.gauss(0, 1) for _ in range(DIM)]) for i in range(150)],
-        "vec_id long, v array<double>",
-    )
-    exact_i = _cand_set(embedding_signatures(iso), iso)
-    full_i = _cand_set(embedding_probe_signatures(iso), iso)
-    d3_i = _cand_set(embedding_directed_probe_signatures(iso, probes=3), iso)
-    inc_share = len(d3_i - exact_i) / len(full_i - exact_i)
-    assert 0.35 <= inc_share <= 0.65, (
-        f"isotropic increment share {inc_share:.2f} out of band — the "
-        "probe budget is no longer behaving like a fair-share baseline"
-    )
+        assert n_setbit == popcount_sum.s + popcount_sum.n

@@ -404,3 +404,41 @@ def test_engine_reads_only_deployment_env_vars():
             bad.append(f"{where}: environment access without a literal name")
         bad += [f"{where}: {n}" for n in names if n not in _DEPLOYMENT_ENV]
     assert not bad, f"non-deployment environment reads: {bad}"
+
+
+#: Scripts outside the package that import engine names. Tools import
+#: lazily inside functions, so a renamed or deleted operator surfaces
+#: only when someone runs the tool — this scan surfaces it at test time.
+_SCRIPT_GLOBS = ("tools/*.py", "perfbench/*.py", "jobs/*.py", "bench.py")
+
+
+def test_script_imports_of_engine_names_resolve():
+    import ast
+    import importlib
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    bad, n = [], 0
+    for path in sorted(p for g in _SCRIPT_GLOBS for p in root.glob(g)):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and (node.module or "").split(".")[0] == "spark_etl_pipeline_spark"
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                n += 1
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ImportError:
+                    bad.append(
+                        f"{path.relative_to(root)}:{node.lineno}: "
+                        f"{node.module}.{alias.name}"
+                    )
+    assert n > 0, "scan found no engine imports — the globs went stale"
+    assert not bad, f"script imports naming missing engine objects: {bad}"

@@ -96,42 +96,6 @@ def test_embedding_store_probe_equals_full_filtered(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_embedding_store_directed_probe_contracts(spark, tmp_path):
-    """Directed probing against the stored corpus: probes=BITS is
-    exactly the default full radius-1 probe, and the candidate budget
-    nests monotonically (probes=0 ⊆ probes=2 ⊆ default) — so dialing
-    the knob down can only drop candidates, never invent pairs."""
-    from pyspark.sql import functions as F
-
-    from spark_etl_pipeline_spark.operators.similarity import (
-        BITS_PER_TABLE,
-        _vec,
-        build_embedding_store,
-        probe_embedding_store,
-    )
-
-    emb = table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", _vec().alias("v")
-    )
-    is_delta = F.col("vec_id") % 4 == 3
-    store = str(tmp_path / "embstore_directed")
-    build_embedding_store(emb.filter(~is_delta), store)
-    delta = emb.filter(is_delta)
-
-    def pairs(probes):
-        return {
-            (r["vec_a"], r["vec_b"], round(r["cos"], 9))
-            for r in probe_embedding_store(
-                spark, store, delta, probes=probes
-            ).collect()
-        }
-
-    full = pairs(None)
-    assert pairs(BITS_PER_TABLE) == full and len(full) > 0
-    p0, p2 = pairs(0), pairs(2)
-    assert p0 <= p2 <= full
-
-
 def test_store_refuses_constants_mismatch(spark, tmp_path):
     """A persisted store is a function of its constants: probing or
     appending one built under DIFFERENT constants must fail LOUDLY

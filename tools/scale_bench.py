@@ -202,14 +202,11 @@ def lsh_occupancy_ab(
     """
     import math
 
-    from pyspark.sql import functions as F
-
     from spark_etl_pipeline_spark.operators.similarity import (
         BITS_PER_TABLE,
         _vec,
+        embedding_candidate_pairs,
         embedding_near_dup_pairs,
-        embedding_probe_signatures,
-        embedding_signatures,
     )
     from spark_etl_pipeline_spark.plans.registry import table
 
@@ -223,19 +220,7 @@ def lsh_occupancy_ab(
         emb = table(spark, root, "embeddings").select(
             "vec_id", _vec().alias("v")
         )
-        a = embedding_probe_signatures(emb, bits).alias("a")
-        b = embedding_signatures(emb, bits).alias("b")
-        n_cand = (
-            a.join(
-                b,
-                (F.col("a.t") == F.col("b.t"))
-                & (F.col("a.sig") == F.col("b.sig"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select("a.vec_id", "b.vec_id")
-            .distinct()
-            .count()
-        )
+        n_cand = embedding_candidate_pairs(emb, bits).count()
         pipe = embedding_near_dup_pairs(emb, bits=bits)
         n_pairs = pipe.count()
         best = None
@@ -263,11 +248,10 @@ def multiprobe_ab(
 ) -> dict:
     """Probe-strategy A/B on the registered near-dup pipeline: full
     radius-1 mask expansion vs the SET-BIT probe (identical candidate
-    set — the equal-recall form) vs query-directed probing at probe
-    budgets 1/2/4 (a candidate SUBSET — recall priced in).
+    set — the equal-recall form).
 
-    Recall here is exact and relative: every variant's verified pairs
-    (cos >= threshold) are counted against full radius-1's — the
+    Recall here is exact and relative: the set-bit probe's verified
+    pairs (cos >= threshold) are counted against full radius-1's — the
     hamming<=1 oracle contract — so ``pair_recall`` = 1.0 means
     equal recall by construction, not by sampling. Wall uses bench.py's
     noop-write min-of-runs methodology on the whole cand→verify
@@ -279,13 +263,13 @@ def multiprobe_ab(
 
     from spark_etl_pipeline_spark.operators.similarity import (
         COS_DUP_THRESHOLD,
-        dot_expr,
+        _pair_cosines,
+        _with_nrm,
         embedding_candidate_pairs,
-        embedding_directed_probe_signatures,
         embedding_probe_signatures,
-        embedding_setbit_probe_signatures,
         embedding_signatures,
         load_vectors,
+        setbit_probe_signatures,
     )
 
     from spark_etl_pipeline_spark.operators.similarity import BITS_PER_TABLE
@@ -308,23 +292,8 @@ def multiprobe_ab(
         )
 
     def verify(emb, cand):
-        nrm = F.expr(f"sqrt({dot_expr('v', 'v')})")
-        ea = emb.select(
-            F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), nrm.alias("na")
-        )
-        eb = emb.select(
-            F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), nrm.alias("nb")
-        )
-        return (
-            eb.join(ea.join(cand, "vec_a"), "vec_b")
-            .select(
-                "vec_a",
-                "vec_b",
-                (F.expr(dot_expr("va", "vb")) / (F.col("na") * F.col("nb"))).alias(
-                    "cos"
-                ),
-            )
-            .filter(F.col("cos") >= COS_DUP_THRESHOLD)
+        return _pair_cosines(cand, _with_nrm(emb)).filter(
+            F.col("cos") >= COS_DUP_THRESHOLD
         )
 
     out: dict = {}
@@ -336,13 +305,7 @@ def multiprobe_ab(
              lambda e: embedding_probe_signatures(e, b_eff)),
             ("setbit",
              lambda e: embedding_candidate_pairs(e, bits=b_eff),
-             lambda e: embedding_setbit_probe_signatures(e, b_eff)),
-        ] + [
-            (f"directed_p{p}",
-             (lambda e, p=p: cand_from_probe(
-                 e, embedding_directed_probe_signatures(e, probes=p, bits=b_eff))),
-             (lambda e, p=p: embedding_directed_probe_signatures(e, probes=p, bits=b_eff)))
-            for p in (4, 2, 1)
+             lambda e: setbit_probe_signatures(embedding_signatures(e, b_eff), b_eff)),
         ]
         full_pairs = None
         section = {}
@@ -458,9 +421,9 @@ def main() -> int:
         "--multiprobe-ab",
         action="store_true",
         help=(
-            "run ONLY the probe-strategy A/B (full radius-1 vs set-bit "
-            "vs directed p=4/2/1) on the near-dup pipeline at base and "
-            "scale× embeddings, then exit"
+            "run ONLY the probe-strategy A/B (full radius-1 vs set-bit) "
+            "on the near-dup pipeline at base and scale× embeddings, "
+            "then exit"
         ),
     )
     args = parser.parse_args()
