@@ -5,76 +5,20 @@ Prints exactly ONE JSON line on stdout:
     {"metric": "total_wall_sec", "value": N, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...},
      "passes": {"q1_pricing_summary": [sec, sec], ...}, "sf": 0.1,
-     "canary_sec": C, "sustained_canary_sec": S, "io_canary_sec": D}
+     "sink": "noop"}
 
-Round-14 protocol: every query is timed TWICE back-to-back and
-``queries`` carries the per-query MIN; both raw passes are kept under
-``passes`` for shape analysis. The r13 host generation shows
-non-reproducing per-query transients of 2–5× (BASELINE.md r13
-re-record; the r13 driver artifact read 71.84 s where two same-code
-re-runs read 49.3/44.0 s), so a single timed pass no longer produces
-an interpretable per-query number. The comparison anchor
-(``tools/bench_adjudicate.py``) is already a per-query min across
-runs, so min-of-2 makes the driver's one-shot reading like-for-like.
-``value`` is the sum of the per-query mins.
-
-``canary_sec`` is a HOST-SPEED CANARY: the min-of-3 wall of a fixed
-synthetic pure-JVM workload (xxhash64-fold over spark.range — no IO,
-no shuffle, no engine code, constant across rounds). Round-to-round
-per-query ratios have repeatedly moved ±10-45% with UNCHANGED code
-(BASELINE.md's host-band history); dividing both sides' query times by
-their session's canary separates host drift from code regressions with
-a measurement instead of an argument.
-
-``sustained_canary_sec`` (round 14) is the SUSTAINED-THROUGHPUT
-complement: the same xxhash64 fold at 32× the rows (64B vs the 2B-row
-sprint — ~8–9 s of all-core work on the quiet r13-generation host;
-the sprint's real quiet cost is ~0.4 s, so 8× would read only ~2.3 s),
-min-of-2. The r13 host generation runs the headline
-set ~1.35× the previous generation at EQUAL sprint canary — a
-sustained regime (thermal/steal/turbo-budget) the 1.5 s burst reading
-cannot see. Sprint-flat but sustained-high explains a uniformly slow
-run without blaming any plan.
-
-``io_canary_sec`` is the STORAGE-SIDE complement (round 10): the CPU
-canary is blind to IO/scheduler drift — the r9 adjudication found a
-run whose canary was the fastest on record while its total was the
-slowest, leaving the residual unattributed. It times a raw sequential
-byte-read (min-of-3 after one untimed warm-up pass) of a 3.2 GB
-incompressible synthetic parquet table staged once under the SAME
-/tmp filesystem the default multi-file bench tables live on. A
-drifted total with BOTH canaries flat is a code regression; CPU-flat
-but IO-high is storage/page-cache-side host band.
-
-Round-11 protocol fixes, after the r10 reading (2.578 s vs the 0.508
-quiet-host reference with a flat CPU canary and every query
-flat-to-faster) exposed two defects in the r10 design:
-
-1. Staging raced its own measurement — the 3.2 GB write finished
-   seconds before the timed reads. Staging now happens BEFORE the
-   headline run with an untimed ``os.sync()``, and one untimed
-   warm-up read precedes the timed min-of-3, so every session times
-   the same page-cache-warm regime.
-2. The timed read went through a Spark parquet scan, which measures
-   JVM allocation/GC state more than storage: with the race fixed,
-   back-to-back runs still swung 1.01 s -> 1.76 s (flat CPU canary
-   both times) while a raw byte-read of the same files held
-   0.57-0.70 s, and the same scan in a fresh small-heap session
-   OOMed outright on 32 concurrent ~100 MB vectored-read buffers.
-   The timed pass is now a plain sequential ``read()`` of the staged
-   files — it isolates the filesystem/page-cache axis (the one the
-   CPU canary cannot see) with no JVM noise on top. Parquet-decode
-   health is already covered per-query by the headline timings.
-
-Caveat: with the SPARK_GRAFT_BENCH_MULTIFILE=0 opt-out the queries
-read ``sf_dir`` directly while the io canary still measures /tmp —
-on a host where those are different devices the io reading does not
-speak for the tables' filesystem.
+Every query is timed TWICE back-to-back and ``queries`` carries the
+per-query MIN; both raw passes are kept under ``passes`` for shape
+analysis. Hosts of the r13 generation show non-reproducing per-query
+transients of 2–5× (BASELINE.md r13 re-record: one run read 71.84 s
+where two same-code re-runs read 49.3/44.0 s), so a single timed pass
+does not produce an interpretable per-query number. ``value`` is the
+sum of the per-query mins.
 
 Each query is materialized through the `noop` sink (full execution, no
 write cost, no column-pruning shortcut the way `count()` allows).
-Everything else (Spark logs, errors) goes to stderr so the driver's JSON
-parse never breaks.
+Everything else (Spark logs, errors) goes to stderr so a caller that
+parses stdout as JSON never breaks.
 """
 
 from __future__ import annotations
@@ -138,81 +82,6 @@ HEADLINE = [
 
 N_FILES = 8  # files per table in the multi-file bench layout
 
-IO_CANARY_ROOT = "/tmp/spark_graft_bench/io_canary.parquet"
-#: staged-ok marker lives INSIDE the data directory: a /tmp reaper that
-#: removes the parquet necessarily removes the marker with it, so a
-#: stale marker can never vouch for missing data (the pre-r11 sibling
-#: file ``_IO_CANARY_DONE`` could).
-IO_CANARY_MARKER = os.path.join(IO_CANARY_ROOT, "_STAGED_OK")
-#: 3.2 GB table + parquet-write scratch headroom
-IO_CANARY_FREE_BYTES_NEEDED = 5 * 1024**3
-
-
-def _stage_io_canary(spark) -> str | None:
-    """Stage (or re-verify) the io-canary table. Never timed.
-
-    Runs BEFORE the headline queries: the 3.2 GB staging write's
-    dirty-page writeback must have settled (``os.sync()`` + the whole
-    headline run) by the time the timed min-of-3 reads run — round 10
-    measured 5.1x the quiet-host reference when staging immediately
-    preceded its own timed reads. Returns the table path, or None when
-    the table cannot be provided (insufficient /tmp free space — the
-    table lives on whatever backs /tmp, possibly RAM-backed tmpfs, so
-    the footprint is checked, announced on stderr, and skipped rather
-    than risked).
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    if os.path.exists(IO_CANARY_MARKER):
-        return IO_CANARY_ROOT
-    free = shutil.disk_usage("/tmp").free
-    if free < IO_CANARY_FREE_BYTES_NEEDED:
-        print(
-            f"[bench] io canary: SKIP staging (/tmp free {free / 1e9:.1f} GB "
-            f"< {IO_CANARY_FREE_BYTES_NEEDED / 1e9:.1f} GB needed)",
-            file=sys.stderr,
-        )
-        return None
-    t0 = time.monotonic()
-    spark.range(0, 400_000_000, 1, 32).select(
-        F.expr("xxhash64(id)").alias("a")
-    ).write.mode("overwrite").parquet(IO_CANARY_ROOT)
-    with open(IO_CANARY_MARKER, "w") as fh:
-        fh.write("ok")
-    # retire the pre-r11 marker so the old protocol's vouching file
-    # can't outlive the data it described
-    legacy = "/tmp/spark_graft_bench/_IO_CANARY_DONE"
-    if os.path.exists(legacy):
-        os.unlink(legacy)
-    os.sync()  # flush the dirty pages now, untimed; cache stays warm
-    print(
-        f"[bench] io canary staged+synced in {time.monotonic() - t0:.1f}s",
-        file=sys.stderr,
-    )
-    return IO_CANARY_ROOT
-
-
-def _io_read_once(root: str) -> int:
-    """One sequential pass over the staged canary files; returns bytes.
-
-    Plain buffered ``read()`` in 4 MB chunks — no JVM, no decode — so
-    the timing isolates the filesystem/page-cache regime (see module
-    doc: the Spark-scan variant measured GC state, not storage).
-    """
-    n = 0
-    for name in sorted(os.listdir(root)):
-        if not name.endswith(".parquet"):
-            continue
-        with open(os.path.join(root, name), "rb") as fh:
-            while True:
-                chunk = fh.read(1 << 22)
-                if not chunk:
-                    break
-                n += len(chunk)
-    return n
-
 
 def _multifile_copy(spark, sf_dir: str) -> str:
     """One-time 8-file-per-table copy of ``sf_dir`` under /tmp.
@@ -223,11 +92,10 @@ def _multifile_copy(spark, sf_dir: str) -> str:
     ceiling). Real 100-TB tables are thousands of files; re-writing each
     table as N_FILES files lets local[32] actually parallelize the scan
     stage, so the timings measure the PLANS, not the synthetic layout.
-    Setup happens once (marker-file cached across invocations, e.g. the
-    driver's back-to-back runs) and is never timed. ns-timestamp tables
+    Setup happens once (marker-file cached across invocations, e.g.
+    back-to-back runs) and is never timed. ns-timestamp tables
     are materialized through ``registry.table`` (µs conversion), so the
     copy reads back as plain timestamps.
-    Opt out with SPARK_GRAFT_BENCH_MULTIFILE=0 (raw single-file dir).
     """
     from spark_etl_pipeline_spark.plans import registry
 
@@ -264,7 +132,7 @@ def _multifile_copy(spark, sf_dir: str) -> str:
 #: score table. The write-path number = execution + write + commit;
 #: subtract the same query's noop reading to isolate the sink cost.
 #: NOT part of the comparison gate — recorded as its own BASELINE.md
-#: section. The driver's plain `python bench.py` is unchanged.
+#: section. The plain `python bench.py` run is unchanged.
 WRITE_SINK = {
     "etl_events_pipeline": "transaction_date",
     "rel_window_running": "l_suppkey",
@@ -326,16 +194,7 @@ def main() -> None:
     spark = get_spark("bench")
     qs = registry.queries()
 
-    if os.environ.get("SPARK_GRAFT_BENCH_MULTIFILE", "1") != "0":
-        sf_dir = _multifile_copy(spark, sf_dir)
-
-    # Stage the io-canary table up front (untimed): its writeback must
-    # not race the timed reads at the end of the run (r10 finding).
-    try:
-        io_root = _stage_io_canary(spark)
-    except Exception as exc:
-        io_root = None
-        print(f"[bench] io canary staging: ERROR {exc}", file=sys.stderr)
+    sf_dir = _multifile_copy(spark, sf_dir)
 
     # One untimed end-to-end run to absorb JVM/codegen/shuffle-service
     # warm-up, so the first timed query isn't charged ~2s of JIT.
@@ -424,125 +283,10 @@ def main() -> None:
             timings[name] = -1.0
             passes[name] = pass_secs + [-1.0]
 
-    # Host-speed canary: fixed pure-JVM CPU work (whole-stage-codegen
-    # xxhash64 fold over a range — no IO, no shuffle, no engine code),
-    # timed min-of-3 AFTER the fully-warmed headline run. Constant
-    # across rounds by construction, so query_sec / canary_sec is the
-    # host-normalized number to compare across sessions.
-    canary = None
-    try:
-        from pyspark.sql import functions as F
-
-        for _ in range(3):
-            t0 = time.monotonic()
-            # ~1.5 s of work: a sub-second canary would be scheduler-
-            # jitter-sensitive, defeating its purpose as a normalizer
-            spark.range(0, 2_000_000_000, 1, 32).select(
-                F.expr("bit_xor(xxhash64(id))")  # xor fold: no ANSI overflow
-            ).write.format("noop").mode("overwrite").save()
-            dt = time.monotonic() - t0
-            canary = dt if canary is None else min(canary, dt)
-        canary = round(canary, 3)
-        print(f"[bench] canary: {canary:.3f}s", file=sys.stderr)
-    except Exception as exc:
-        # a partial min (1-2 completed runs) must not masquerade as the
-        # documented min-of-3 — emit null rather than a weaker number
-        canary = None
-        print(f"[bench] canary: ERROR {exc}", file=sys.stderr)
-
-    # Sustained-throughput canary (round 14): the same xxhash64 fold
-    # at 32× the rows — ~9–10 s of all-core work per pass on the
-    # quiet r13-generation host (the sprint's REAL quiet cost is
-    # ~0.4 s, not its nominal 1.5 s design point, so "8× the rows"
-    # would read only ~2.3 s — measured while sizing this), min-of-2.
-    # The sprint canary reads turbo/idle-burst speed; the r13 host
-    # generation runs the headline set ~1.35× slower at EQUAL sprint
-    # canary, a sustained regime only a ~10 s workload can see.
-    sustained = None
-    try:
-        from pyspark.sql import functions as F
-
-        for _ in range(2):
-            t0 = time.monotonic()
-            spark.range(0, 64_000_000_000, 1, 32).select(
-                F.expr("bit_xor(xxhash64(id))")
-            ).write.format("noop").mode("overwrite").save()
-            dt = time.monotonic() - t0
-            sustained = dt if sustained is None else min(sustained, dt)
-        sustained = round(sustained, 3)
-        print(f"[bench] sustained canary: {sustained:.3f}s", file=sys.stderr)
-    except Exception as exc:
-        # same contract: a partial min must not masquerade as min-of-2
-        sustained = None
-        print(f"[bench] sustained canary: ERROR {exc}", file=sys.stderr)
-
-    # IO-side canary: raw sequential byte-read of the 3.2 GB
-    # incompressible table (400M rows of xxhash64(id) in 32 files)
-    # staged BEFORE the headline run. One untimed warm-up pass, then
-    # timed min-of-3 — every session times the same page-cache-warm
-    # regime regardless of whether this host staged fresh, kept the
-    # files cached, or evicted them (module doc has the full protocol
-    # history).
-    io_canary = None
-    # Mid-run re-staging (marker vanished / table truncated) writes
-    # 3.2 GB immediately before the timed reads — the staging-races-
-    # measurement regime the r11 protocol fix exists to avoid.
-    # os.sync() + the untimed warm-up mitigate, but the reading is not
-    # distinguishable from a properly pre-staged run in the output, so
-    # flag it in the JSON for the adjudicator to discount (ADVICE r11).
-    io_canary_restaged = False
-    try:
-        # re-verify the data survived the headline run (a /tmp reaper
-        # can remove it mid-session); re-stage if gone
-        if io_root is not None and not os.path.exists(IO_CANARY_MARKER):
-            print(
-                "[bench] io canary: table vanished mid-run, re-staging",
-                file=sys.stderr,
-            )
-            io_root = _stage_io_canary(spark)
-            io_canary_restaged = True
-        if io_root is not None:
-            nbytes = _io_read_once(io_root)  # untimed warm-up pass
-            if nbytes < 3_000_000_000:
-                # truncated table (a partial /tmp reap can drop old
-                # part files while keeping the newest-mtime marker):
-                # retire the marker so staging actually re-runs —
-                # otherwise the canary is lost on every future session
-                print(
-                    f"[bench] io canary: table truncated "
-                    f"({nbytes / 1e9:.2f} GB < 3.0 GB), re-staging",
-                    file=sys.stderr,
-                )
-                if os.path.exists(IO_CANARY_MARKER):
-                    os.unlink(IO_CANARY_MARKER)
-                io_root = _stage_io_canary(spark)
-                io_canary_restaged = True
-                if io_root is not None:
-                    nbytes = _io_read_once(io_root)  # fresh warm-up
-            if io_root is None or nbytes < 3_000_000_000:
-                print("[bench] io canary: unavailable", file=sys.stderr)
-            else:
-                for _ in range(3):
-                    t0 = time.monotonic()
-                    _io_read_once(io_root)
-                    dt = time.monotonic() - t0
-                    io_canary = (
-                        dt if io_canary is None else min(io_canary, dt)
-                    )
-                io_canary = round(io_canary, 3)
-                print(
-                    f"[bench] io canary: {io_canary:.3f}s", file=sys.stderr
-                )
-    except Exception as exc:
-        # same contract as the CPU canary: a partial min must not
-        # masquerade as the documented min-of-3
-        io_canary = None
-        print(f"[bench] io canary: ERROR {exc}", file=sys.stderr)
-
     # Stop the JVM BEFORE emitting the JSON line: under memory pressure
     # the JVM's unified logging writes gc,alloc warnings to STDOUT
     # (observed during the 30× scale run), and anything printed after
-    # the JSON would break the driver's parse-the-last-line contract.
+    # the JSON would break the parse-the-last-line contract.
     spark.stop()
     print(
         json.dumps(
@@ -555,10 +299,6 @@ def main() -> None:
                 "queries": timings,
                 "passes": passes,
                 "sf": sf,
-                "canary_sec": canary,
-                "sustained_canary_sec": sustained,
-                "io_canary_sec": io_canary,
-                "io_canary_restaged": io_canary_restaged,
                 "sink": args.sink,
             }
         )

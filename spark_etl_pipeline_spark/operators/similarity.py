@@ -430,9 +430,7 @@ def _ivf_topk(
     The trained path (``sim_ivf_kmeans``) has no such term — its
     k is fixed by ``KMEANS_K`` regardless of n.
     """
-    emb = load_vectors(spark, sf_dir).withColumn(
-        "nrm", F.expr(f"sqrt({dot_expr('v', 'v')})")
-    )
+    emb = _with_nrm(load_vectors(spark, sf_dir))
     cents = emb.filter(F.col("vec_id") % stride == 0).select(
         F.col("vec_id").alias("cid"),
         F.col("v").alias("cv"),

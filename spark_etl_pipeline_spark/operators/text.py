@@ -36,9 +36,7 @@ from spark_etl_pipeline_spark.plans.registry import register, table
 # oracle-side tokenizers mutually inconsistent, which is why the r13
 # round documented instead of patching just this constant. \x0b now
 # sits in the fuzz WS_PAD pool (tools/stage_random.py), so corpus
-# sweeps keep the three tokenizers pinned equal; the r15 rotation
-# ledger carries the exception-(a) leads for the consumers without an
-# r14 driver row.
+# sweeps keep the three tokenizers pinned equal.
 TOKENS_SPARK = r"split(trim(text), '\\s+')"
 TOKENS_DUCK = r"string_split_regex(trim(text), '[\s\x0b]+')"
 

@@ -394,490 +394,13 @@ def load_all() -> None:
     from spark_etl_pipeline_spark.streaming import incremental, windows  # noqa: F401
 
 
-#: Driver-facing emission order for ``queries()`` / ``oracles()``.
-#:
-#: The driver's correctness gate checks the first ~50 entries in emission
-#: order, so ordering is a verification-coverage decision, not cosmetics.
-#:
-#: ROTATION CONTRACT (round-7 revision). The registry froze at 222
-#: queries after round 6; with a 50-row driver window a full sweep takes
-#: ceil(222/50) = 5 rounds, so the contract below guarantees every query
-#: a fresh driver CORRECTNESS row at least once per 5 rounds — provided
-#: the set stays frozen (new queries only when a judge ask requires one,
-#: and each new query displaces a freshest-row query from its scheduled
-#: window, never a stale one).
-#:
-#: Schedule (cohorts listed in emission order below; each window = the
-#: first 50 names at that round):
-#:
-#: - **r7 (done — 50/50 green, CORRECTNESS_r07)**: the 50
-#:   highest-priority never-driver-checked queries — the 47 round-6
-#:   fourth-wave additions plus the first 3 third-wave rows
-#:   (``graph_triangles``, ``docs_dedup_passages``, ``dq_audit``).
-#: - **r8 (done — 50/50 green, CORRECTNESS_r08)**: the remaining 30
-#:   never-checked third-wave rows (``stream_join_drain`` …
-#:   ``rel_calendar_spine``) + the first 20 of the r≤4-stale cohort
-#:   (``text_lang_id`` r3 through ``etl_upsert_merge`` r4). After this
-#:   window the never-checked set is empty for the first time and the
-#:   oldest driver row in the repo is r4.
-#: - **r9 (done — 50/50 green, CORRECTNESS_r09)**: per exception (a),
-#:   the four round-8 multiprobe-refactored consumers led
-#:   (``dedup_embedding_cosine``, ``sim_threshold_profile``,
-#:   ``docs_dedup_semantic``, ``sim_embedding_store``), then the
-#:   remaining 23 r4-stale rows + the 23 oldest r5-green rows. After
-#:   this window the oldest driver row in the repo became r5.
-#: - **r10 (this window, _EMIT_FIRST)**: per exception (a),
-#:   ``text_pii_scrub`` leads — its shared helper ``scrub_pii``
-#:   (``operators/traindata.py``) changed this round (the
-#:   ``EMAIL_ANCHORED`` anchor-class range fix, VERDICT r9 task 1) after
-#:   its newest driver row (r6) — then the remaining 25 r5-green rows
-#:   (``events_cohort_retention`` … ``stream_interval_join``) + the 24
-#:   oldest r6-green rows (``events_gap_fill`` …
-#:   ``q16_parts_suppliers``; the jump displaces
-#:   ``q20_potential_promotion`` to r11). After this window the oldest
-#:   driver row in the repo becomes r6.
-#: - **r11 (done — 50/50 green, CORRECTNESS_r11)**: the remaining 24 r6-green rows
-#:   (``q20_potential_promotion``, displaced from r10 by the
-#:   exception-(a) jump, leads) + the 26 oldest r7-green rows
-#:   (``text_tokenizer_fertility`` … ``rel_ship_lag``) — steady state
-#:   from here: strict oldest-driver-row-first order, re-sorted each
-#:   round from the CORRECTNESS_r*.json history
-#:   (``python tools/plan_rotation.py`` reproduces this window
-#:   verbatim). After this window the oldest driver row becomes r7.
-#: - **r12 (done — 50/50 green, CORRECTNESS_r12)**: the remaining 22 r7-green rows
-#:   + the 28 oldest r8-green rows — the exact
-#:   ``python tools/plan_rotation.py`` natural window, reordered per
-#:   exception (b) to LEAD with the two builders that changed
-#:   semantically in r11 after their last driver row:
-#:   ``rel_recursive_month_spine`` (MAX RECURSION LEVEL bound, r7 row)
-#:   and ``events_gap_fill_lerp`` (O(n²)→O(n log n) window rewrite, r8
-#:   row). Both already sat inside the natural window, so this is a
-#:   front-load, not a displacement. The r11 UTC load-path pin
-#:   (``session.pin_session_utc`` in ``table()``) touches every query
-#:   but is a no-op under the driver's UTC-host session, and the
-#:   ``streaming/source.py`` warning is log-only — no jumps for either.
-#:   After this window the oldest driver row in the repo becomes r8.
-#: - **r13 (done — 50/50 green, CORRECTNESS_r13)**: the 28 exception-(a) leads
-#:   from the amended ledger below, then the pure
-#:   ``python tools/plan_rotation.py`` staleness order — the 21
-#:   remaining r8-green rows + the oldest r9-green row
-#:   (``text_decontaminate``). Lead count capped at 28 precisely so
-#:   the last two r8 rows (``text_chunking``, ``etl_upsert_merge``)
-#:   stay inside the window at their exactly-5-round contract edge.
-#:   After this window the oldest driver row in the repo becomes r9.
-#: - **r13 ledger (written at r12 close, amended after the late-r12
-#:   concurrency fix)**: seven SQL-front-door builders changed in r12
-#:   (temp-view binding → parameterized ``spark.sql`` DataFrame args;
-#:   the cross-directory race fix, see ``tests/test_concurrency.py``).
-#:   Three of them sit in the r12 window itself
-#:   (``rel_recursive_month_spine``, ``rel_lateral_topn``,
-#:   ``text_chunks_udtf``) and get their driver row on the fixed code
-#:   this round; the other FOUR owe exception-(a) jumps and must lead
-#:   the r13 window: ``rel_sql_exists``, ``rel_sql_scalar_subquery``,
-#:   ``rel_sql_not_in``, ``rel_grouping_sets``. (Plan snapshots are
-#:   unchanged by the rewrite — the analyzed plans are identical —
-#:   but the contract front-loads driver evidence on any refactored
-#:   builder regardless.) The full-registry CONCURRENT sweep
-#:   (``tools/rehearse_concurrent.py``) then found the second
-#:   violation of the same class: the eight memory-sink drains used
-#:   fixed session-global ``queryName``\ s; ``_drain_to_table``
-#:   (``streaming/windows.py``) now uuid-suffixes per invocation and
-#:   all eight route through it. Three of the eight sit in the r12
-#:   window (``stream_join_drain``, ``stream_enrich_drain``,
-#:   ``stream_dedup_drain``) and get their driver row on the fixed
-#:   code; the other FIVE owe exception-(a) jumps alongside the four
-#:   SQL builders: ``stream_tumbling_drain``, ``stream_sliding_drain``,
-#:   ``stream_session_drain``, ``stream_rollup_drain``,
-#:   ``stream_profiles_drain``. After the jumps, the rest of the r13
-#:   window is the pure ``tools/plan_rotation.py`` output (the 22
-#:   remaining r8-green rows + the oldest r9-green rows, minus
-#:   displacements). The random-corpus fuzzer
-#:   (``tools/stage_random.py``) then changed more twins late in r12
-#:   (empty-text, all-special-day, and zero-vector edges; see
-#:   ``tests/test_random_corpus.py``): ``text_chunks_udtf`` (oracle
-#:   only; in the r12 window, driver row lands on the fixed twin),
-#:   ``mm_resize`` (oracle only), ``events_theilsen_trend`` (builder +
-#:   oracle + plan snapshot), and the WHOLE similarity family via the
-#:   shared ``load_vectors`` usable-vector gate (now also drops
-#:   zero-NORM vectors — the ANSI DIVIDE_BY_ZERO crash class) plus its
-#:   14 matching oracle predicates; ``sim_ivf_quantized_rerank`` and
-#:   ``sim_embedding_clusters`` sit in the r12 window, the other 14
-#:   family members owe jumps. (``stream_profiles_drain`` — already a
-#:   lead from the drain-naming fix — was refactored a second time:
-#:   the stateful accumulator now emits NULL, not its 0.0 initial
-#:   state, for a key with zero finite measurements; fuzz seed 7.)
-#:   The props-edge fuzz band then hardened the three JSON-props
-#:   consumers (try-semantics extraction, json_valid + json_type
-#:   oracle guards; ``rel_variant_props`` is in the r12 window,
-#:   ``etl_json_struct`` and ``etl_events_pipeline`` owe jumps).
-#:   **r13-open amendments**: (1) ``sim_embedding_drift`` was listed
-#:   among the similarity leads in error — its builder reads the
-#:   embeddings table directly (``similarity.py`` ``_vec()`` only,
-#:   never ``load_vectors``) and neither it nor its oracle changed in
-#:   r12, so it owes no jump (ADVICE r12); the similarity family
-#:   contributes 13 leads, not 14. (2) Two r13 oracle tightenings add
-#:   leads on queries with r12 rows: ``rel_variant_props`` and
-#:   ``text_chunks_udtf`` (integer-shaped VARCHAR guard /
-#:   boundary-empty-token guard — the driver runs the oracle SQL, so
-#:   an oracle-only change owes a fresh row). (3) The r13
-#:   ``_drain_to_table`` timeout-raise touches all eight drains, but
-#:   it is FAILURE-PATH-ONLY: a drain that finishes returns bitwise-
-#:   identical rows, so a green driver row cannot distinguish the
-#:   change and no jump is owed for it — the five older drains still
-#:   lead for the r12 uuid/NULL-state fixes, while
-#:   ``stream_join_drain``/``stream_enrich_drain``/
-#:   ``stream_dedup_drain`` (fresh r12 rows on the uuid-fixed code)
-#:   stay in place; jumping them would displace the last two r8 rows
-#:   (``text_chunking``, ``etl_upsert_merge``) to a 6-round gap and
-#:   break the 5-round contract, which outranks a zero-information
-#:   jump. Mechanical derivation (28 exception-(a) leads)::
-#:
-#:       python tools/plan_rotation.py --lead rel_sql_exists \
-#:           rel_sql_scalar_subquery rel_sql_not_in rel_grouping_sets \
-#:           stream_tumbling_drain stream_sliding_drain \
-#:           stream_session_drain stream_rollup_drain \
-#:           stream_profiles_drain rel_variant_props text_chunks_udtf \
-#:           mm_resize events_theilsen_trend \
-#:           sim_topk_cosine sim_ann_hyperplane sim_ivf_search \
-#:           sim_ivf_nprobe2 sim_ann_recall sim_ann_recall_nprobe2 \
-#:           dedup_embedding_cosine sim_kmeans sim_embed_quantize \
-#:           sim_embedding_store sim_ivf_kmeans sim_threshold_profile \
-#:           docs_dedup_semantic etl_json_struct etl_events_pipeline
-#:
-#: - **r14 (this window, _EMIT_FIRST)**: the ledger is EMPTY — the r13
-#:   window's 28 leads consumed every exception-(a) debt, and the r13
-#:   diff (oracle text on two queries already IN the r13 window, a
-#:   UDTF oracle guard likewise in-window, the failure-path-only drain
-#:   timeout, and this rotation ledger) leaves no builder refactored
-#:   after its newest driver row. Pure ``python tools/plan_rotation.py``
-#:   staleness order: the 40 r9-green rows + the 10 oldest r10-green
-#:   rows (``text_pii_scrub`` … ``stream_dedup_replay``). After this
-#:   window the oldest driver row in the repo becomes r10.
-#: - **r15/r16 ledger (written at r14)**: THREE oracle-text change
-#:   sets owe exception-(a) leads.
-#:   (1) ``rel_variant_props`` and ``etl_events_pipeline`` (r13 rows):
-#:   the integer-shaped VARCHAR arm's pad class widened from
-#:   ``[\s\x0b]`` to ``[\x00-\x20\x7f]``, the EXACT set Spark's cast
-#:   strips (exhaustive codepoint probe; ADVICE r13 item 1), with a
-#:   regexp-strip before DuckDB's narrower TRY_CAST; control-char
-#:   payloads added to the props-edge fuzz corpus and swept green.
-#:   (2) The ``\x0b`` tokenizer one-sweep widening (ADVICE r13 item
-#:   2): every oracle split site moved from ``'\s+'`` to
-#:   ``'[\s\x0b]+'`` (Java \s and Python re.ASCII \s include
-#:   vertical tab; RE2 \s does not), \x0b joined the fuzz WS_PAD
-#:   pool, and the widened registry swept 222/222 on a \x0b-bearing
-#:   corpus (REHEARSAL_r14_fuzz). 40 oracles changed; 8 sit in the
-#:   r14 window and get their driver row on the new SQL.
-#:   (3) ``dedup_fuzzy_levenshtein`` adopted the BYTE-level distance
-#:   contract (seed-202 fuzz finding) — in the r14 window, row lands
-#:   on the new contract, no debt.
-#:   Scheduling adjudication: 32 out-of-window widening leads + the 2
-#:   JSON-cast leads + the 29 r10-contract rows = 63 > 50, and the
-#:   5-round contract OUTRANKS zero-information jumps (the r13
-#:   drain-timeout precedent; every one of these changes is bitwise
-#:   unobservable on the \x0b-free driver corpus). The r15 window
-#:   therefore takes the 29 r10 rows + the 2 JSON-cast leads + the 19
-#:   STALEST widening leads; the 13 freshest widening leads (r12/r13
-#:   rows — the most recently evidenced) lead r16. Derive both with
-#:   ``python tools/plan_rotation.py --lead ...`` at each round open;
-#:   the split is mechanical: widening leads ordered
-#:   oldest-driver-row-first, first 19 → r15, rest → r16.
-#: - **r15 (this window, _EMIT_FIRST)**: driven exactly per the ledger
-#:   above. Leads (21): ``rel_variant_props`` + ``etl_events_pipeline``
-#:   (JSON-cast pad class ``[\x00-\x20\x7f]``) and the 19 stalest
-#:   \x0b-widening leads — mechanically, ALL 5 r10-row and ALL 14
-#:   r11-row widened oracles (the widened set splits 5/14/4/9 by
-#:   driver round, so "first 19 oldest-first" lands on a clean round
-#:   boundary and needs no tiebreak). Staleness fill: the remaining 24
-#:   r10 rows + the 5 oldest r11 rows. Derivation command pinned in
-#:   ``tests/test_registry_contract.py`` (r15 window test). After this
-#:   window the oldest driver row becomes r11.
-#: - **r16 ledger (written at r14, intact)**: the 13 freshest
-#:   \x0b-widening leads — the 4 r12-row oracles
-#:   (``dedup_cluster_sizes``, ``docs_bm25_topk``,
-#:   ``docs_dedup_passages``, ``docs_source_divergence``) and the 9
-#:   r13-row oracles (``dedup_components``, ``dedup_fuzzy_levenshtein``,
-#:   ``dedup_simhash``, ``dedup_simhash_pairs``, ``text_chunking``,
-#:   ``text_chunks_udtf``, ``text_decontaminate``, ``text_lang_id``,
-#:   ``text_quality_score``) — lead the r16 window; no other
-#:   exception-(a) debt is outstanding as of the r15 edit.
-#: - **r16 (this window, _EMIT_FIRST)**: driven exactly per the r16
-#:   ledger above — the 13 widening leads in ledger order, then the
-#:   pure staleness fill (26 r11-green rows + the 11 oldest r12-green
-#:   rows). Derivation command pinned in
-#:   ``tests/test_registry_contract.py`` (r16 window test). After this
-#:   window the oldest driver row becomes r12.
-#: - **r17 ledger (written at r16)**: every query whose builder or a
-#:   shared helper under it is refactored by the r16 optimization diff
-#:   owes an exception-(a) lead at the next window open — derive the
-#:   exact set from the r16 commit log (``git log --oneline
-#:   3b11122..``) against each query's newest driver row, e.g. the
-#:   IVF shared-fold family (``sim_ivf_search``, ``sim_ivf_nprobe2``,
-#:   ``sim_ann_recall``, ``sim_ann_recall_nprobe2``) refactored after
-#:   their r15 rows.
-#:
-#: Two standing exceptions to strict age order: (a) a query whose
-#: builder (or a shared helper under it) was refactored since its last
-#: driver row jumps to the next window regardless of age; (b) a cohort
-#: may be reordered within its window to front-load the least-trivial
-#: plans (graph / recurrence / streaming) so a mid-window driver failure
-#: still lands the hard evidence first.
-_EMIT_FIRST = (
-    # --- r16 window: ``python tools/plan_rotation.py --lead ...`` with
-    # the 13 exception-(a) leads from the r16 ledger above (the 4
-    # r12-row + 9 r13-row \x0b-widened oracles). The staleness fill
-    # then takes the 26 remaining r11-green rows and the 11 oldest
-    # r12-green rows. After this window the oldest driver row
-    # becomes r12 and no exception-(a) debt is outstanding. ---
-    "dedup_cluster_sizes",  # r12
-    "docs_bm25_topk",  # r12
-    "docs_dedup_passages",  # r12
-    "docs_source_divergence",  # r12
-    "dedup_components",  # r13
-    "dedup_fuzzy_levenshtein",  # r13
-    "dedup_simhash",  # r13
-    "dedup_simhash_pairs",  # r13
-    "text_chunking",  # r13
-    "text_chunks_udtf",  # r13
-    "text_decontaminate",  # r13
-    "text_lang_id",  # r13
-    "text_quality_score",  # r13
-    "mm_frame_dedup",  # r11
-    "sim_embedding_drift",  # r11
-    "text_lang_stats_pandas",  # r11
-    "text_lang_id_ngram",  # r11
-    "events_interarrival",  # r11
-    "events_burst_users",  # r11
-    "events_lateness_audit",  # r11
-    "events_holt_forecast",  # r11
-    "events_holt_backtest",  # r11
-    "events_markov_stationary",  # r11
-    "events_segment_bitmask",  # r11
-    "events_survival_curve",  # r11
-    "events_activity_streaks",  # r11
-    "events_user_diversity",  # r11
-    "events_new_vs_returning",  # r11
-    "events_conversion_lag",  # r11
-    "text_train_test_split",  # r11
-    "q12_priority_lines",  # r11
-    "q14_promo_revenue",  # r11
-    "q18_large_orders",  # r11
-    "rel_ship_lag",  # r11
-    "rel_order_backlog",  # r11
-    "rel_benford_deviation",  # r11
-    "rel_budget_allocation",  # r11
-    "rel_snapshot_reconcile",  # r11
-    "src_orc_roundtrip",  # r11
-    "graph_pagerank_suppliers",  # r12
-    "graph_triangles",  # r12
-    "graph_clustering_coeff",  # r12
-    "graph_kcore",  # r12
-    "graph_reachability",  # r12
-    "mm_phash_buckets",  # r12
-    "mm_payload_impurity",  # r12
-    "dq_audit",  # r12
-    "events_chi2_independence",  # r12
-    "sim_ivf_quantized_rerank",  # r12
-    "sim_embedding_clusters",  # r12
-)
-
-_EMIT_LAST = (
-    # --- everything not in the r16 window, strictly
-    # oldest-driver-row-first (registration order as the tiebreak):
-    # the r12 remainder (33 rows), then the r13/r14/r15 windows; the
-    # r15 window (freshest rows in the repo) sits at the very end. ---
-    "events_gap_fill_lerp",  # r12
-    "events_incremental_rollup",  # r12
-    "events_autocorr",  # r12
-    "events_anomaly_rolling",  # r12
-    "events_attribution",  # r12
-    "events_transition_matrix",  # r12
-    "events_top_paths",  # r12
-    "events_seasonality",  # r12
-    "events_cumulative_reach",  # r12
-    "events_audience_overlap",  # r12
-    "events_mad_outliers",  # r12
-    "events_active_users",  # r12
-    "events_rolling_median",  # r12
-    "events_cusum_drift",  # r12
-    "events_ewma",  # r12
-    "events_funnel_windowed",  # r12
-    "events_value_winsorized",  # r12
-    "docs_cap_per_source",  # r12
-    "events_delete_propagation",  # r12
-    "rel_asof_nearest",  # r12
-    "rel_basket_rules",  # r12
-    "rel_pareto_customers",  # r12
-    "rel_gini_revenue",  # r12
-    "rel_recursive_month_spine",  # r12
-    "rel_lateral_topn",  # r12
-    "rel_like_filter",  # r12
-    "rel_supplier_hhi",  # r12
-    "src_python_datasource",  # r12
-    "stream_pysource_drain",  # r12
-    "stream_upsert_drain",  # r12
-    "stream_dedup_drain",  # r12
-    "stream_join_drain",  # r12
-    "stream_enrich_drain",  # r12
-    "dedup_exact",  # r13
-    "mm_decode_features",  # r13
-    "mm_frame_sample",  # r13
-    "mm_resize",  # r13
-    "sim_topk_cosine",  # r13
-    "sim_ann_hyperplane",  # r13
-    "sim_ivf_search",  # r13
-    "sim_ivf_nprobe2",  # r13
-    "sim_ann_recall",  # r13
-    "sim_ann_recall_nprobe2",  # r13
-    "dedup_embedding_cosine",  # r13
-    "sim_kmeans",  # r13
-    "sim_embed_quantize",  # r13
-    "sim_embedding_store",  # r13
-    "sim_ivf_kmeans",  # r13
-    "sim_threshold_profile",  # r13
-    "docs_dedup_semantic",  # r13
-    "events_theilsen_trend",  # r13
-    "etl_upsert_merge",  # r13
-    "q1_pricing_summary",  # r13
-    "q6_forecast_revenue",  # r13
-    "q3_top_orders",  # r13
-    "q5_region_revenue",  # r13
-    "rel_agg_stats",  # r13
-    "rel_window_rank",  # r13
-    "rel_window_running",  # r13
-    "rel_window_frame",  # r13
-    "rel_sql_exists",  # r13
-    "rel_sql_scalar_subquery",  # r13
-    "rel_sql_not_in",  # r13
-    "etl_json_struct",  # r13
-    "rel_grouping_sets",  # r13
-    "rel_rfm_segmentation",  # r13
-    "rel_calendar_spine",  # r13
-    "stream_tumbling_drain",  # r13
-    "stream_profiles_drain",  # r13
-    "stream_rollup_drain",  # r13
-    "stream_sliding_drain",  # r13
-    "stream_session_drain",  # r13
-    "dedup_ngram_jaccard",  # r14
-    "docs_dedup_corpus",  # r14
-    "docs_dedup_incremental",  # r14
-    "dedup_containment",  # r14
-    "profile_orders",  # r14
-    "text_rare_bigram_ratio",  # r14
-    "text_repetition_score",  # r14
-    "text_pii_scrub",  # r14
-    "docs_pack_sequences_sharded",  # r14
-    "text_stratified_sample",  # r14
-    "events_zscore",  # r14
-    "docs_mixture_sample",  # r14
-    "events_funnel",  # r14
-    "events_cohort_retention",  # r14
-    "docs_curation_pipeline",  # r14
-    "rel_filter_isin",  # r14
-    "rel_filter_nested_struct",  # r14
-    "rel_filter_null",  # r14
-    "rel_project_ops",  # r14
-    "rel_rename_upper",  # r14
-    "rel_join_inner_2key",  # r14
-    "rel_join_left",  # r14
-    "rel_join_semi",  # r14
-    "rel_join_anti",  # r14
-    "rel_join_full",  # r14
-    "rel_join_cross",  # r14
-    "rel_union_dedup",  # r14
-    "rel_dedup_keyed",  # r14
-    "rel_rollup",  # r14
-    "rel_cube",  # r14
-    "rel_pivot",  # r14
-    "rel_sort_limit",  # r14
-    "rel_range_join",  # r14
-    "rel_asof_join",  # r14
-    "rel_percentiles",  # r14
-    "q13_customer_distribution",  # r14
-    "rel_window_analytics",  # r14
-    "q19_disjunctive_filter",  # r14
-    "rel_set_ops",  # r14
-    "q4_order_priority",  # r14
-    "q7_nation_volume",  # r14
-    "q8_market_share",  # r14
-    "q10_returned_items",  # r14
-    "q15_top_supplier",  # r14
-    "q17_small_quantity",  # r14
-    "q22_dormant_customers",  # r14
-    "rel_scd2_history",  # r14
-    "rel_unpivot",  # r14
-    "rel_higher_order_funcs",  # r14
-    "stream_dedup_replay",  # r14
-    "rel_variant_props",  # r15
-    "etl_events_pipeline",  # r15
-    "dedup_components_star",  # r15
-    "docs_split_leakage_safe",  # r15
-    "docs_tfidf_topk",  # r15
-    "text_pmi_bigrams",  # r15
-    "text_repetition_filter",  # r15
-    "dedup_containment_onesided",  # r15
-    "dedup_minhash_calibration",  # r15
-    "dedup_minhash_lsh",  # r15
-    "dedup_threshold_sweep",  # r15
-    "docs_dedup_store",  # r15
-    "docs_length_histogram",  # r15
-    "docs_novelty_curve",  # r15
-    "docs_pack_sequences",  # r15
-    "docs_shingle_profile",  # r15
-    "text_bpe_token_count",  # r15
-    "text_fingerprint",  # r15
-    "text_token_stats",  # r15
-    "text_tokenizer_fertility",  # r15
-    "text_vocab_topk",  # r15
-    "events_skew_salted_agg",  # r15
-    "events_skew_salted_join",  # r15
-    "rel_partition_prune",  # r15
-    "stream_tumbling_counts",  # r15
-    "stream_sliding_counts",  # r15
-    "stream_session_windows",  # r15
-    "stream_time_rollup",  # r15
-    "stream_interval_join",  # r15
-    "events_gap_fill",  # r15
-    "events_sessionize",  # r15
-    "events_period_over_period",  # r15
-    "events_value_deciles",  # r15
-    "events_heavy_hitters",  # r15
-    "rel_window_range_time",  # r15
-    "rel_corr_stats",  # r15
-    "events_feature_assembly",  # r15
-    "mm_audio_window",  # r15
-    "text_normalize",  # r15
-    "docs_shard_shuffle",  # r15
-    "docs_token_budget_select",  # r15
-    "q2_min_cost_supplier",  # r15
-    "q9_product_profit",  # r15
-    "q11_important_stock",  # r15
-    "q16_parts_suppliers",  # r15
-    "q20_potential_promotion",  # r15
-    "q21_waiting_supplier",  # r15
-    "events_rolling_features",  # r15
-    "events_user_sequences",  # r15
-    "events_weighted_sample",  # r15
-)
-
-
-def _ordered_names() -> list[str]:
-    first = [n for n in _EMIT_FIRST if n in REGISTRY]
-    last = [n for n in _EMIT_LAST if n in REGISTRY]
-    pinned = set(first) | set(last)
-    middle = [n for n in REGISTRY if n not in pinned]
-    return first + middle + last
-
-
 def queries() -> dict[str, Builder]:
     load_all()
-    return {name: REGISTRY[name].builder for name in _ordered_names()}
+    return {name: spec.builder for name, spec in REGISTRY.items()}
 
 
 def oracles() -> dict[str, str]:
     load_all()
     return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
+        name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None
     }

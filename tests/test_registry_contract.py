@@ -1,8 +1,8 @@
-"""Registry contract: the driver-facing surface can't silently rot.
+"""Registry contract: the entry-point surface can't silently rot.
 
-The external correctness gate samples a PREFIX of ``queries()`` — a
-typo in the curated emission lists would silently drop a query out of
-verification, so the lists themselves are tested.
+``queries()`` and ``oracles()`` expose every registered query in
+registration order, each with a DuckDB oracle; the scripts and docs
+that name registry queries are checked against the registry itself.
 """
 
 from __future__ import annotations
@@ -11,29 +11,6 @@ from spark_etl_pipeline_spark.plans import registry
 from tests.conftest import SF_CORRECTNESS
 
 registry.load_all()
-
-DRIVER_WINDOW = 50
-
-
-def test_emission_lists_name_real_queries():
-    for name in registry._EMIT_FIRST + registry._EMIT_LAST:
-        assert name in registry.REGISTRY, f"emission list names unknown query {name!r}"
-
-
-def test_emission_lists_are_disjoint():
-    overlap = set(registry._EMIT_FIRST) & set(registry._EMIT_LAST)
-    assert not overlap, f"queries in both emission lists: {overlap}"
-
-
-def test_ordered_names_is_a_permutation_of_registry():
-    names = registry._ordered_names()
-    assert sorted(names) == sorted(registry.REGISTRY)
-
-
-def test_priority_queries_fit_in_driver_window():
-    names = registry._ordered_names()
-    missing = set(registry._EMIT_FIRST) - set(names[:DRIVER_WINDOW])
-    assert not missing, f"priority queries clipped from the driver window: {missing}"
 
 
 def test_every_query_has_an_oracle():
@@ -44,6 +21,12 @@ def test_every_query_has_an_oracle():
 
 def test_queries_and_oracles_expose_same_names():
     assert list(registry.queries()) == list(registry.oracles())
+
+
+def test_queries_and_oracles_follow_registration_order():
+    names = list(registry.REGISTRY)
+    assert list(registry.queries()) == list(registry.oracles()) == names
+    assert len(names) == 222
 
 
 def test_register_views_enables_raw_sql(spark, duck):
@@ -196,131 +179,6 @@ def test_json_string_cast_oracles_carry_integer_shape_guard():
         if s.oracle and "json_extract_string" in s.oracle and "'VARCHAR'" in s.oracle
     ]
     assert {"rel_variant_props", "etl_events_pipeline"} <= set(guarded)
-
-
-def test_r15_window_discharges_the_written_ledger():
-    """The r15 rotation window (VERDICT r14 task 1) is pinned here so a
-    hand-edit can't drift from the mechanical derivation: the 21
-    exception-(a) leads from the r15/r16 ledger lead the window in
-    order, every \\x0b-widened oracle whose latest driver row is r10 or
-    r11 is IN the window (that's the "19 stalest" — the widened set
-    splits 5/14/4/9 across r10/r11/r12/r13 rows), the 13 freshest
-    widening leads are NOT (they lead r16), and the full 5-round
-    staleness contract holds: no query's latest driver row may be
-    older than 5 rounds behind once this window lands (oldest row
-    becomes r11 at r15+1 vs the contract floor of r16-5=r11)."""
-    import glob
-    import json
-    import re
-
-    latest = {}
-    for f in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", f).group(1))
-        for q, res in json.load(open(f)).items():
-            if isinstance(res, dict) and res.get("rows_match"):
-                latest[q] = rnd
-    if max(latest.values(), default=0) != 14:
-        return  # window already consumed by a later driver round
-
-    window = list(registry._EMIT_FIRST)
-    leads = [
-        "rel_variant_props",
-        "etl_events_pipeline",
-        # 19 stalest \x0b-widening leads: all r10-row + all r11-row
-        # widened oracles, oldest-driver-row-first
-        "dedup_components_star",
-        "docs_split_leakage_safe",
-        "docs_tfidf_topk",
-        "text_pmi_bigrams",
-        "text_repetition_filter",
-        "dedup_containment_onesided",
-        "dedup_minhash_calibration",
-        "dedup_minhash_lsh",
-        "dedup_threshold_sweep",
-        "docs_dedup_store",
-        "docs_length_histogram",
-        "docs_novelty_curve",
-        "docs_pack_sequences",
-        "docs_shingle_profile",
-        "text_bpe_token_count",
-        "text_fingerprint",
-        "text_token_stats",
-        "text_tokenizer_fertility",
-        "text_vocab_topk",
-    ]
-    assert window[: len(leads)] == leads
-
-    widened = {
-        n for n, s in registry.REGISTRY.items() if s.oracle and r"\x0b" in s.oracle
-    }
-    assert len(widened) == 40, len(widened)
-    stale = {n for n in widened if latest.get(n, 0) <= 11}
-    fresh = widened - stale
-    assert len(stale) == 19 and stale <= set(window)
-    assert len(fresh) == 21  # 8 r14-row (evidenced) + 13 r16-ledger leads
-    r16_leads = {n for n in fresh if latest[n] <= 13}
-    assert len(r16_leads) == 13 and not (r16_leads & set(window))
-
-    # 5-round contract: everything with an r10-or-older row is in-window
-    overdue = {n for n in latest if latest[n] <= 10}
-    assert overdue <= set(window), overdue - set(window)
-
-
-def test_r16_window_discharges_the_written_ledger():
-    """The r16 rotation window is pinned here so a hand-edit can't
-    drift from the mechanical derivation (``python
-    tools/plan_rotation.py --lead <the 13 r16-ledger names>``): the 13
-    exception-(a) widening leads from the r16 ledger (the 4 r12-row +
-    9 r13-row \\x0b-widened oracles) lead the window in ledger order,
-    the staleness fill is exactly every r11-green row plus the oldest
-    r12-green rows, and the 5-round contract holds (oldest row becomes
-    r12 at r16+1 vs the contract floor of r17-5=r12)."""
-    import glob
-    import json
-    import re
-
-    latest = {}
-    for f in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", f).group(1))
-        for q, res in json.load(open(f)).items():
-            if isinstance(res, dict) and res.get("rows_match"):
-                latest[q] = rnd
-    if max(latest.values(), default=0) != 15:
-        return  # window already consumed by a later driver round
-
-    window = list(registry._EMIT_FIRST)
-    leads = [
-        "dedup_cluster_sizes",
-        "docs_bm25_topk",
-        "docs_dedup_passages",
-        "docs_source_divergence",
-        "dedup_components",
-        "dedup_fuzzy_levenshtein",
-        "dedup_simhash",
-        "dedup_simhash_pairs",
-        "text_chunking",
-        "text_chunks_udtf",
-        "text_decontaminate",
-        "text_lang_id",
-        "text_quality_score",
-    ]
-    assert window[: len(leads)] == leads
-    # the leads ARE the r16 ledger: every \x0b-widened oracle whose
-    # newest driver row is r12 or r13
-    widened = {
-        n for n, s in registry.REGISTRY.items() if s.oracle and r"\x0b" in s.oracle
-    }
-    assert {n for n in widened if latest.get(n, 0) in (12, 13)} == set(leads)
-
-    # staleness fill: ALL r11 rows are in-window, and no row newer than
-    # r12 rides along (the window is leads + r11 + oldest-r12 only)
-    r11 = {n for n in latest if latest[n] == 11}
-    assert r11 <= set(window)
-    assert all(latest[n] <= 13 for n in window)
-
-    # 5-round contract: everything with an r11-or-older row is in-window
-    overdue = {n for n in latest if latest[n] <= 11}
-    assert overdue <= set(window), overdue - set(window)
 
 
 def test_table_plan_memo_eviction_and_unfingerprintable(spark, tmp_path):

@@ -32,9 +32,7 @@ def main() -> int:
     from spark_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("capture_plans")
-    sf_dir = args.sf_dir
-    if os.environ.get("SPARK_GRAFT_BENCH_MULTIFILE", "1") != "0":
-        sf_dir = bench._multifile_copy(spark, sf_dir)
+    sf_dir = bench._multifile_copy(spark, args.sf_dir)
 
     qs = registry.queries()
     names = args.names or [n for n in bench.HEADLINE if n in qs]

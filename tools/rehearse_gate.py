@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Rehearse the driver's correctness gate on a BARE SparkSession.
 
-The round driver builds its own session (no engine session factory), runs
-the first ~50 registry queries next to their DuckDB oracles at sf0.01, and
-compares row count + schema + string-rendered values. The pytest parity
+An external gate builds its own session (no engine session factory), runs
+the first ``--window`` registry queries (in registration order) next to
+their DuckDB oracles at sf0.01, and compares row count + schema +
+string-rendered values. The pytest parity
 suite covers the same comparison but through ``get_spark()`` — which
 pre-sets confs (``nanosAsLong``) that ``registry.table()`` must otherwise
 set AT RUNTIME on the driver's session. This script closes that gap: same
