@@ -10,6 +10,13 @@ The defaults are tuned for ``local[N]`` testing but every knob is the one
 you would also set on a real cluster: AQE handles skew/coalesce at runtime,
 Arrow accelerates every pandas-UDF exchange, and the session timezone is
 pinned to UTC so timestamp semantics don't depend on the host.
+
+One default is local-only: a driver JVM that ``get_spark`` launches on a
+``local[...]`` master runs with C1 only (``LOCAL_DRIVER_JAVA_OPTIONS``),
+because there the JIT compiler, not the operator kernels, is the largest
+CPU cost of a short run. Cluster masters never get it, so executors keep
+C2. Two sources of stderr noise are off in every session: the console
+progress bar and the per-drain ``ResolveWriteToStream`` AQE warning.
 """
 
 from __future__ import annotations
@@ -17,6 +24,26 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: JIT policy for a driver JVM that ``get_spark`` launches in local mode:
+#: C1 only. In ``local[N]`` the driver JVM is also the executor, and a
+#: short engine run spends more CPU compiling than computing — by the end
+#: of the first job HotSpot's tiered compiler has used ~11 s of compile
+#: time inside ~9 s of JVM uptime, most of it C2, against ~2 s with C1
+#: only. C1 code runs slower once warm: after two minutes of repeated
+#: work, C2 needs 27–36 % less CPU and latency per operation (BASELINE.md,
+#: "driver JIT policy"). So the policy suits short runs (one job, one
+#: batch of queries); a long-lived local session can restore tiered C2
+#: through ``extra_conf`` (see ``get_spark``).
+LOCAL_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+
+#: Logs "spark.sql.adaptive.enabled is not supported in streaming" at
+#: WARN on every streaming drain, because AQE is on in every session here.
+#: Spark just runs the stream without AQE, so the line is noise; this one
+#: logger is raised to ERROR, the root level stays WARN.
+_STREAMING_AQE_LOGGER = (
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"
+)
 
 
 def default_parallelism() -> int:
@@ -100,10 +127,19 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults.
 
     Unlike the reference (which only applies config in "local dev" mode,
-    ``dependencies/spark.py:62-85``), every config here is applied
-    unconditionally — cluster submit scripts can still override any of it
-    with ``--conf``, which takes precedence over builder defaults only when
-    the session already exists.
+    ``dependencies/spark.py:62-85``), every config here but the JIT
+    policy below is applied unconditionally — cluster submit scripts can
+    still override any of it with ``--conf``, which takes precedence over
+    builder defaults only when the session already exists.
+
+    Only when the resolved master is ``local[...]`` (the default
+    ``local[N]`` or a ``master="local..."`` argument) does the driver JVM
+    get ``LOCAL_DRIVER_JAVA_OPTIONS`` (C1-only JIT). It goes through
+    ``spark.driver.defaultJavaOptions`` rather than ``extraJavaOptions``
+    so a caller's ``extraJavaOptions`` are appended, not replaced, and it
+    is set before ``extra_conf`` so a caller can override it there (e.g.
+    ``{"spark.driver.defaultJavaOptions": ""}`` restores tiered C2). When
+    a JVM already exists (spark-submit, a second call) it is a no-op.
     """
     cpus = default_parallelism()
     builder = (
@@ -125,13 +161,20 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
     )
+    if master is None and not _cluster_master_configured():
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif not _cluster_master_configured():
-        builder = builder.master(f"local[{cpus}]")
+        if master.startswith("local"):
+            builder = builder.config(
+                "spark.driver.defaultJavaOptions", LOCAL_DRIVER_JAVA_OPTIONS
+            )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    log4j = spark._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(_STREAMING_AQE_LOGGER, log4j.Level.ERROR)
     return spark
