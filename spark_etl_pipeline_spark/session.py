@@ -14,9 +14,11 @@ pinned to UTC so timestamp semantics don't depend on the host.
 One default is local-only: a driver JVM that ``get_spark`` launches on a
 ``local[...]`` master runs with C1 only (``LOCAL_DRIVER_JAVA_OPTIONS``),
 because there the JIT compiler, not the operator kernels, is the largest
-CPU cost of a short run. Cluster masters never get it, so executors keep
-C2. Two sources of stderr noise are off in every session: the console
-progress bar and the per-drain ``ResolveWriteToStream`` AQE warning.
+CPU cost of a short run; a run of more than about half a minute is
+slower with it. Cluster masters and ``spark-submit`` never get it, so
+executors and submitted jobs keep C2. Two sources of stderr noise are
+off in every session: the console progress bar and the per-drain
+``ResolveWriteToStream`` AQE warning.
 """
 
 from __future__ import annotations
@@ -27,14 +29,19 @@ from pyspark.sql import SparkSession
 
 #: JIT policy for a driver JVM that ``get_spark`` launches in local mode:
 #: C1 only. In ``local[N]`` the driver JVM is also the executor, and a
-#: short engine run spends more CPU compiling than computing — by the end
-#: of the first job HotSpot's tiered compiler has used ~11 s of compile
-#: time inside ~9 s of JVM uptime, most of it C2, against ~2 s with C1
-#: only. C1 code runs slower once warm: after two minutes of repeated
-#: work, C2 needs 27–36 % less CPU and latency per operation (BASELINE.md,
-#: "driver JIT policy"). So the policy suits short runs (one job, one
-#: batch of queries); a long-lived local session can restore tiered C2
-#: through ``extra_conf`` (see ``get_spark``).
+#: short run spends more CPU compiling than computing: by the end of the
+#: first job HotSpot's tiered compiler has used ~11 s of compile time in
+#: ~9 s of JVM uptime, most of it C2, against ~2 s with C1 only. C1 code
+#: is slower once warm, so the policy pays only while the JVM is young.
+#: Measured on a 4-vCPU host (BASELINE.md, "driver JIT policy"): a
+#: ``python jobs/*.py`` run of 11-25 s uses 27-54 % less CPU, but a
+#: clickstream job over 1.5 M log rows (~40 s with C2) takes ~45 % more
+#: time and ~40 % more CPU, and two-minute benchmark runs and the
+#: 20-minute test session are slower too. Only a process that starts
+#: Spark from plain ``python`` on a local master gets it:
+#: ``spark-submit`` launches the JVM before ``get_spark`` runs, so a
+#: submitted job keeps tiered C2 on any master. A long-lived local
+#: session restores tiered C2 through ``extra_conf`` (see ``get_spark``).
 LOCAL_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 #: Logs "spark.sql.adaptive.enabled is not supported in streaming" at

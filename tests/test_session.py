@@ -7,7 +7,11 @@ import pytest
 from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
-from spark_etl_pipeline_spark.session import LOCAL_DRIVER_JAVA_OPTIONS, get_spark
+from spark_etl_pipeline_spark.session import (
+    _STREAMING_AQE_LOGGER,
+    LOCAL_DRIVER_JAVA_OPTIONS,
+    get_spark,
+)
 
 _JAVA_OPTS = "spark.driver.defaultJavaOptions"
 
@@ -69,7 +73,12 @@ def test_console_progress_bar_off(spark):
 
 
 def test_streaming_aqe_warning_silenced_root_stays_warn(spark):
-    log_manager = spark._jvm.org.apache.logging.log4j.LogManager
-    name = "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"
+    # log4j makes a logger for any string, so first pin the name to the
+    # class that logs the warning: a typo or a moved class fails here
+    # instead of silently raising a logger nothing writes to.
+    jvm = spark._jvm
+    name = jvm.java.lang.Class.forName(_STREAMING_AQE_LOGGER).getName()
+    log_manager = jvm.org.apache.logging.log4j.LogManager
+    assert not log_manager.getLogger(name).isWarnEnabled()
     assert log_manager.getLogger(name).getLevel().toString() == "ERROR"
     assert log_manager.getRootLogger().getLevel().toString() == "WARN"
