@@ -453,7 +453,7 @@ def _ivf_topk(
     # centroid table; Catalyst does not CSE across the cell join's
     # branches, so the un-shared form re-scanned the corpus and re-ran
     # the collect_list aggregate (+ its Exchange) once per side —
-    # plans/r16/sim_ivf_search_before.txt nodes (5)-(12) vs (20)-(27)
+    # 0dc33e4:plans/r16/sim_ivf_search_before.txt nodes (5)-(12) vs (20)-(27)
     # are byte-identical subtrees. One LAZY localCheckpoint of the
     # single-row fold materializes it inside the consuming action and
     # both broadcasts read the persisted row (guide §2.4; the r15

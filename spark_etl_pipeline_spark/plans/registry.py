@@ -171,7 +171,7 @@ def _unified_directory_schema(path: str, nanos: list[str]):
 
     Cost model: one metadata-only footer read per file, driver-side —
     O(files), with an ADAPTIVE fan-out (measured at 10k/50k staged part
-    files, `tools/footer_sniff_bench.py`, numbers in BASELINE.md): a
+    files, BASELINE.md "Round-9 footer-union sniff"): a
     warm local footer costs ~0.07–0.2 ms of mostly GIL-held parse, so a
     thread pool only adds contention there (measured 2.5–7× SLOWER
     pooled than sequential — sequential 10k files ≈ 0.8 s, well inside

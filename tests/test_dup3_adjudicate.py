@@ -6,7 +6,7 @@ composed ``dup3 -> drift_widen`` sweep is rerun-unstable (20–23
 divergers depending on which two-pass-tie-flaky oracles land), so a
 bare count can neither pass nor fail a rerun mechanically. These pins
 freeze the expected set and the adjudication rules against the r12
-recorded artifacts and synthetic drift cases.
+recorded sweeps (``tests/dup3_sweeps.json``) and synthetic drift cases.
 """
 
 from __future__ import annotations
@@ -98,10 +98,9 @@ def test_core_query_agreeing_fails():
 def test_r12_recorded_artifacts_adjudicate_clean(key, sweep):
     """The r12 recorded sweeps are the calibration evidence: both must
     adjudicate clean mechanically (plain = exact core 20; composed =
-    core + all three tie-flaky landed that run)."""
-    path = Path(__file__).resolve().parents[1] / "REHEARSAL_r12_hostile.json"
-    if not path.exists():
-        pytest.skip("REHEARSAL_r12_hostile.json not present")
-    artifact = json.loads(path.read_text())
+    core + all three tie-flaky landed that run). ``dup3_sweeps.json``
+    holds both sweeps verbatim from ``0dc33e4:REHEARSAL_r12_hostile.json``."""
+    sweeps = Path(__file__).parent / "dup3_sweeps.json"
+    artifact = json.loads(sweeps.read_text())
     out = d3.adjudicate(artifact[key], sweep)
     assert out["clean"] is True, out

@@ -528,7 +528,7 @@ def test_agrees_with_oracle_on_hot_keys(spark, skew_dir, skew_duck, name):
 #: and the repetition filter silently dropping the single-token doc
 #: from its verdict (the total-verdict contract fix). Each pinned row
 #: is one of those fixes. The full 222-query giant sweep is green on
-#: r15 code (``REHEARSAL_r15_hostile.json: giant_sf0_01`` — the first
+#: r15 code (``0dc33e4:REHEARSAL_r15_hostile.json: giant_sf0_01`` — the first
 #: full-width record for this mode; earlier rounds ran it
 #: subset-pinned only).
 GIANT_QUERIES = (
@@ -638,7 +638,7 @@ def test_negative_zero_group_key_divergence_pinned(spark, tmp_path):
 #: engine's fix is ``mergeSchema`` on directory reads
 #: (``plans/registry.py: table``), mirrored on the oracle side by
 #: DuckDB ``union_by_name``; the full 222-query drift sweep is green
-#: (``REHEARSAL_r15_hostile.json: drift_sf0_01`` on current code;
+#: (``0dc33e4:REHEARSAL_r15_hostile.json: drift_sf0_01`` on current code;
 #: first recorded r8). Each pinned query
 #: aggregates or filters directly over a drift-dropped column
 #: (l_tax / o_orderpriority / c_mktsegment / props / lang / label),
@@ -721,7 +721,7 @@ def test_agrees_with_oracle_on_schema_drift(spark, drift_dir, drift_duck, name):
 #: schema; ``plans/registry.py: _unified_directory_schema``) and the
 #: oracle mirrors it with DuckDB ``union_by_name``'s native
 #: promotion. The full 222-query widen sweep is green
-#: (``REHEARSAL_r15_hostile.json: widen_sf0_01`` on current code;
+#: (``0dc33e4:REHEARSAL_r15_hostile.json: widen_sf0_01`` on current code;
 #: first recorded r8); each pinned query
 #: aggregates over a narrowed column, so a regression to mergeSchema
 #: (or a promotion disagreement between engines) fails here.
@@ -980,7 +980,7 @@ def test_timestamp_unit_drift_reads_and_nanos_mix_is_a_loud_boundary(
 #: defenses fire together: the hot user's giant window partition now
 #: CONTAINS hostile instants, so the epoch gates, the watermark guard,
 #: and the salted/hot-key paths all act on the same rows. The full
-#: 222-query sweep is recorded in ``REHEARSAL_r09_hostile.json``
+#: 222-query sweep is recorded in ``0dc33e4:REHEARSAL_r09_hostile.json``
 #: (``times_then_skew_sf0_01``); these pin the families where the two
 #: damage classes genuinely interact (gated grids over a hot key,
 #: watermarked drains over a hot user, the gated ETL over damaged hot
@@ -1072,7 +1072,7 @@ def test_agrees_with_oracle_on_times_then_skew(
 #: repetition contract) and the hot-source paths (per-source caps,
 #: source divergence, mixture sampling) act on the same rows. Full
 #: sweep 222/222 green
-#: (``REHEARSAL_r09_hostile.json: giant_then_skew_sf0_01``); pins below
+#: (``0dc33e4:REHEARSAL_r09_hostile.json: giant_then_skew_sf0_01``); pins below
 #: cover the families where the megabyte cell rides the dominant group.
 GIANT_SKEW_QUERIES = (
     "docs_cap_per_source",       # cap sampling inside the giant-carrying source
@@ -1144,7 +1144,7 @@ def test_agrees_with_oracle_on_giant_then_skew(
 #: the 1,060-row hot user at sf0.01), so the TRY_CAST cents folds, the
 #: salted two-phase aggregation, and the robust-statistics paths all
 #: handle non-finite cells inside the dominant group. Full sweep
-#: 222/222 green (``REHEARSAL_r09_hostile.json:
+#: 222/222 green (``0dc33e4:REHEARSAL_r09_hostile.json:
 #: floats_then_skew_sf0_01``); pins cover the families where NaN
 #: handling and hot-key handling genuinely share rows.
 FLOATS_SKEW_QUERIES = (
@@ -1208,7 +1208,7 @@ def test_agrees_with_oracle_on_floats_then_skew(
 #: gates + watermark guard on the hot key) in the SAME staged corpus,
 #: so any defense that keyed off "clean elsewhere" state would fail
 #: here. Full sweep 222/222 green on first run
-#: (``REHEARSAL_r10_hostile.json: unicode_times_skew_sf0_01``).
+#: (``0dc33e4:REHEARSAL_r10_hostile.json: unicode_times_skew_sf0_01``).
 UNICODE_TIMES_SKEW_QUERIES = (
     "docs_cap_per_source",     # cap sampling over the damaged hot source
     "docs_source_divergence",  # per-source token stats with unicode on src0
@@ -1310,7 +1310,7 @@ def test_agrees_with_oracle_on_unicode_times_skew(
 #: FIT the narrow types to the wide generation — exactly what a real
 #: old-era writer implies (it could never have written a value outside
 #: its column type's range). Full 222-query sweep recorded in
-#: ``REHEARSAL_r11_hostile.json`` (``skew_then_widen_sf0_01``); these
+#: ``0dc33e4:REHEARSAL_r11_hostile.json`` (``skew_then_widen_sf0_01``); these
 #: pin the families where promotion and the hot key genuinely
 #: interact.
 SKEW_WIDEN_QUERIES = (
@@ -1404,7 +1404,7 @@ def test_agrees_with_oracle_on_skew_then_widen(
 #: recursion-bounded month spine, and the watermark guard act on rows
 #: served through the promoted footer-union read, with the hostile
 #: instants measurably INSIDE the narrow-typed old generation. Full
-#: 222-query sweep: ``REHEARSAL_r11_hostile.json``
+#: 222-query sweep: ``0dc33e4:REHEARSAL_r11_hostile.json``
 #: (``times_then_widen_sf0_01``, green first run).
 TIMES_WIDEN_QUERIES = (
     "events_gap_fill",            # epoch-gated spine over promoted value
@@ -1504,7 +1504,7 @@ def test_agrees_with_oracle_on_times_then_widen(
 #: unstageable). ``embeddings.label`` is the same-column cross: DROPPED
 #: in one generation and SMALLINT-narrowed in another, so the footer
 #: union must null-fill and type-promote ONE column simultaneously.
-#: Full 222-query sweep: ``REHEARSAL_r12_hostile.json``
+#: Full 222-query sweep: ``0dc33e4:REHEARSAL_r12_hostile.json``
 #: (``drift_then_widen_sf0_01``).
 DRIFT_WIDEN_QUERIES = (
     "q1_pricing_summary",    # null-filled l_tax + float-promoted l_quantity
@@ -1609,7 +1609,7 @@ def test_agrees_with_oracle_on_drift_then_widen(
 #: directory, so the epoch gates, the watermark guard, the salted /
 #: hot-key paths, the null-filled dropped column, and the promoted
 #: footer union all act on the same rows. Full 222-query sweep:
-#: ``REHEARSAL_r12_hostile.json`` (``times_skew_drift_widen_sf0_01``).
+#: ``0dc33e4:REHEARSAL_r12_hostile.json`` (``times_skew_drift_widen_sf0_01``).
 TIMES_SKEW_DRIFT_WIDEN_QUERIES = (
     "q1_pricing_summary",      # cents folds: null l_tax + float l_quantity
     "events_skew_salted_agg",  # salted agg on the hot key across 3 footers
@@ -1696,7 +1696,7 @@ def test_quadruple_damage_crosses_all_axes(spark, times_skew_drift_widen_dir):
     # a ~0.5-row expectation (deterministic hash, but not guaranteed
     # per footer); require it across the old generations combined here —
     # the sf0.01 sweep asserts the strong per-generation form (4 dropped
-    # / 9 narrow rows, REHEARSAL_r12_hostile.json narrative)
+    # / 9 narrow rows, 0dc33e4:REHEARSAL_r12_hostile.json narrative)
     assert n_cross_total > 0, (
         "no hostile instants on the hot key in either old generation"
     )

@@ -46,7 +46,8 @@ HEADLINE = [
     "rel_partition_prune",
     "events_sessionize",
     "events_gap_fill",
-    # r12: the dense-spine lerp joins bench.HEADLINE; its snapshot pins
+    # r12: the dense-spine lerp joins the headline set
+    # (tools/scale_bench.py HEADLINE); its snapshot pins
     # the DESCENDING running frame (a regression to the O(n²)
     # unboundedFollowing shape reshapes the Window/Sort node sequence)
     "events_gap_fill_lerp",

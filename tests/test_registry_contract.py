@@ -99,27 +99,12 @@ def test_doc_counts_are_derived():
     assert m, "ARCHITECTURE.md snapshot line missing"
     assert int(m.group(1)) == n_snapshots
 
-    import bench
+    from tools.scale_bench import HEADLINE
 
     baseline = open("BASELINE.md").read()
     m = re.search(r"### .*— (\d+)-query headline set \(CURRENT baseline\)", baseline)
     assert m, "BASELINE.md current-baseline header missing"
-    assert int(m.group(1)) == len(bench.HEADLINE)
-
-
-def test_write_sink_partition_columns_exist(spark):
-    """bench.py --sink parquet partitions each WRITE_SINK output by a
-    declared column; a renamed output column would turn the write-path
-    bench into an AnalysisException instead of a reading."""
-    import bench
-
-    qs = registry.queries()
-    for name, part_col in bench.WRITE_SINK.items():
-        assert name in qs, f"WRITE_SINK names unknown query {name!r}"
-        cols = qs[name](spark, SF_CORRECTNESS).columns
-        assert part_col in cols, (
-            f"{name}: partition column {part_col!r} not in output {cols}"
-        )
+    assert int(m.group(1)) == len(HEADLINE)
 
 
 def test_json_string_cast_oracles_carry_integer_shape_guard():
@@ -267,7 +252,7 @@ def test_engine_reads_only_deployment_env_vars():
 #: Scripts outside the package that import engine names. Tools import
 #: lazily inside functions, so a renamed or deleted operator surfaces
 #: only when someone runs the tool — this scan surfaces it at test time.
-_SCRIPT_GLOBS = ("tools/*.py", "perfbench/*.py", "jobs/*.py", "bench.py")
+_SCRIPT_GLOBS = ("tools/*.py", "perfbench/*.py", "jobs/*.py")
 
 
 def test_script_imports_of_engine_names_resolve():
@@ -300,3 +285,47 @@ def test_script_imports_of_engine_names_resolve():
                     )
     assert n > 0, "scan found no engine imports — the globs went stale"
     assert not bad, f"script imports naming missing engine objects: {bad}"
+
+
+#: Root docs that describe this tree. The others narrate history
+#: (CHANGES.md, ROADMAP.md) or describe other repositories (PAPER.md,
+#: PAPERS.md, SURVEY.md, SNIPPETS.md), so they name files that are
+#: not, or no longer, here.
+_TREE_DOCS = (
+    "README.md", "ARCHITECTURE.md", "BASELINE.md", "COVERAGE.md",
+    "FIXTURES.md", "TESTDATA.md",
+)
+
+
+def test_cited_repo_paths_exist():
+    """Every repo path a tracked script or tree doc cites exists, so a
+    deleted tool or record cannot stay cited as if it were present.
+    Checked: ``tools/*.py``, ``tests/*.py`` and the root ``*_rNN*.json``
+    records. A citation of a deleted file names its commit instead
+    (``0dc33e4:tools/x.py``), which the lookbehind skips."""
+    import re
+    import subprocess
+    from pathlib import Path
+
+    cited = re.compile(
+        r"(?<![\w/.:-])((?:tools|tests)/\w+\.py|[A-Za-z]+_r\d\d\w*\.json)"
+    )
+
+    root = Path(__file__).resolve().parent.parent
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py", "*.md"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    files = [f for f in tracked if f.endswith(".py") or "/" in f]
+    files += list(_TREE_DOCS)
+    bad = []
+    for f in files:
+        text = (root / f).read_text(encoding="utf-8")
+        for lineno, line in enumerate(text.splitlines(), 1):
+            bad += [
+                f"{f}:{lineno}: {m}"
+                for m in cited.findall(line)
+                if not (root / m).exists()
+            ]
+    assert len(files) > len(_TREE_DOCS), "git ls-files found no scripts"
+    assert not bad, f"citations of missing repo paths: {bad}"

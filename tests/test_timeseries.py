@@ -231,7 +231,7 @@ def test_epoch_gate_upper_bound_is_utc_in_both_engines(spark, tmp_path):
     ``localtimestamp()`` keeps. With ``now() AT TIME ZONE 'UTC'`` both
     engines keep the 2h-old row and drop the future instant, regardless
     of the DuckDB session TimeZone. (The full-registry TZ sweep
-    REHEARSAL_r09_invariance.json can't discriminate this — the corpus
+    0dc33e4:REHEARSAL_r09_invariance.json can't discriminate this — the corpus
     has no near-now rows — which is exactly why this pin exists.)
     """
     import datetime

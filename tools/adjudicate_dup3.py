@@ -42,9 +42,9 @@ Mechanism tags:
 
 Usage::
 
-    python tools/adjudicate_dup3.py REHEARSAL_r12_hostile.json \
+    python tools/adjudicate_dup3.py tests/dup3_sweeps.json \
         dup3_then_drift_widen_sf0_01 --sweep composed
-    python tools/adjudicate_dup3.py REHEARSAL_r12_hostile.json \
+    python tools/adjudicate_dup3.py tests/dup3_sweeps.json \
         dup3_refresh_sf0_01 --sweep plain
 
 Exit 0 iff the observed set adjudicates clean; the JSON verdict names
@@ -150,7 +150,7 @@ def adjudicate(report: dict, sweep: str) -> dict:
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("artifact", help="REHEARSAL_*.json path")
+    p.add_argument("artifact", help="sweep report JSON, e.g. tests/dup3_sweeps.json")
     p.add_argument("key", help="sweep key inside the artifact")
     p.add_argument(
         "--sweep",

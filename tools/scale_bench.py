@@ -22,8 +22,9 @@ and per-document duplicate structure UNCHANGED:
   embedding-space twin of the token-suffix trick.
 
 Then times the six most expensive headline queries at both scales with
-bench.py's exact methodology (schema-warmed, noop sink, multi-file
-layout) and prints one JSON line with per-query sf0.1→sf1 wall ratios.
+the headline harness's methodology (``0dc33e4:bench.py``: schema-warmed,
+noop sink, multi-file layout) and prints one JSON line with per-query
+sf0.1→sf1 wall ratios.
 A ratio near DATA_SCALE (10) is linear scaling on fixed cores; well
 below 10 means the base run under-utilized local[32]; well above 10
 flags super-linear work. Results are recorded in BASELINE.md.
@@ -31,7 +32,7 @@ flags super-linear work. Results are recorded in BASELINE.md.
     python tools/scale_bench.py [--scale 10] [--runs 2] [--full]
 
 ``--full`` widens the evidence from the 6 most expensive queries to
-bench.py's ENTIRE headline set: every table is staged (orders /
+the ENTIRE ``HEADLINE`` set: every table is staged (orders /
 customer / supplier / events join the four above, with foreign keys
 offset by the SAME constant as their parent's primary key so joins
 stay replica-local; region/nation stay fixed like TPC-H dims), and two
@@ -57,8 +58,50 @@ QUERIES = [
     "docs_dedup_incremental",
     "dedup_embedding_cosine",
 ]
+#: The headline set: the 35 registered queries ``--full`` times at 10×
+#: (BASELINE.md's "35-query headline set" is this list; the per-query
+#: harness that first timed it is ``0dc33e4:bench.py``).
+HEADLINE = [
+    "q1_pricing_summary",
+    "q6_forecast_revenue",
+    "q3_top_orders",
+    "q5_region_revenue",
+    "rel_window_running",
+    "rel_dedup_keyed",
+    "etl_events_pipeline",
+    "rel_asof_join",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "text_quality_score",
+    "text_fingerprint",
+    "sim_topk_cosine",
+    "sim_ivf_search",
+    "stream_tumbling_counts",
+    "stream_session_windows",
+    "mm_decode_features",
+    "sim_kmeans",
+    "text_decontaminate",
+    "docs_pack_sequences",
+    "events_weighted_sample",
+    "docs_dedup_corpus",
+    "docs_dedup_incremental",
+    "text_repetition_filter",
+    "q8_market_share",
+    "q10_returned_items",
+    "rel_scd2_history",
+    "events_sessionize",
+    "events_gap_fill",
+    "text_pmi_bigrams",
+    "graph_reachability",
+    "docs_bm25_topk",
+    "docs_source_divergence",
+    # the only member whose cost follows spine width (sequence() explode
+    # + bidirectional ignore-nulls windows): it shows frame regressions
+    "events_gap_fill_lerp",
+]
 TABLES = ["lineitem", "part", "documents", "embeddings"]
-#: ``--full`` stages every table so the ENTIRE bench.py headline set can
+#: ``--full`` stages every table so the ENTIRE headline set can
 #: be timed at 10×. region/nation stay fixed (TPC-H dims don't scale
 #: with SF); every fact/dim that TPC-H scales gets replica-offset keys,
 #: with FOREIGN keys offset by the same constant as their parent's
@@ -67,7 +110,7 @@ TABLES = ["lineitem", "part", "documents", "embeddings"]
 TABLES_FULL = [
     "region", "nation", "customer", "supplier", "orders",
 ] + TABLES + ["events"]
-N_FILES = 8  # per-table files at base scale (bench.py layout)
+N_FILES = 8  # per-table files at base scale (the headline layout)
 
 ORDER_OFFSET = 100_000_000
 PART_OFFSET = 10_000_000
@@ -197,7 +240,7 @@ def lsh_occupancy_ab(
     bucket occupancy β, which holds candidates at ~n·β — linear. This
     measures both at ``scale``× data: same multiprobe pipeline
     (``embedding_near_dup_pairs``), only ``bits`` differs. Candidate
-    counts are the direct evidence; wall uses bench.py's noop-write
+    counts are the direct evidence; wall uses the headline noop-write
     min-of-runs methodology.
     """
     import math
@@ -253,7 +296,7 @@ def multiprobe_ab(
     Recall here is exact and relative: the set-bit probe's verified
     pairs (cos >= threshold) are counted against full radius-1's — the
     hamming<=1 oracle contract — so ``pair_recall`` = 1.0 means
-    equal recall by construction, not by sampling. Wall uses bench.py's
+    equal recall by construction, not by sampling. Wall uses the headline
     noop-write min-of-runs methodology on the whole cand→verify
     pipeline. The absolute floor vs exact ground truth (29/59 on the
     hard cosine band at sf0.01) stays pinned in
@@ -397,7 +440,7 @@ def main() -> int:
         "--full",
         action="store_true",
         help=(
-            "stage ALL tables and time bench.py's entire headline set "
+            "stage ALL tables and time the entire headline set "
             "(the default stages 4 tables and times the 6 most "
             "expensive queries); skips the LSH occupancy A/B"
         ),
@@ -441,13 +484,11 @@ def main() -> int:
     if args.multiprobe_ab:
         tables = ["embeddings"]  # the A/B touches nothing else
     if args.full:
-        from bench import HEADLINE
-
         names = [n for n in HEADLINE if n in qs]
     else:
         names = QUERIES
 
-    # base-scale copy in the same multi-file layout bench.py uses
+    # base-scale copy in the multi-file headline layout
     suffix = "_full" if args.full else ""
     base_root = f"/tmp/spark_graft_scale/base_{N_FILES}f{suffix}"
     scaled_root = f"/tmp/spark_graft_scale/x{args.scale}{suffix}"
