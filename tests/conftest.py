@@ -12,7 +12,13 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=8)
+    # tiered C2: the C1-only local driver policy pays only in short runs,
+    # and this session lives for the whole suite (BASELINE.md, "driver
+    # JIT policy": tier-1 took 28 % longer with C1 only)
+    s = get_spark(
+        "tests", shuffle_partitions=8,
+        extra_conf={"spark.driver.defaultJavaOptions": ""},
+    )
     yield s
 
 

@@ -3,6 +3,11 @@ stderr-noise fixes ``get_spark`` applies to every session."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark import SparkConf
 from pyspark.sql import SparkSession
@@ -40,12 +45,41 @@ def captured_options(monkeypatch, spark):
     return seen
 
 
-def test_local_driver_runs_c1_only(spark):
+def _tiered_stop_level(spark):
     jvm = spark._jvm
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
-    assert bean.getVMOption("TieredStopAtLevel").getValue() == "1"
+    return bean.getVMOption("TieredStopAtLevel").getValue()
+
+
+#: A fresh process, as ``python jobs/<job>.py`` starts one.
+_PROBE = (
+    "from spark_etl_pipeline_spark.session import get_spark\n"
+    "from tests.test_session import _tiered_stop_level\n"
+    "spark = get_spark('jit-probe')\n"
+    "print(_tiered_stop_level(spark))\n"
+    "spark.stop()\n"
+)
+
+
+def test_local_driver_runs_c1_only(spark):
+    """A fresh ``python`` process that calls ``get_spark`` gets a C1-only
+    driver JVM. The suite's own session opts out through ``extra_conf``
+    (``tests/conftest.py``), so it runs tiered C2 (level 4)."""
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("MASTER", "SPARK_MASTER", "PYSPARK_SUBMIT_ARGS")
+    }
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="512m")
+    out = subprocess.run(
+        [sys.executable, "-c", _PROBE],
+        cwd=Path(__file__).resolve().parents[1], env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-1] == "1"
+    assert _tiered_stop_level(spark) == "4"
 
 
 @pytest.mark.parametrize("master", [None, "local[2]"])
