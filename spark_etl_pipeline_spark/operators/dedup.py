@@ -37,7 +37,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_etl_pipeline_spark.operators import broadcast_if_fits
+from spark_etl_pipeline_spark.operators import RoundsExhausted, broadcast_if_fits, rounds
 from spark_etl_pipeline_spark.operators.store_meta import (
     check_store_stamp,
     write_store_stamp,
@@ -706,63 +706,50 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Duplicate-cluster resolution: connected components + canonical selection
 # ---------------------------------------------------------------------------
 
-#: Default iteration budget for BOTH component algorithms. Read at CALL
-#: time (the functions default to ``None`` and resolve it then), so a
-#: deployment facing longer dup chains can raise it with one module-level
-#: assignment — no code change, no new registry plumbing.
-CC_MAX_ITERS = 25
+#: Label-propagation round budget of :func:`connected_components`; a
+#: graph whose diameter exceeds it goes to star contraction. Read at
+#: call time, so a deployment facing longer dup chains raises it with
+#: one module-level assignment.
+CC_PROPAGATION_ROUNDS = 25
+#: Round bound of :func:`connected_components_star`. Its O(log² n)
+#: rounds make exhausting this a pathological input, so it raises.
+CC_STAR_ROUNDS = 25
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int | None = None,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(id, component) for every vertex of an undirected edge list,
     where ``component`` is the smallest vertex id reachable from ``id``.
 
     Iterative min-label propagation: each round every vertex takes the
     minimum of its own label and its neighbors' labels; a fixpoint is
-    reached after O(component diameter) rounds. The driver loop is the
-    idiomatic Spark shape for convergence iteration (same family as
-    ``similarity.kmeans_iterate``): each round is one shuffle join of
-    the (persisted, small) edge list against the label table plus one
-    aggregate, with ``localCheckpoint`` truncating lineage so plan size
-    stays constant. Convergence is detected from SUM(label), which is
-    strictly decreasing until the fixpoint — a scalar per round, not a
-    data collect.
+    reached after O(component diameter) rounds. Each round is one
+    shuffle join of the (persisted, small) edge list against the label
+    table plus one aggregate, run by the shared round loop
+    (:func:`~spark_etl_pipeline_spark.operators.rounds`, which also
+    holds the lineage and durability rule). Convergence is detected
+    from SUM(label), which is strictly decreasing until the fixpoint —
+    a scalar per round, not a data collect.
 
     Dup-pair graphs are tiny relative to the corpus (edges exist only
     between near-duplicates) and their components have single-digit
     diameters — min-label propagation fixpoints in a handful of rounds.
 
-    Durability (deliberate tradeoff, ARCHITECTURE.md "localCheckpoint
-    durability"): per-round lineage truncation uses EXECUTOR-LOCAL
-    checkpoints — memory-speed rounds, but an executor loss on a real
-    cluster deletes the truncated labels with no recompute path. The
-    recovery unit here is restart-the-query: rounds are seconds and
-    every input re-derives from parquet, so a mid-query loss costs one
-    re-run, not corrupted labels. A deployment whose loop is hours
-    long swaps ``localCheckpoint`` for reliable ``checkpoint()`` (+
-    ``setCheckpointDir``) at this site and pays one store write per
-    round instead.
+    Convergence is VERIFIED, never assumed: if
+    :data:`CC_PROPAGATION_ROUNDS` rounds exhaust before the fixpoint —
+    a component whose DIAMETER exceeds the budget; templated/boilerplate
+    text produces exactly such long dup chains — the function hands the
+    graph to :func:`connected_components_star`, whose large-star/
+    small-star contraction converges in O(log² n) rounds on any graph
+    shape. Partial labels are never returned: they would split one
+    component into several and leave multiple "canonical" survivors of
+    one duplicate cluster.
 
-    Convergence is VERIFIED, never assumed: if ``max_iters`` rounds
-    (default :data:`CC_MAX_ITERS`, resolved at call time) exhaust before
-    the fixpoint — a component whose DIAMETER exceeds the budget;
-    templated/boilerplate text produces exactly such long dup chains —
-    the function hands the graph to :func:`connected_components_star`,
-    whose large-star/small-star contraction converges in O(log² n)
-    rounds on any graph shape. Partial labels are never returned: they
-    would split one component into several and leave multiple
-    "canonical" survivors of one duplicate cluster.
-
-    The round joins and the returned labels carry a broadcast hint
-    while the vertex count fits (:func:`broadcast_if_fits`).
+    The round joins carry a broadcast hint while the vertex count fits
+    (:func:`broadcast_if_fits`). The returned labels carry none: the
+    consumers that join them against the corpus hint at that join.
     """
-    if max_iters is None:
-        max_iters = CC_MAX_ITERS
     fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     rev = edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
     sym = fwd.union(rev).distinct().localCheckpoint()
@@ -785,57 +772,39 @@ def connected_components(
     # reads, no recompute) counts the rows that gate every hint below;
     # ``neigh`` is a per-vertex aggregate and shares the bound. The same
     # collect seeds the convergence baseline with the label sum.
-    n_verts, prev_sum = labels.agg(F.count(F.lit(1)), F.sum("label")).collect()[0]
-    converged = False
-    for _ in range(max_iters):
+    n_verts, label_sum = labels.agg(F.count(F.lit(1)), F.sum("label")).collect()[0]
+
+    def propagate(labels: DataFrame) -> DataFrame:
         neigh = (
             sym.join(broadcast_if_fits(labels, n_verts), sym.d == labels.id)
             .groupBy("s")
             .agg(F.min("label").alias("nl"))
         )
-        labels = (
-            labels.join(
-                broadcast_if_fits(neigh, n_verts), labels.id == neigh.s, "left"
-            )
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-            )
-            # LAZY: the convergence-sum action right below materializes
-            # this round's labels AND computes the scalar in ONE job —
-            # the eager form paid a second, separate job per round for
-            # the same materialization (r15; measured 2.09 s → 1.51 s
-            # on the docs_dedup_corpus composition at sf0.1).
-            .localCheckpoint(eager=False)
+        return labels.join(
+            broadcast_if_fits(neigh, n_verts), labels.id == neigh.s, "left"
+        ).select(
+            "id",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
+            ).alias("label"),
         )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
+
+    def settled(labels: DataFrame) -> bool:
+        nonlocal label_sum
+        prev, label_sum = label_sum, labels.agg(F.sum("label")).collect()[0][0]
+        return label_sum == prev
+
+    try:
+        return rounds(labels, propagate, CC_PROPAGATION_ROUNDS, settled)
+    except RoundsExhausted:
         # Diameter exceeded the budget: re-solve with the O(log² n)-round
         # contraction rather than failing. Partial labels are never
         # used — star restarts from the raw edges.
         return connected_components_star(edges, src, dst)
-    # r16: the returned labels are dup-graph-vertex sized and every
-    # downstream consumer that joins them against the CORPUS
-    # (docs_dedup_corpus anti-join, the split/source taggers) would
-    # otherwise shuffle the full corpus against the stat-less
-    # checkpoint (planned SMJ — no stats, no auto-broadcast). The hint
-    # rides the SAME runtime size gate as the in-loop joins and
-    # propagates through the consumers' filters/projections to their
-    # join; select-only consumers simply drop it.
-    return broadcast_if_fits(labels, n_verts)
 
 
 def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int | None = None,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(id, component-min) labels via alternating large-star/small-star
     contraction — the chain-graph-safe twin of
@@ -853,19 +822,17 @@ def connected_components_star(
       u and all of S are re-pointed at m = min(S).
 
     Both steps are one groupBy-min plus one join per round — the same
-    shuffle primitives as label propagation, with ``localCheckpoint``
-    truncating lineage. Edges stay canonically (larger → smaller), so
-    the fixpoint is exactly the star set {(v, root) : v ≠ root}.
+    shuffle primitives as label propagation, in the same round loop
+    (:func:`~spark_etl_pipeline_spark.operators.rounds`). Edges stay
+    canonically (larger → smaller), so the fixpoint is exactly the star
+    set {(v, root) : v ≠ root}.
 
     Convergence is verified EXACTLY: when the cheap per-round stats
     (count, Σu, Σv) stop changing, a set-difference confirms the edge
-    set is truly stable before the loop exits — stats alone could
-    collide. Exhausting ``max_iters`` (default :data:`CC_MAX_ITERS`)
-    raises; with the log² bound that means a genuinely pathological
-    input, not a tuning problem.
+    set is truly stable — stats alone could collide. Exhausting
+    :data:`CC_STAR_ROUNDS` raises; with the log² bound that means a
+    genuinely pathological input, not a tuning problem.
     """
-    if max_iters is None:
-        max_iters = CC_MAX_ITERS
     raw = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).filter(
         F.col("s") != F.col("d")
     )
@@ -912,40 +879,28 @@ def connected_components_star(
         )
 
     def stats(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)), F.sum("u"), F.sum("v")
-        ).collect()[0]
-        return tuple(row)
+        return tuple(df.agg(F.count(F.lit(1)), F.sum("u"), F.sum("v")).collect()[0])
 
-    prev = stats(e)
-    converged = False
-    for _ in range(max_iters):
-        # LAZY for the same reason as label propagation: the stats()
-        # collect below materializes the round in the same job.
-        e = star_round(e).localCheckpoint(eager=False)
-        cur = stats(e)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if converged and prev[0]:
-        # Exact fixpoint confirmation: one more full round must leave
-        # the set unchanged (stats equality alone could collide).
+    last = stats(e)
+
+    def settled(cur: DataFrame) -> bool:
+        nonlocal last
+        prev, last = last, stats(cur)
+        return last == prev
+
+    e = rounds(e, star_round, CC_STAR_ROUNDS, settled)
+    # Exact fixpoint confirmation: one more full round must leave the
+    # set unchanged (stats equality alone could collide).
+    if last[0]:
         nxt = star_round(e)
-        converged = nxt.exceptAll(e).isEmpty() and nxt.count() == prev[0]
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not reach a fixpoint within "
-            f"{max_iters} rounds — with the O(log² n) bound this means a "
-            f"pathological input, not a budget tuning problem"
-        )
-    out = verts.join(
+        if not (nxt.exceptAll(e).isEmpty() and nxt.count() == last[0]):
+            raise RuntimeError(
+                "connected_components_star: the round stats settled but "
+                "the edge set did not — a pathological input"
+            )
+    return verts.join(
         e.select(F.col("u").alias("id"), F.col("v").alias("label")), "id", "left"
     ).select("id", F.coalesce("label", F.col("id")).alias("label"))
-    # Same gated downstream-broadcast contract as connected_components:
-    # the output is vertex-sized; corpus-joining consumers get a BHJ
-    # while the gate holds, SMJ otherwise.
-    return broadcast_if_fits(out, verts.count())
 
 
 #: Shared by ``dedup_components`` (label propagation) and
@@ -1043,9 +998,9 @@ def docs_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     a whole (the CTE chain reuses the exact ``dup_pairs`` SQL, so any
     drift in ANY stage fails this row too). Scale shape: the drop-list
     is the duplicate subset (bounded by dup rate, far smaller than the
-    corpus); the final anti-join shuffles on doc_id with AQE free to
-    broadcast the drop side when it fits — the corpus itself is scanned
-    once.
+    corpus); the final anti-join broadcasts it while the label table's
+    row count fits (:func:`broadcast_if_fits`) — the corpus itself is
+    scanned once.
     """
     docs = table(spark, sf_dir, "documents")
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
@@ -1053,6 +1008,7 @@ def docs_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = labels.filter(F.col("label") != F.col("id")).select(
         F.col("id").alias("doc_id")
     )
+    dropped = broadcast_if_fits(dropped, labels.count())
     return docs.join(dropped, "doc_id", "left_anti").select(
         "doc_id",
         "lang",

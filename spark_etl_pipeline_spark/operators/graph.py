@@ -16,9 +16,9 @@ the defined semantics.
 
 Scale: each iteration is one edge-table join + one hash aggregate —
 the standard message-passing shape. Edges shuffle on src (contribution
-lookup) then dst (sum); the degree and rank tables are node-sized. A
-fixed iteration count unrolls to a linear plan — no driver loop, no
-checkpointing needed at 3 iterations (lineage depth stays bounded).
+lookup) then dst (sum); the degree and rank tables are node-sized. The
+shared round loop (``operators.rounds``) checkpoints the rank table
+between iterations, so lineage depth stays one round.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_etl_pipeline_spark import operators
-from spark_etl_pipeline_spark.operators import broadcast_if_fits
+from spark_etl_pipeline_spark.operators import broadcast_if_fits, rounds
 from spark_etl_pipeline_spark.plans.registry import register, table
 
 #: Rank scale (1.0 == RANK_SCALE). 1e9 leaves 85·in_degree·SCALE
@@ -86,8 +86,8 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     criticality ranking a buyer risk team actually wants, which plain
     degree counting gets wrong.
 
-    Three unrolled iterations of exact-integer message passing (see
-    module docstring for why integer: hash-exact reproducibility).
+    Three iterations of exact-integer message passing (see module
+    docstring for why integer: hash-exact reproducibility).
     Per iteration: join ranks+degrees onto the edge list on src
     (contributions), hash-aggregate on dst (map-side combinable
     integer sums). Node encoding packs the bipartite id spaces as
@@ -106,9 +106,9 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The edge list and degree table are loop-invariant: materialize them
     # ONCE (same localCheckpoint pattern as connected_components) so each
-    # unrolled iteration joins the materialized tables instead of
-    # re-deriving them from the lineitem scan — without this the 3
-    # iterations plan 14 scans of the fact table; with it, one.
+    # iteration joins the materialized tables instead of re-deriving them
+    # from the lineitem scan — without this the 3 iterations plan 14
+    # scans of the fact table; with it, one.
     edges = edges.localCheckpoint(eager=True)
     deg = (
         edges.groupBy("src")
@@ -116,15 +116,15 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("src", "node")
         .localCheckpoint(eager=True)
     )
-    ranks = deg.select("node", F.lit(RANK_SCALE).cast("bigint").alias("r"))
-    for _ in range(PR_ITERS):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (
             edges.alias("e")
             .join(ranks.alias("p"), F.col("e.src") == F.col("p.node"))
             .join(deg.alias("d"), F.col("e.src") == F.col("d.node"))
             .select(F.col("e.dst").alias("dst"), F.expr("r div deg").alias("c"))
         )
-        ranks = (
+        return (
             contrib.groupBy("dst")
             .agg(F.sum("c").alias("sc"))
             .select(
@@ -134,6 +134,9 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("r"),
             )
         )
+
+    ranks = deg.select("node", F.lit(RANK_SCALE).cast("bigint").alias("r"))
+    ranks = rounds(ranks, step, PR_ITERS)
     return (
         ranks.filter(F.col("node") % 2 == 1)
         .select(
@@ -424,9 +427,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is two semi-joins of the edge list against the
     node-scale survivor set plus one degree aggregate; survivors are
-    ``localCheckpoint``-ed per round (same bounded-lineage discipline
-    as connected components), the edge list once. Peeling rounds
-    needed grow with core depth, not graph size — the 100 TB story is
+    checkpointed between rounds (``operators.rounds``), the edge list
+    once. Peeling rounds needed grow with core depth, not graph size — the 100 TB story is
     the same joins at bigger parallelism.
     """
     edges = copurchase_edges(spark, sf_dir)
@@ -441,20 +443,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             alive_df.withColumnRenamed("node", "a"), "a", "left_semi"
         ).join(alive_df.withColumnRenamed("node", "b"), "b", "left_semi")
 
-    for _ in range(KCORE_ROUNDS):
-        ee = induced(alive)
+    def peel(alive_df: DataFrame) -> DataFrame:
+        ee = induced(alive_df)
         deg = (
             ee.select(F.col("a").alias("node"))
             .unionByName(ee.select(F.col("b").alias("node")))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("cd"))
         )
-        alive = (
-            deg.filter(F.col("cd") >= KCORE_K)
-            .select("node")
-            .localCheckpoint(eager=True)
-        )
-    fe = induced(alive)
+        return deg.filter(F.col("cd") >= KCORE_K).select("node")
+
+    fe = induced(rounds(alive, peel, KCORE_ROUNDS))
     fd = (
         fe.select(F.col("a").alias("node"))
         .unionByName(fe.select(F.col("b").alias("node")))
@@ -585,53 +584,43 @@ def _bfs_walk(
     :data:`~spark_etl_pipeline_spark.operators.BROADCAST_MAX_ROWS` every
     round broadcasts with no per-round gating job. Otherwise each round
     pays an exact frontier count — it doubles as the lazy checkpoint's
-    materialization and buys an exact empty-frontier early exit — so a
+    materialization and lets an empty frontier skip its expansion — so a
     wide seed set degrades to sort-merge rounds instead of an
     executor-sized broadcast.
 
-    Lineage bound (deep-hop safety): every per-round frontier EXCEPT
-    THE LAST is ``localCheckpoint``-ed BEFORE it joins the distance
+    Lineage bound (deep-hop safety): ``operators.rounds`` checkpoints
+    every per-round frontier but the last BEFORE it joins the distance
     map, and the map is ONE flat union over those frontiers — so the
     returned plan is a union of checkpointed leaf scans plus at most
     one live round, linear in hops. Pinned at hops=10 by
     ``tests/test_graph_triangles.py::test_bfs_deep_hops_plan_bounded``.
-    The last round's frontier has exactly one consumer (its level row),
-    so its checkpoint would be a pure driver stall: Dataset.checkpoint
-    calls queryExecution.toRdd, and on an AQE plan that materializes
-    every query stage on the spot even with eager=False (measured
-    0.7-1.3 s blocking per round at sf0.1). Earlier rounds keep their
-    checkpoints — each has three consumers (seen-union, next round's
-    join, level row).
+    Each checkpointed frontier has three consumers (seen-union, next
+    round's join, level row); the last has only its level row.
 
     The visited set is a FLAT UNION of the already-checkpointed
     frontiers rather than its own re-checkpointed table, which saved
-    one materialization job per round; checkpoints are LAZY
-    (``eager=False``), so each frontier materializes inside the next
-    round's job (or the final action). Measured together at sf0.1:
-    eager-everything 3.16 s → 1.56 s, identical output.
-
-    Durability (deliberate tradeoff, ARCHITECTURE.md "localCheckpoint
-    durability"): the per-round frontiers are EXECUTOR-LOCAL
-    checkpoints; an executor loss deletes them with no recompute path,
-    and the recovery unit is restart-the-query — cheap for a
-    ``max_hops``-bounded walk whose inputs re-derive from parquet.
-    Hour-scale deployments swap in reliable ``checkpoint()`` here.
+    one materialization job per round. Measured at sf0.1 together with
+    lazy checkpoints: eager-everything 3.16 s → 1.56 s, identical
+    output.
     """
-    frontier = seeds.select("node").distinct().localCheckpoint(eager=False)
-    frontiers = [frontier]
-    levels = [frontier.select("node", F.lit(0).alias("hop"))]
-    for k in range(1, max_hops + 1):
+    frontiers = []
+
+    def step(frontier: DataFrame) -> DataFrame:
+        frontiers.append(frontier)
         n_rows = n_bound
         if n_bound > operators.BROADCAST_MAX_ROWS:
             n_rows = frontier.count()
             if n_rows == 0:
-                break
+                return frontier  # nothing left to reach
         seen = reduce(DataFrame.unionByName, frontiers)
-        cand = expand(frontier, n_rows).join(seen, "node", "left_anti")
-        frontier = cand if k == max_hops else cand.localCheckpoint(eager=False)
-        frontiers.append(frontier)
-        levels.append(frontier.select("node", F.lit(k).alias("hop")))
-    return reduce(DataFrame.unionByName, levels)
+        return expand(frontier, n_rows).join(seen, "node", "left_anti")
+
+    seeds = seeds.select("node").distinct().localCheckpoint(eager=False)
+    frontiers.append(rounds(seeds, step, max_hops))
+    return reduce(
+        DataFrame.unionByName,
+        (f.select("node", F.lit(k).alias("hop")) for k, f in enumerate(frontiers)),
+    )
 
 
 def bfs_hops_bipartite(

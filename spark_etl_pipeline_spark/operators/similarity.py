@@ -29,6 +29,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_etl_pipeline_spark.operators import broadcast_if_fits, rounds
 from spark_etl_pipeline_spark.plans.registry import register, table
 
 DIM = 64
@@ -1002,44 +1003,32 @@ def _sqdist_expr(a: str, b: str) -> str:
 def kmeans_iterate(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
     """K-means on (vec_id, v): ``iters`` rounds of assign + update.
 
-    The loop runs on the DRIVER and builds one lazy plan — each
-    iteration appends an assign (broadcast centroid array, per-row
-    ``array_min`` argmin — zero shuffle on the fact side) and an update
-    (per-dimension mean) to the DAG; nothing executes until the caller
-    acts. Determinism: centroid means use integer
+    The loop runs on the DRIVER — each iteration appends an assign
+    (broadcast centroid array, per-row ``array_min`` argmin — zero
+    shuffle on the fact side) and an update (per-dimension mean) to the
+    DAG. Determinism: centroid means use integer
     'cents' numerators (associative — partition order can't change the
     sum) divided back to double, and arrays are rebuilt in dimension
     order, so every engine computes bit-identical centroids.
 
     Returns (assignment, centroids) after the final iteration.
 
-    r15 plan-size optimization: the centroid table is
-    ``localCheckpoint``-ed between rounds (k rows of one array — the
-    materialization job is trivial). Without it every consumer branch
-    that references the final assignment or centroids re-plans the
-    ENTIRE previous round's chain per reference — sim_kmeans's
-    counts+centroids join re-ran both rounds twice (6 corpus scans, 32
-    exchanges in the executed plan); with the k-row checkpoint each
-    branch starts from the materialized centroids and re-runs only the
-    final assignment (2 corpus scans). Centroid VALUES are unchanged —
-    same computation, materialized — so assignments and the oracle
-    rows are bit-identical.
-
-    Durability (deliberate tradeoff, ARCHITECTURE.md "localCheckpoint
-    durability"): the k-row inter-round centroid checkpoints are
-    EXECUTOR-LOCAL — an executor loss deletes them with no recompute
-    path, and the recovery unit is restart-the-query (a fixed, small
-    round count whose inputs re-derive from parquet). Hour-scale
-    deployments swap in reliable ``checkpoint()`` here.
+    Plan size: the shared round loop (``operators.rounds``)
+    checkpoints the k-row centroid table between rounds. Without it
+    every consumer branch that references the final assignment or
+    centroids re-plans the ENTIRE previous round's chain per reference
+    — sim_kmeans's counts+centroids join re-ran both rounds twice (6
+    corpus scans, 32 exchanges in the executed plan); with the k-row
+    checkpoint each branch starts from the materialized centroids and
+    re-runs only the final assignment (2 corpus scans).
     """
-    cents_df = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    assign = None
-    for it in range(iters):
+    assigned = []
+
+    def step(cents_df: DataFrame) -> DataFrame:
         # Carry v through the assignment: the mean update then needs no
         # join back to emb on vec_id (one N-row shuffle saved per round).
         assign = assign_nearest(emb, cents_df, _sqdist_expr("v", "ct.cv"), carry=("v",))
+        assigned.append(assign)
         per_dim = (
             assign
             .select("cell", F.posexplode("v").alias("d0", "x"))
@@ -1053,29 +1042,23 @@ def kmeans_iterate(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataF
                 F.count(F.lit(1)).alias("n"),
             )
         )
-        cents_df = (
-            per_dim.groupBy(F.col("cell").alias("cid"))
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(d0, val))), s -> s.val)"
-                ).alias("cv"),
-                # members-per-cell, read off the d0=0 row: load_vectors
-                # only admits non-empty vectors, so every assigned row
-                # contributes dimension 0 and this equals the
-                # assignment count exactly (avoids a second full
-                # assignment chain just to count members).
-                F.max(F.when(F.col("d0") == 0, F.col("n"))).alias("n_members"),
-            )
+        return per_dim.groupBy(F.col("cell").alias("cid")).agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(d0, val))), s -> s.val)"
+            ).alias("cv"),
+            # members-per-cell, read off the d0=0 row: load_vectors
+            # only admits non-empty vectors, so every assigned row
+            # contributes dimension 0 and this equals the
+            # assignment count exactly (avoids a second full
+            # assignment chain just to count members).
+            F.max(F.when(F.col("d0") == 0, F.col("n"))).alias("n_members"),
         )
-        if it < iters - 1:
-            # LAZY checkpoint: materializes inside the consumer's first
-            # action (no separate build-time job barrier — an eager
-            # checkpoint here measurably COST bench time by serializing
-            # work that previously overlapped on idle cores), and every
-            # other branch of the same or later action reuses the
-            # persisted k rows instead of re-running the round's chain.
-            cents_df = cents_df.localCheckpoint(eager=False)
-    return assign, cents_df
+
+    cents_df = emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+    cents_df = rounds(cents_df, step, iters)
+    return assigned[-1], cents_df
 
 
 #: Shared k-means oracle CTE chain (2 unrolled rounds): e, c0, a1,
@@ -1779,7 +1762,8 @@ def docs_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     purge — the ``docs_dedup_corpus`` shape) and re-oracles the whole
     chain, so composition bugs can't hide between green components.
     Drop-list size is bounded by the dup rate; the corpus is scanned
-    once; the drop-list join is AQE-broadcastable.
+    once; the drop-list join broadcasts while the label table's row
+    count fits.
     """
     from spark_etl_pipeline_spark.operators.dedup import connected_components
 
@@ -1789,6 +1773,7 @@ def docs_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops = labels.filter(F.col("id") != F.col("label")).select(
         F.col("id").alias("doc_id"), F.lit(1).alias("__drop")
     )
+    drops = broadcast_if_fits(drops, labels.count())
     return (
         docs.join(drops, "doc_id", "left")
         .groupBy("source")

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_etl_pipeline_spark.operators import rounds
 from spark_etl_pipeline_spark.plans.registry import register, table
 
 #: Session inactivity gap: 30 minutes, in integer microseconds.
@@ -2183,9 +2184,9 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain: the iterate is a scaled-bigint vector, each step is
     ``Σ (v·n) div rowtotal`` — associative integer sums and integer
     division only, bit-identical on any partitioning; the integer
-    formula IS the spec. Each unrolled step is one join + hash
-    aggregate on the |types|²-row pair table — everything after the
-    single per-user window pass is constant-sized.
+    formula IS the spec. Each step (``operators.rounds``) is one join +
+    hash aggregate on the |types|²-row pair table — everything after
+    the single per-user window pass is constant-sized.
     """
     events = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2203,9 +2204,9 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     rt = pairs.groupBy(F.col("prev_type").alias("t")).agg(
         F.sum("n").alias("rt")
     )
-    v = rt.select("t", F.lit(MARKOV_SCALE).cast("bigint").alias("v"))
-    for _ in range(MARKOV_ITERS):
-        v = (
+
+    def step(v: DataFrame) -> DataFrame:
+        return (
             pairs.alias("p")
             .join(v.alias("v"), F.col("v.t") == F.col("p.prev_type"))
             .join(F.broadcast(rt).alias("r"), F.col("r.t") == F.col("p.prev_type"))
@@ -2216,6 +2217,9 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("t")
             .agg(F.sum("c").alias("v"))
         )
+
+    v = rt.select("t", F.lit(MARKOV_SCALE).cast("bigint").alias("v"))
+    v = rounds(v, step, MARKOV_ITERS)
     return v.select(
         F.col("t").alias("event_type"),
         F.col("v").cast("bigint").alias("stationary_scaled"),

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_etl_pipeline_spark.operators import broadcast_if_fits
 from spark_etl_pipeline_spark.operators.text import (
     TOKENS_DUCK,
     with_tokens,
@@ -1305,9 +1306,9 @@ def docs_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     AGAIN as a whole, so drift in any stage fails this row too. Scale
     shape: each signal family is its own scan+aggregate branch keyed
     doc_id; the final assembly is doc_id-co-partitioned joins plus one
-    left-anti-style flag join against the (dup-bounded, AQE-broadcast)
-    drop list. The corpus is never shuffled on anything wider than
-    doc_id.
+    left-anti-style flag join against the dup-bounded drop list,
+    broadcast while the label table's row count fits. The corpus is
+    never shuffled on anything wider than doc_id.
     """
     from spark_etl_pipeline_spark.operators.dedup import (
         connected_components,
@@ -1330,6 +1331,7 @@ def docs_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = labels.filter(F.col("label") != F.col("id")).select(
         F.col("id").alias("doc_id"), F.lit(1).alias("is_dup")
     )
+    dropped = broadcast_if_fits(dropped, labels.count())
     return (
         docs.select("doc_id", "lang")
         .join(qual, "doc_id")
@@ -1409,8 +1411,8 @@ def docs_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc split does straddle.
 
     Scale shape: the pair graph is dup-bounded (see
-    ``docs_dedup_corpus``); the label join back to the corpus is one
-    shuffle on doc_id with the (small) label side AQE-broadcastable.
+    ``docs_dedup_corpus``); the label join back to the corpus broadcasts
+    the (small) label side while its row count fits.
     """
     from spark_etl_pipeline_spark.operators.dedup import (
         connected_components,
@@ -1420,6 +1422,7 @@ def docs_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(pairs, "doc_a", "doc_b")
+    labels = broadcast_if_fits(labels, labels.count())
     tagged = (
         docs.join(labels, docs.doc_id == labels.id, "left")
         .withColumn("grp", F.coalesce("label", "doc_id"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from spark_etl_pipeline_spark.operators.graph import triangle_count
+from tests.conftest import SF_CORRECTNESS
 
 
 def canonical_edges(spark, pairs):
@@ -111,3 +112,28 @@ def test_bfs_deep_hops_plan_bounded(spark):
         assert n_scans == 2 * hops + 3, (
             f"{n_scans} leaf scans for {hops} hops — union not flat/bounded"
         )
+
+
+@pytest.mark.parametrize(
+    "query,n_rounds,max_joins",
+    [("graph_pagerank_suppliers", "PR_ITERS", 2), ("graph_kcore", "KCORE_ROUNDS", 8)],
+)
+def test_round_loop_plan_bounded(spark, monkeypatch, query, n_rounds, max_joins):
+    """The BFS lineage bound, for the fixed-count loops over real graphs:
+    at 10 rounds the returned plan reads only checkpointed leaves
+    (``Scan ExistingRDD``, no fact-table scan) and holds at most one
+    live round. The PageRank round is 2 joins. The k-core output reads
+    the final induced subgraph (2 semi-joins on each of its 2 union
+    branches), whose survivor side is the live last round (the same 4
+    again, broadcast once and reused); one more unrolled round would
+    add 4."""
+    from spark_etl_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, n_rounds, 10)
+    df = getattr(graph, query)(spark, SF_CORRECTNESS)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "Scan ExistingRDD" in plan and "Scan parquet" not in plan, plan
+    n_joins = plan.count("Join")
+    assert n_joins <= max_joins, f"{n_joins} joins — lineage past one round:\n{plan}"

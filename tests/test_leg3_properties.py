@@ -319,7 +319,9 @@ def test_bfs_broadcast_gate_fallback(spark, monkeypatch):
     from both BFS variants. Also pins the plan shape of both sides of
     the gate on a round-shaped join through ``broadcast_if_fits`` (the
     loop's joins hide behind checkpoint materialization, so strategy is
-    asserted on the identical construction)."""
+    asserted on the identical construction). Four hops: the third
+    hop's frontier is already empty, so the gated round's count also
+    skips the fourth expansion."""
     from spark_etl_pipeline_spark import operators
     from spark_etl_pipeline_spark.operators import graph
 
@@ -334,16 +336,16 @@ def test_bfs_broadcast_gate_fallback(spark, monkeypatch):
         }
     )
     seeds = [2, 9]
-    expected = _python_bfs(edges, seeds, 3)
+    expected = _python_bfs(edges, seeds, 4)
 
     op = spark.createDataFrame(inc, "ok long, pk long")
     edf = spark.createDataFrame(edges, "a long, b long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
     monkeypatch.setattr(operators, "BROADCAST_MAX_ROWS", 0)
     got_bip = {
-        r["node"]: r["hop"] for r in graph.bfs_hops_bipartite(op, sdf, 3).collect()
+        r["node"]: r["hop"] for r in graph.bfs_hops_bipartite(op, sdf, 4).collect()
     }
-    got_edge = {r["node"]: r["hop"] for r in graph.bfs_hops(edf, sdf, 3).collect()}
+    got_edge = {r["node"]: r["hop"] for r in graph.bfs_hops(edf, sdf, 4).collect()}
     assert got_bip == expected
     assert got_edge == expected
 

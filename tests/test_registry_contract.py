@@ -329,3 +329,37 @@ def test_cited_repo_paths_exist():
             ]
     assert len(files) > len(_TREE_DOCS), "git ls-files found no scripts"
     assert not bad, f"citations of missing repo paths: {bad}"
+
+
+def test_round_loops_checkpoint_only_through_rounds():
+    """One lineage rule for every iterative operator: a
+    ``.localCheckpoint(`` call lexically inside a ``for``/``while`` body
+    is a round loop with its own checkpoint rule; it belongs in
+    ``operators.rounds``, the only place allowed to make one."""
+    import ast
+    from pathlib import Path
+
+    import spark_etl_pipeline_spark
+
+    pkg = Path(spark_etl_pipeline_spark.__file__).parent
+    home = pkg / "operators" / "__init__.py"
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        allowed = set()
+        for fn in ast.walk(tree):
+            if path == home and getattr(fn, "name", None) == "rounds":
+                allowed |= {id(n) for n in ast.walk(fn)}
+        for loop in ast.walk(tree):
+            if not isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+                continue
+            bad += [
+                f"{path.relative_to(pkg.parent)}:{node.lineno}"
+                for stmt in loop.body
+                for node in ast.walk(stmt)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+                and id(node) not in allowed
+            ]
+    assert not bad, f"localCheckpoint inside a loop outside rounds(): {bad}"

@@ -7,6 +7,7 @@ the corpus; these tests pin behavior the synthetic corpus cannot reach
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_etl_pipeline_spark.operators.traindata import (
@@ -327,7 +328,8 @@ def test_connected_components_broadcast_gate_fallback(spark, monkeypatch):
         assert needle in plan, f"n_rows={n_rows}: {plan}"
 
 
-def test_connected_components_chain_exhaustion_and_star_fallback(spark):
+def test_connected_components_chain_exhaustion_and_star_fallback(spark, monkeypatch):
+    from spark_etl_pipeline_spark.operators import dedup
     from spark_etl_pipeline_spark.operators.dedup import (
         connected_components,
         connected_components_star,
@@ -344,13 +346,47 @@ def test_connected_components_chain_exhaustion_and_star_fallback(spark):
     # never partial labels, never a hard failure on long dup chains.
     got = {r.id: r.label for r in connected_components(chain).collect()}
     assert got == want
-    # A bumped budget converges by propagation alone.
-    got = {r.id: r.label for r in connected_components(chain, max_iters=40).collect()}
-    assert got == want
     # Star contraction converges DIRECTLY with the default budget —
     # O(log² n) rounds, diameter-independent.
     got = {r.id: r.label for r in connected_components_star(chain).collect()}
     assert got == want
+    # A bumped budget converges by propagation alone.
+    monkeypatch.setattr(dedup, "CC_PROPAGATION_ROUNDS", 40)
+    got = {r.id: r.label for r in connected_components(chain).collect()}
+    assert got == want
+
+
+def test_connected_components_star_raises_past_its_round_bound(spark, monkeypatch):
+    """Star contraction never returns partial labels: one round cannot
+    settle the 31-vertex chain, so a bound of 1 raises."""
+    from spark_etl_pipeline_spark.operators import dedup
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "src long, dst long"
+    )
+    monkeypatch.setattr(dedup, "CC_STAR_ROUNDS", 1)
+    with pytest.raises(RuntimeError):
+        dedup.connected_components_star(chain).collect()
+
+
+def test_component_labels_carry_no_broadcast_hint(spark):
+    """The labels come back un-hinted, so a consumer that only selects
+    or groups them plans no join hint Spark would have to drop (with a
+    ``HintErrorLogger`` warning)."""
+    from spark_etl_pipeline_spark.operators.dedup import dedup_components
+
+    plan = dedup_components(spark, SF_SMOKE)._jdf.queryExecution().analyzed()
+    assert "ResolvedHint" not in plan.toString()
+
+
+def test_dedup_corpus_anti_join_broadcasts_the_drop_list(spark):
+    """The hint moved to the join site: ``docs_dedup_corpus`` still plans
+    its corpus anti-join as a broadcast of the (stat-less) drop list."""
+    from spark_etl_pipeline_spark.operators.dedup import docs_dedup_corpus
+
+    plan = docs_dedup_corpus(spark, SF_SMOKE)._jdf.queryExecution().executedPlan()
+    anti = [ln for ln in plan.toString().splitlines() if "LeftAnti" in ln]
+    assert anti and all("BroadcastHashJoin" in ln for ln in anti), plan.toString()
 
 
 def test_connected_components_star_resolves_transitive_clusters(spark):
