@@ -35,11 +35,6 @@ def cents(col: str | Column, scale: int = 100) -> Column:
     return F.round(c * scale).try_cast("long")
 
 
-def cents_sql(expr: str, scale: int = 100) -> str:
-    """DuckDB twin of :func:`cents` (TRY_CAST — see there)."""
-    return f"TRY_CAST(round(({expr}) * {scale}) AS BIGINT)"
-
-
 # ---------------------------------------------------------------------------
 # JSON (reference X1: json_tuple on the `custom` payload)
 # ---------------------------------------------------------------------------

@@ -94,8 +94,14 @@ _SH_DUCK = (
     elems_d=" || ' ' || ".join(f"t[i+{j+1}]" for j in range(SHINGLE_N)),
 )
 
-_H_SPARK = "cast(conv(substr(md5(s), 1, 8), 16, 10) as bigint)"
-_H_DUCK = "CAST(('0x' || substr(md5(s), 1, 8)) AS BIGINT)"
+
+def _md5_bigint(engine: str, col: str) -> str:
+    """The first 32 bits of ``md5(col)`` as a bigint, in ``engine``'s
+    dialect (``conv`` in Spark, a ``'0x'`` cast in DuckDB)."""
+    if engine == "spark":
+        return f"cast(conv(substr(md5({col}), 1, 8), 16, 10) as bigint)"
+    return f"CAST(('0x' || substr(md5({col}), 1, 8)) AS BIGINT)"
+
 
 #: Shared oracle CTEs: tokenized docs -> distinct shingles -> hashes.
 _DUCK_SHINGLES = f"""
@@ -107,9 +113,29 @@ _DUCK_SHINGLES = f"""
         SELECT doc_id, unnest({_SH_DUCK}) AS s FROM toks
     ),
     hashed AS (
-        SELECT doc_id, {_H_DUCK} AS h FROM sh
+        SELECT doc_id, {_md5_bigint("duck", "s")} AS h FROM sh
     )
 """
+
+#: The K minhash minimums of a hashed-shingle column ``h`` — one
+#: aggregate text per hash, the same in both dialects.
+_MH_MINS = [f"min(({A[k]}*h + {B[k]}) % {P}) AS mh{k}" for k in range(NUM_HASHES)]
+
+
+def _band_key(engine: str, b: int) -> str:
+    """Bucket key of LSH band ``b``: md5 over its rows' minhashes."""
+    cols = [f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)]
+    if engine == "spark":
+        return f"md5(concat_ws(',', {', '.join(cols)}))"
+    return "md5({})".format("||','||".join(cols))
+
+
+_LSH_BANDS_SPARK = "explode(array({})) AS x".format(
+    ", ".join(
+        f"struct({b} AS band, {_band_key('spark', b)} AS bh)"
+        for b in range(BANDS)
+    )
+)
 
 
 def shingle_set(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -126,12 +152,8 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
     One shuffle on doc_id with map-side partial mins — signature size is
     constant per doc regardless of document length.
     """
-    hashed = shingles.select("doc_id", F.expr(_H_SPARK).alias("h"))
-    mins = [
-        F.min((F.lit(A[k]) * F.col("h") + F.lit(B[k])) % F.lit(P)).alias(f"mh{k}")
-        for k in range(NUM_HASHES)
-    ]
-    return hashed.groupBy("doc_id").agg(*mins)
+    hashed = shingles.selectExpr("doc_id", f"{_md5_bigint('spark', 's')} AS h")
+    return hashed.groupBy("doc_id").agg(*map(F.expr, _MH_MINS))
 
 
 def minhash_doc_state(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -151,34 +173,15 @@ def minhash_doc_state(docs: DataFrame, text_col: str = "text") -> DataFrame:
     plan branch (bands, both verify sides) reads the materialized rows.
     """
     sh = shingle_set(docs, text_col)
-    hashed = sh.select("doc_id", "s", F.expr(_H_SPARK).alias("h"))
-    mins = [
-        F.min((F.lit(A[k]) * F.col("h") + F.lit(B[k])) % F.lit(P)).alias(f"mh{k}")
-        for k in range(NUM_HASHES)
-    ]
-    return hashed.groupBy("doc_id").agg(F.collect_set("s").alias("ss"), *mins)
+    hashed = sh.selectExpr("doc_id", "s", f"{_md5_bigint('spark', 's')} AS h")
+    return hashed.groupBy("doc_id").agg(
+        F.collect_set("s").alias("ss"), *map(F.expr, _MH_MINS)
+    )
 
 
 def lsh_bands(sig: DataFrame) -> DataFrame:
     """(doc_id, band, bh): one md5 bucket key per band of the signature."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("bh"),
-            )
-            for b in range(BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(bands).alias("x")).select(
+    return sig.selectExpr("doc_id", _LSH_BANDS_SPARK).select(
         "doc_id", "x.band", "x.bh"
     )
 
@@ -287,26 +290,19 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MH_MINS_DUCK = ",\n           ".join(
-    f"min(({A[k]}*h + {B[k]}) % {P}) AS mh{k}" for k in range(NUM_HASHES)
-)
 _BANDS_DUCK = "\n      UNION ALL ".join(
-    "SELECT doc_id, {b} AS band, md5({expr}) AS bh FROM sig".format(
-        b=b,
-        expr="||','||".join(
-            f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        ),
-    )
+    f"SELECT doc_id, {b} AS band, {_band_key('duck', b)} AS bh FROM sig"
     for b in range(BANDS)
 )
 
 
-#: The full minhash-LSH pair pipeline as reusable CTEs ending in
-#: ``dup_pairs`` — shared by the pair query and the connected-components
-#: query so the two oracles can never drift apart.
-_MINHASH_PAIRS_CTES = f"""{_DUCK_SHINGLES},
+_MH_MINS_SQL = ",\n           ".join(_MH_MINS)
+
+#: The minhash-LSH candidate pipeline as reusable CTEs: signatures,
+#: bands, candidate pairs and their shingle intersections.
+_MINHASH_CAND_CTES = f"""{_DUCK_SHINGLES},
     sig AS (
-        SELECT doc_id, {_MH_MINS_DUCK}
+        SELECT doc_id, {_MH_MINS_SQL}
         FROM hashed GROUP BY doc_id
     ),
     bands AS (
@@ -324,7 +320,12 @@ _MINHASH_PAIRS_CTES = f"""{_DUCK_SHINGLES},
         JOIN sh x ON x.doc_id = c.doc_a
         JOIN sh y ON y.doc_id = c.doc_b AND x.s = y.s
         GROUP BY c.doc_a, c.doc_b
-    ),
+    )"""
+
+#: :data:`_MINHASH_CAND_CTES` ending in the verified ``dup_pairs`` —
+#: shared by the pair query and the connected-components queries so
+#: their oracles can never drift apart.
+_MINHASH_PAIRS_CTES = f"""{_MINHASH_CAND_CTES},
     dup_pairs AS (
         SELECT c.doc_a, c.doc_b,
                CAST(COALESCE(i.i, 0) AS DOUBLE)
@@ -373,35 +374,56 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SIMHASH_BITS = 32
-_TH_SPARK = "cast(conv(substr(md5(x), 1, 8), 16, 10) as bigint)"
-_TH_DUCK = "CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT)"
-# Portable bit test: (h div 2^b) % 2 — works identically in both engines.
-_VSUM_SPARK = ",\n        ".join(
-    f"sum(CASE WHEN (h div {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS v{b}"
-    for b in range(_SIMHASH_BITS)
-)
-_VSUM_DUCK = ",\n        ".join(
-    f"sum(CASE WHEN (h // {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS v{b}"
-    for b in range(_SIMHASH_BITS)
-)
+
+
+def _simhash_votes(engine: str) -> list[str]:
+    """One ±1 vote sum per fingerprint bit over a token-hash column
+    ``h``. The bit test ``(h div 2^b) % 2`` is portable; only the
+    integer-division token differs (``div`` vs ``//``)."""
+    div = "div" if engine == "spark" else "//"
+    return [
+        f"sum(CASE WHEN (h {div} {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS v{b}"
+        for b in range(_SIMHASH_BITS)
+    ]
+
+
 _FP_EXPR = " + ".join(
     f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(_SIMHASH_BITS)
 )
+_VSUM_DUCK = ",\n        ".join(_simhash_votes("duck"))
+
+#: Oracle CTEs: tokens -> token hashes -> per-doc bit votes, shared by
+#: both SimHash queries.
+_SIMHASH_VOTES_CTES = f"""toks AS (
+        SELECT doc_id, unnest(string_split_regex(trim(text), '[\\s\\x0b]+')) AS x
+        FROM documents
+    ),
+    hashed AS (SELECT doc_id, {_md5_bigint("duck", "x")} AS h FROM toks),
+    votes AS (
+        SELECT doc_id,
+        {_VSUM_DUCK}
+        FROM hashed GROUP BY doc_id
+    )"""
+
+
+def _simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash): the Spark side of :data:`_SIMHASH_VOTES_CTES`
+    plus the fingerprint select, from the same vote and bit texts."""
+    tokens = docs.withColumn("t", F.split(F.trim(F.col("text")), r"\s+")).select(
+        "doc_id", F.explode("t").alias("x")
+    )
+    votes = (
+        tokens.selectExpr("doc_id", f"{_md5_bigint('spark', 'x')} AS h")
+        .groupBy("doc_id")
+        .agg(*map(F.expr, _simhash_votes("spark")))
+    )
+    return votes.selectExpr("doc_id", f"cast({_FP_EXPR} as bigint) AS simhash")
 
 
 @register(
     "dedup_simhash",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(string_split_regex(trim(text), '[\\s\\x0b]+')) AS x
-        FROM documents
-    ),
-    hashed AS (SELECT doc_id, {_TH_DUCK} AS h FROM toks),
-    votes AS (
-        SELECT doc_id,
-        {_VSUM_DUCK}
-        FROM hashed GROUP BY doc_id
-    )
+    WITH {_SIMHASH_VOTES_CTES}
     SELECT doc_id, CAST({_FP_EXPR} AS BIGINT) AS simhash FROM votes
     """,
 )
@@ -414,21 +436,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (map-side partial sums make the shuffle rows = docs, not
     tokens).
     """
-    docs = table(spark, sf_dir, "documents")
-    hashed = (
-        docs.withColumn("t", F.split(F.trim(F.col("text")), r"\s+"))
-        .select("doc_id", F.explode("t").alias("x"))
-        .select("doc_id", F.expr(_TH_SPARK).alias("h"))
-    )
-    votes = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when((F.expr(f"h div {1 << b}") % 2) == 1, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(_SIMHASH_BITS)
-        ]
-    )
-    return votes.select("doc_id", F.expr(_FP_EXPR).cast("bigint").alias("simhash"))
+    return _simhash_fingerprints(table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -604,21 +612,18 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HAMMING_THRESHOLD = 6  # max differing bits for a simhash near-dup pair
 _SIMHASH_BYTES = 4  # band the 32-bit fingerprint into 4 bytes
+_SIMHASH_BYTE_BANDS = "explode(array({})) AS x".format(
+    ", ".join(
+        f"struct({b} AS band, (simhash div {1 << (b * 8)}) % 256 AS byte)"
+        for b in range(_SIMHASH_BYTES)
+    )
+)
 
 
 @register(
     "dedup_simhash_pairs",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(string_split_regex(trim(text), '[\\s\\x0b]+')) AS x
-        FROM documents
-    ),
-    hashed AS (SELECT doc_id, {_TH_DUCK} AS h FROM toks),
-    votes AS (
-        SELECT doc_id,
-        {_VSUM_DUCK}
-        FROM hashed GROUP BY doc_id
-    ),
+    WITH {_SIMHASH_VOTES_CTES},
     fp AS (SELECT doc_id, CAST({_FP_EXPR} AS BIGINT) AS simhash FROM votes),
     bands AS (
         SELECT doc_id, simhash, b.b AS band,
@@ -649,36 +654,10 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ bucket², never n². The exact guarantee needs ceil(bits/(d+1))
     bands; 4 bands guarantee d <= 3.
     """
-    docs = table(spark, sf_dir, "documents")
-    hashed = (
-        docs.withColumn("t", F.split(F.trim(F.col("text")), r"\s+"))
-        .select("doc_id", F.explode("t").alias("x"))
-        .select("doc_id", F.expr(_TH_SPARK).alias("h"))
+    fp = _simhash_fingerprints(table(spark, sf_dir, "documents"))
+    bands = fp.selectExpr("doc_id", "simhash", _SIMHASH_BYTE_BANDS).select(
+        "doc_id", "simhash", "x.band", "x.byte"
     )
-    votes = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when((F.expr(f"h div {1 << b}") % 2) == 1, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(_SIMHASH_BITS)
-        ]
-    )
-    fp = votes.select("doc_id", F.expr(_FP_EXPR).cast("bigint").alias("simhash"))
-    bands = fp.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (F.expr(f"simhash div {1 << (b * 8)}") % 256).alias("byte"),
-                    )
-                    for b in range(_SIMHASH_BYTES)
-                ]
-            )
-        ).alias("x"),
-    ).select("doc_id", "simhash", "x.band", "x.byte")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -1375,7 +1354,9 @@ def onesided_candidates(
     """
     from pyspark.sql.window import Window
 
-    hashed = shingles.select("doc_id", F.expr(_H_SPARK).alias("h")).distinct()
+    hashed = shingles.selectExpr(
+        "doc_id", f"{_md5_bigint('spark', 's')} AS h"
+    ).distinct()
     rare_h = (
         hashed.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -1448,7 +1429,7 @@ def _planted_corpus(docs: DataFrame) -> DataFrame:
         SELECT doc_id, string_split_regex(trim(text), '[\\s\\x0b]+') AS t FROM docs2
     ),
     sh AS (SELECT doc_id, unnest({_SH_DUCK}) AS s FROM toks),
-    hashed AS (SELECT DISTINCT doc_id, {_H_DUCK} AS h FROM sh),
+    hashed AS (SELECT DISTINCT doc_id, {_md5_bigint("duck", "s")} AS h FROM sh),
     rare_h AS (
         SELECT h FROM hashed
         GROUP BY h HAVING count(DISTINCT doc_id) <= {ONESIDED_MAX_DF}
@@ -1754,7 +1735,7 @@ def docs_shingle_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash estimator calibration (estimate vs exact Jaccard)
 # ---------------------------------------------------------------------------
 
-_MH_MATCHES_DUCK = " + ".join(
+_MH_MATCHES = " + ".join(
     f"(CASE WHEN sa.mh{k} = sb.mh{k} THEN 1 ELSE 0 END)"
     for k in range(NUM_HASHES)
 )
@@ -1763,30 +1744,10 @@ _MH_MATCHES_DUCK = " + ".join(
 @register(
     "dedup_minhash_calibration",
     oracle=f"""
-    WITH {_DUCK_SHINGLES},
-    sig AS (
-        SELECT doc_id, {_MH_MINS_DUCK}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-      {_BANDS_DUCK}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, count(*) AS i
-        FROM cand c
-        JOIN sh x ON x.doc_id = c.doc_a
-        JOIN sh y ON y.doc_id = c.doc_b AND x.s = y.s
-        GROUP BY c.doc_a, c.doc_b
-    ),
+    WITH {_MINHASH_CAND_CTES},
     scored AS (
         SELECT c.doc_a, c.doc_b,
-               CAST(({_MH_MATCHES_DUCK}) AS DOUBLE) / {NUM_HASHES} AS est,
+               CAST(({_MH_MATCHES}) AS DOUBLE) / {NUM_HASHES} AS est,
                CAST(COALESCE(i.i, 0) AS DOUBLE)
                    / (za.n + zb.n - COALESCE(i.i, 0)) AS exact
         FROM cand c
@@ -1824,10 +1785,6 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(shingles)
     pairs = candidate_pairs(lsh_bands(sigs))
     exact = jaccard_verified(pairs, shingles)  # unfiltered: all candidates
-    matches = " + ".join(
-        f"(CASE WHEN sa.mh{k} = sb.mh{k} THEN 1 ELSE 0 END)"
-        for k in range(NUM_HASHES)
-    )
     sa = sigs.alias("sa")
     sb = sigs.alias("sb")
     est = (
@@ -1835,7 +1792,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sa, F.col("sa.doc_id") == F.col("p.doc_a"))
         .join(sb, F.col("sb.doc_id") == F.col("p.doc_b"))
         .select(
-            F.expr(f"cast(({matches}) as double) / {NUM_HASHES}").alias("est"),
+            F.expr(f"cast(({_MH_MATCHES}) as double) / {NUM_HASHES}").alias("est"),
             F.col("p.jaccard").alias("exact"),
         )
     )
@@ -1937,27 +1894,7 @@ _SWEEP_COLS_SQL = ",\n           ".join(
 @register(
     "dedup_threshold_sweep",
     oracle=f"""
-    WITH {_DUCK_SHINGLES},
-    sig AS (
-        SELECT doc_id, {_MH_MINS_DUCK}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-      {_BANDS_DUCK}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, count(*) AS i
-        FROM cand c
-        JOIN sh x ON x.doc_id = c.doc_a
-        JOIN sh y ON y.doc_id = c.doc_b AND x.s = y.s
-        GROUP BY c.doc_a, c.doc_b
-    ),
+    WITH {_MINHASH_CAND_CTES},
     scored AS (
         SELECT c.doc_a, c.doc_b,
                CAST(COALESCE(i.i, 0) AS DOUBLE)

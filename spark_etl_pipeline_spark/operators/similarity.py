@@ -96,13 +96,6 @@ def dot_expr(a: str, b: str) -> str:
     )
 
 
-def cosine_expr(a: str, b: str) -> str:
-    return (
-        f"{dot_expr(a, b)} / "
-        f"(sqrt({dot_expr(a, a)}) * sqrt({dot_expr(b, b)}))"
-    )
-
-
 def _duck_dot(a: str, b: str) -> str:
     return (
         f"list_reduce(list_prepend(0.0::DOUBLE, "

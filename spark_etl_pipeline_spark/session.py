@@ -169,6 +169,11 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Every SQL execution stringifies its plan, and Spark truncates
+        # any node wider than 25 fields (with a WARN). The widest
+        # registered plan is the 33-column SimHash vote aggregate, so 64
+        # keeps every plan whole and the warning silent.
+        .config("spark.sql.debug.maxToStringFields", "64")
     )
     if master is None and not _cluster_master_configured():
         master = f"local[{cpus}]"

@@ -9,6 +9,8 @@ here.
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 
 from spark_etl_pipeline_spark.plans import registry
@@ -17,9 +19,24 @@ from tests.conftest import SF_CORRECTNESS
 registry.load_all()
 
 
-def plan_of(spark, name: str) -> str:
+@functools.cache
+def _executed_plan(spark, name: str) -> str:
     df = registry.REGISTRY[name].builder(spark, SF_CORRECTNESS)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_of(spark, name: str) -> str:
+    """The executed-plan string of a registered query, built once per
+    module: several gates read every query's plan, and the tests here
+    that change a conf restore it and never call this. A truncated plan
+    (``... N more fields``) would hide columns from the regex gates, so
+    it fails."""
+    plan = _executed_plan(spark, name)
+    assert "more fields" not in plan, (
+        f"{name}: plan string truncated — raise "
+        "spark.sql.debug.maxToStringFields in session.get_spark"
+    )
+    return plan
 
 
 ALL_QUERIES = sorted(registry.REGISTRY)
