@@ -42,7 +42,7 @@ from spark_etl_pipeline_spark.operators.store_meta import (
     check_store_stamp,
     write_store_stamp,
 )
-from spark_etl_pipeline_spark.plans.registry import register, table
+from spark_etl_pipeline_spark.plans.registry import register, store_dir, table
 
 # ---------------------------------------------------------------------------
 # Shared constants (MUST stay in sync between Spark builders and oracles)
@@ -1234,11 +1234,9 @@ def docs_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives everything in-plan. Equality of the two rows is the proof
     that the materialized ingest shape loses nothing.
     """
-    import tempfile
-
     docs = table(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % 4 == 3
-    store = tempfile.mkdtemp(prefix="spark_etl_sigstore_")
+    store = store_dir("spark_etl_sigstore_")
     build_signature_store(docs.filter(~is_delta), store)
     return probe_signature_store(spark, store, docs.filter(is_delta)).select(
         "doc_id",
@@ -1278,7 +1276,7 @@ def containment_verified(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH {_MINHASH_PAIRS_CTES.replace("dup_pairs AS", "jacc_pairs AS")},
+    WITH {_MINHASH_CAND_CTES},
     conts AS (
         SELECT c.doc_a, c.doc_b,
                CAST(COALESCE(i.i, 0) AS DOUBLE) / sa.n AS cont_a,

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_etl_pipeline_spark.operators import broadcast_if_fits, rounds
-from spark_etl_pipeline_spark.plans.registry import register, table
+from spark_etl_pipeline_spark.plans.registry import register, store_dir, table
 
 DIM = 64
 N_QUERIES = 10  # query set: vec_id < N_QUERIES
@@ -1318,11 +1318,9 @@ def sim_embedding_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equality of the two proves the materialized ingest shape loses
     nothing (the embedding twin of ``docs_dedup_store``).
     """
-    import tempfile
-
     emb = load_vectors(spark, sf_dir)
     is_delta = F.col("vec_id") % 4 == 3
-    store = tempfile.mkdtemp(prefix="spark_etl_embstore_")
+    store = store_dir("spark_etl_embstore_")
     build_embedding_store(emb.filter(~is_delta), store)
     return probe_embedding_store(spark, store, emb.filter(is_delta))
 

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_etl_pipeline_spark.operators import rounds
-from spark_etl_pipeline_spark.plans.registry import register, table
+from spark_etl_pipeline_spark.plans.registry import register, store_dir, table
 
 #: Session inactivity gap: 30 minutes, in integer microseconds.
 SESSION_GAP_US = 30 * 60 * 1_000_000
@@ -584,11 +584,9 @@ def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest shape a 100-TB pipeline actually runs — append partials,
     merge on read, never rescan.
     """
-    import tempfile
-
     events = table(spark, sf_dir, "events")
     is_delta = F.to_date("ts") >= F.lit(ROLLUP_CUTOFF).cast("date")
-    store = tempfile.mkdtemp(prefix="spark_etl_rollup_")
+    store = store_dir("spark_etl_rollup_")
     build_daily_rollup(events.filter(~is_delta), store)
     return merge_rollup(spark, store, events.filter(is_delta))
 

@@ -355,6 +355,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def store_dir(prefix: str) -> str:
+    """A fresh temp directory for a builder's on-disk store, removed at
+    interpreter exit. The DataFrame a store-backed builder returns reads
+    its store lazily, so no earlier point is safe to remove it."""
+    import atexit
+    import shutil
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every synthetic table as a temp view named after itself.
 

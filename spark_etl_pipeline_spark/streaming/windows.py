@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_etl_pipeline_spark.functions import cents
-from spark_etl_pipeline_spark.plans.registry import register, table
+from spark_etl_pipeline_spark.plans.registry import register, store_dir, table
 from spark_etl_pipeline_spark.streaming.source import events_stream, stream_from_glob
 
 
@@ -662,11 +662,9 @@ def stream_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate) — stream-lifetime-independent, the only viable dedup at
     100 TB/day.
     """
-    import tempfile
-
     ev = table(spark, sf_dir, "events")
     replayed = ev.union(ev.filter(F.col("event_id") % 10 == 0))
-    src = tempfile.mkdtemp(prefix="spark_etl_replay_src_")
+    src = store_dir("spark_etl_replay_src_")
     replayed.write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = stream_from_glob(spark, f"{src}/*.parquet", schema, [])

@@ -14,8 +14,9 @@ directory's rows (wrong data, no error: the worst failure class).
 All seven now pass tables as parameterized ``spark.sql`` DataFrame
 args (SPARK-44140), which bind in the query's own scope.
 
-A full-registry lock-step sweep (``tools/rehearse_concurrent.py``)
-then found the second violation of the same class: the eight
+A full-registry lock-step sweep (a since-deleted tool,
+``b001c7f:tools/rehearse_concurrent.py``) then found the second
+violation of the same class: the eight
 memory-sink streaming drains used FIXED ``queryName``\\ s — a streaming
 query name and the memory-sink table behind it are also session-global
 names — so concurrent invocations collided at ``start()``, and the
@@ -37,6 +38,9 @@ Pins:
 - live races: the worst temp-view offender AND a memory-sink drain
   re-run concurrently on two directories with distinguishable results
   must match their per-dir serial baselines on every concurrent run.
+
+The two static gates cover every registered builder for both failure
+classes the sweep found; the live races check a sample.
 """
 
 from __future__ import annotations

@@ -92,6 +92,12 @@ def _canon(pdf):
     ).reset_index(drop=True)
 
 
+def _cell(v):
+    """A cell as compared: its string, with None and NaN equal
+    (``tools/rehearse_gate.cells_match``)."""
+    return None if v is None or (isinstance(v, float) and math.isnan(v)) else str(v)
+
+
 def _assert_matches_oracle(name, spark_pdf, duck_pdf):
     """The shared Spark-vs-DuckDB comparison every hostile pin uses:
     row count, column set, then NaN-aware string-rendered cell equality
@@ -104,12 +110,7 @@ def _assert_matches_oracle(name, spark_pdf, duck_pdf):
     s, d = _canon(spark_pdf), _canon(duck_pdf)
     for col in s.columns:
         for i, (a, b) in enumerate(zip(s[col].tolist(), d[col].tolist())):
-            a_nan = a is None or (isinstance(a, float) and math.isnan(a))
-            b_nan = b is None or (isinstance(b, float) and math.isnan(b))
-            if a_nan or b_nan:
-                assert a_nan and b_nan, f"{name}.{col}[{i}]: {a!r} != {b!r}"
-                continue
-            assert str(a) == str(b), f"{name}.{col}[{i}]: {a!r} != {b!r}"
+            assert _cell(a) == _cell(b), f"{name}.{col}[{i}]: {a!r} != {b!r}"
 
 
 @pytest.mark.parametrize("name", HOSTILE_QUERIES)
@@ -1711,3 +1712,71 @@ def test_agrees_with_oracle_on_times_skew_drift_widen(
     spark_pdf = spec.builder(spark, times_skew_drift_widen_dir).toPandas()
     duck_pdf = times_skew_drift_widen_duck.sql(spec.oracle).df()
     _assert_matches_oracle(name, spark_pdf, duck_pdf)
+
+
+# ---------------------------------------------------------------------------
+# Row multiplicity: every row tripled
+# ---------------------------------------------------------------------------
+
+#: ``dup3`` triples every row, which breaks the corpus contract that
+#: doc_id / vec_id / event_id are unique. The engine is compared with
+#: itself, not with DuckDB: its set-based operators must return the same
+#: DISTINCT rows on the tripled corpus as on the clean one (row counts
+#: may grow — per-row outputs triple), except in the columns that count
+#: input rows. Each sampled query maps to those columns, with the reason;
+#: an empty tuple means the query is set-invariant as a whole.
+DUP3_COUNT_COLUMNS: dict[str, tuple[str, ...]] = {
+    # Jaccard over collect_set shingle sets of DISTINCT candidate pairs
+    "dedup_minhash_lsh": (),
+    # containment over the same shingle sets
+    "dedup_containment": (),
+    # per-row block join: each pair repeats 9x, the distinct pairs do not
+    "dedup_ngram_jaccard": (),
+    # counts DISTINCT candidate pairs per threshold
+    "dedup_threshold_sweep": (),
+    # one output row per surviving input row: each survivor triples
+    "docs_dedup_corpus": (),
+    "docs_dedup_incremental": (),
+    # per-event as-of match: only the matched date is projected
+    "rel_asof_join": (),
+    # one output row per input payload: each row triples
+    "mm_payload_impurity": (),
+    # term and document frequencies count rows, and score is tf * N / df
+    "docs_tfidf_topk": ("tf", "doc_freq", "score"),
+    # counts the shared eval shingle rows, which triple
+    "text_decontaminate": ("n_shared",),
+}
+
+
+@pytest.fixture(scope="module")
+def dup3_dir(spark, tmp_path_factory):
+    """sf0.001 with every row of every table written three times."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
+    from tools.stage_hostile import stage
+
+    out = str(tmp_path_factory.mktemp("hostile") / "dup3")
+    stage("dup3", SF_SMOKE, out, spark=spark)
+    return out
+
+
+def _distinct_rows(df, drop):
+    """The distinct rows of ``df`` without the ``drop`` columns."""
+    return {tuple(map(_cell, row)) for row in df.drop(*drop).collect()}
+
+
+@pytest.mark.parametrize("name", DUP3_COUNT_COLUMNS)
+def test_dup3_key_sets_match_clean(spark, dup3_dir, name):
+    registry.load_all()
+    build = registry.REGISTRY[name].builder
+    drop = DUP3_COUNT_COLUMNS[name]
+    clean = _distinct_rows(build(spark, SF_SMOKE), drop)
+    tripled = _distinct_rows(build(spark, dup3_dir), drop)
+    assert clean, f"{name}: no rows on the clean corpus"
+    assert tripled == clean, (
+        f"{name}: {len(clean - tripled)} clean rows missing and "
+        f"{len(tripled - clean)} new rows under dup3, e.g. "
+        f"{sorted(clean ^ tripled, key=str)[:3]}"
+    )

@@ -300,15 +300,17 @@ _TREE_DOCS = (
 def test_cited_repo_paths_exist():
     """Every repo path a tracked script or tree doc cites exists, so a
     deleted tool or record cannot stay cited as if it were present.
-    Checked: ``tools/*.py``, ``tests/*.py`` and the root ``*_rNN*.json``
-    records. A citation of a deleted file names its commit instead
-    (``0dc33e4:tools/x.py``), which the lookbehind skips."""
+    Checked: ``tools/*.py``, ``tests/*.py``, the ``tests/*.json``
+    fixtures and the root ``*_rNN*.json`` records. A citation of a
+    deleted file names its commit instead (``0dc33e4:tools/x.py``),
+    which the lookbehind skips."""
     import re
     import subprocess
     from pathlib import Path
 
     cited = re.compile(
-        r"(?<![\w/.:-])((?:tools|tests)/\w+\.py|[A-Za-z]+_r\d\d\w*\.json)"
+        r"(?<![\w/.:-])((?:tools|tests)/\w+\.py|tests/\w+\.json"
+        r"|[A-Za-z]+_r\d\d\w*\.json)"
     )
 
     root = Path(__file__).resolve().parent.parent

@@ -3,6 +3,11 @@ incremental dedup, and append must equal a from-scratch rebuild."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from spark_etl_pipeline_spark.operators.dedup import (
@@ -147,3 +152,48 @@ def test_store_refuses_constants_mismatch(spark, tmp_path):
     write_store_stamp(spark, vstore, "hyperplane", "deadbeef-old-constants")
     with pytest.raises(ValueError, match="different\\s+constants"):
         probe_embedding_store(spark, vstore, vdelta)
+
+
+#: The registered builders that write an on-disk store (or stream
+#: source) under the temp directory, with their directory prefixes.
+STORE_QUERIES = {
+    "docs_dedup_store": "spark_etl_sigstore_",
+    "sim_embedding_store": "spark_etl_embstore_",
+    "events_incremental_rollup": "spark_etl_rollup_",
+    "stream_dedup_drain": "spark_etl_replay_src_",
+}
+
+_BUILD_STORES = f"""
+import os, tempfile
+from spark_etl_pipeline_spark.plans import registry
+from spark_etl_pipeline_spark.session import get_spark
+registry.load_all()
+spark = get_spark("store-dirs")
+for name in {list(STORE_QUERIES)!r}:
+    registry.REGISTRY[name].builder(spark, {SF_SMOKE!r}).collect()
+print(*os.listdir(tempfile.gettempdir()))
+"""
+
+
+def _stores(names):
+    return sorted(n for n in names if n.startswith(tuple(STORE_QUERIES.values())))
+
+
+def test_store_dirs_are_removed_at_exit(tmp_path):
+    """Every build of a store-backed query makes a fresh store directory;
+    the process that built it removes it when it exits, so repeated
+    builds do not fill the temp directory."""
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("MASTER", "SPARK_MASTER", "PYSPARK_SUBMIT_ARGS")
+    }
+    env.update(TMPDIR=str(tmp_path), SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="512m")
+    out = subprocess.run(
+        [sys.executable, "-c", _BUILD_STORES],
+        cwd=Path(__file__).resolve().parents[1], env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    # each build made its store under the redirected temp directory
+    assert len(_stores(out.stdout.split())) == len(STORE_QUERIES), out.stdout
+    assert _stores(os.listdir(tmp_path)) == []

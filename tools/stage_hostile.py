@@ -35,11 +35,12 @@ exercise:
   ``--conf spark.sql.session.timeZone=Europe/Dublin`` (and
   ``America/Santiago``) to cross the axis.
 - ``dup3``: every row tripled — a deliberate VIOLATION of the corpus
-  contract (doc_id/vec_id/event_id are declared unique). Run to map
-  the contract boundary, not as a pass/fail gate: the engine's
-  set-based operators behave sanely under it (identical LSH pairs,
-  per-row fan-outs), while several DuckDB oracle mirrors — written
-  against the contract — legitimately diverge. See COVERAGE.md.
+  contract (doc_id/vec_id/event_id are declared unique). The engine's
+  set-based operators return the same distinct key rows on it as on
+  the clean corpus; only columns that count input rows change.
+  ``tests/test_hostile_inputs.py`` (``DUP3_COUNT_COLUMNS``) checks
+  this against the engine itself, not against the DuckDB oracles,
+  which are written against the contract. See COVERAGE.md.
 - ``single``: same schemas, exactly ONE row per table — the
   degenerate-statistics layout (a brand-new series, a group with one
   member). Sample variance, correlation, pairwise-slope sets, and
