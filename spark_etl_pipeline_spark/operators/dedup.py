@@ -882,28 +882,38 @@ def connected_components_star(
     ).select("id", F.coalesce("label", F.col("id")).alias("label"))
 
 
+def components_ctes(pairs: str, a: str, b: str) -> str:
+    """The oracle of :func:`connected_components` over the pair CTE
+    ``pairs(a, b)``, as CTEs for a ``WITH RECURSIVE`` statement:
+    ``edges`` (both directions), the recursive ``reach`` (every vertex
+    with each id it reaches) and ``comp(v, component)``, the smallest
+    id each vertex of a pair reaches — the min-label fixpoint every
+    CC-backed oracle reads."""
+    return f"""edges AS (
+        SELECT {a} AS src, {b} AS dst FROM {pairs}
+        UNION ALL
+        SELECT {b}, {a} FROM {pairs}
+    ),
+    reach AS (
+        SELECT DISTINCT src AS v, src AS label FROM edges
+        UNION
+        SELECT g.dst AS v, r.label
+        FROM reach r JOIN edges g ON g.src = r.v
+    ),
+    comp AS (SELECT v, MIN(label) AS component FROM reach GROUP BY v)"""
+
+
 #: Shared by ``dedup_components`` (label propagation) and
 #: ``dedup_components_star`` (star contraction): both compute the same
 #: fixpoint, so they share one recursive-CTE oracle — any semantic drift
 #: between the two algorithms fails one of the two green rows.
 _COMPONENTS_ORACLE = f"""
     WITH RECURSIVE {_MINHASH_PAIRS_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM dup_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT src AS v, src AS label FROM edges
-        UNION
-        SELECT e.dst AS v, r.label
-        FROM reach r JOIN edges e ON e.src = r.v
-    )
+    {components_ctes('dup_pairs', 'doc_a', 'doc_b')}
     SELECT v AS doc_id,
-           CAST(MIN(label) AS BIGINT) AS component,
-           CASE WHEN MIN(label) = v THEN 1 ELSE 0 END AS is_canonical
-    FROM reach
-    GROUP BY v
+           CAST(component AS BIGINT) AS component,
+           CASE WHEN component = v THEN 1 ELSE 0 END AS is_canonical
+    FROM comp
     """
 
 
@@ -948,20 +958,8 @@ def dedup_components_star_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_dedup_corpus",
     oracle=f"""
     WITH RECURSIVE {_MINHASH_PAIRS_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM dup_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT src AS v, src AS label FROM edges
-        UNION
-        SELECT e.dst AS v, r.label
-        FROM reach r JOIN edges e ON e.src = r.v
-    ),
-    dropped AS (
-        SELECT v FROM reach GROUP BY v HAVING MIN(label) != v
-    )
+    {components_ctes('dup_pairs', 'doc_a', 'doc_b')},
+    dropped AS (SELECT v FROM comp WHERE component != v)
     SELECT d.doc_id, d.lang, md5(d.text) AS content_md5,
            CAST(d.n_chars AS BIGINT) AS n_chars
     FROM documents d
@@ -1498,20 +1496,7 @@ def dedup_containment_onesided(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_cluster_sizes",
     oracle=f"""
     WITH RECURSIVE {_MINHASH_PAIRS_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM dup_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT src AS v, src AS label FROM edges
-        UNION
-        SELECT e.dst AS v, r.label
-        FROM reach r JOIN edges e ON e.src = r.v
-    ),
-    comp AS (
-        SELECT v, MIN(label) AS component FROM reach GROUP BY v
-    ),
+    {components_ctes('dup_pairs', 'doc_a', 'doc_b')},
     csizes AS (
         SELECT component, COUNT(*) AS cluster_size FROM comp GROUP BY component
     )
@@ -1610,15 +1595,16 @@ def docs_dedup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min (doc_id, idx) — deterministic first-wins, same tiebreak rule
     as every survivor choice in this module) survives, later repeats are
     dropped; each doc is reassembled from its surviving passages in
-    order.
+    order. The survivors are read straight off the first-occurrence
+    aggregate, so a passage survives once even when copies of a
+    document share its (doc_id, idx).
 
     Scale: one shuffle on the passage md5 (map-side-combinable MIN of
-    a (doc_id, idx) struct — no window over the corpus), an AQE-sized
-    join back to tag survivors, and a per-doc reassembly aggregate
-    whose state is bounded by document length. Passage rows are
-    corpus-token-sized but never self-joined — this is exact hashing,
-    not similarity: near-duplicate passages need the MinHash path
-    (:func:`dedup_minhash_lsh`).
+    a (doc_id, idx, ptext) struct — no window over the corpus, no join
+    back) and a per-doc reassembly aggregate whose state is bounded by
+    document length. Passage rows are corpus-token-sized but never
+    self-joined — this is exact hashing, not similarity: near-duplicate
+    passages need the MinHash path (:func:`dedup_minhash_lsh`).
     """
     from spark_etl_pipeline_spark.operators.text import with_tokens
 
@@ -1641,20 +1627,14 @@ def docs_dedup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" {PASSAGE_TOKENS}))"
             ).alias("ptext"),
         )
-        # three consumers (first-wins agg, survivor join probe, per-doc
-        # stats) — materialize the corpus-token-sized explode ONCE
+        # two consumers (first-wins agg, per-doc stats) — materialize
+        # the corpus-token-sized explode ONCE
         .localCheckpoint(eager=True)
     )
-    first = passages.groupBy(F.md5("ptext").alias("h")).agg(
-        F.min(F.struct("doc_id", "idx")).alias("f")
-    )
     kept = (
-        passages.withColumn("h", F.md5("ptext"))
-        .join(first, "h")
-        .filter(
-            (F.col("doc_id") == F.col("f.doc_id")) & (F.col("idx") == F.col("f.idx"))
-        )
-        .select("doc_id", "idx", "ptext")
+        passages.groupBy(F.md5("ptext").alias("h"))
+        .agg(F.min(F.struct("doc_id", "idx", "ptext")).alias("f"))
+        .select("f.doc_id", "f.idx", "f.ptext")
     )
     stats = passages.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_passages"))
     reassembled = kept.groupBy("doc_id").agg(

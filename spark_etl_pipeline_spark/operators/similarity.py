@@ -19,7 +19,10 @@ the engine's extension baseline). Three tiers:
 
 All vector math runs JVM-side (`zip_with` + `aggregate` left folds over
 double arrays — no Python in the hot path) and is bit-identical to the
-DuckDB oracles (same element order, same IEEE-754 ops; verified).
+DuckDB oracles (same element order, same IEEE-754 ops): one generator,
+:func:`fold`, emits both dialects of every array kernel, and each
+oracle fragment (``_DUCK_E``, ``_duck_top``, ``_duck_nearest``, …) is
+written once and read by every oracle that needs it.
 """
 
 from __future__ import annotations
@@ -30,6 +33,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_etl_pipeline_spark.operators import broadcast_if_fits, rounds
+from spark_etl_pipeline_spark.operators.dedup import (
+    components_ctes,
+    connected_components,
+)
 from spark_etl_pipeline_spark.plans.registry import register, store_dir, table
 
 DIM = 64
@@ -78,11 +85,31 @@ def _vec(col: str = "embedding") -> Column:
     return F.expr(f"transform({col}, x -> cast(x as double))")
 
 
-def dot_expr(a: str, b: str) -> str:
-    """Left-fold dot product — deterministic summation order.
+#: The array kernels, each one text for both engines: kernel ->
+#: (term over the elements {x}, {y}; accumulator type; the lambda
+#: parameter names of the Spark form, which its plans print).
+#: ``checksum`` folds a quantized vector against its 1-based positions
+#: (``b=None`` in :func:`fold`).
+FOLDS = {
+    "dot": ("{x} * {y}", "double", ("x", "y")),
+    "sqdist": ("({x} - {y}) * ({x} - {y})", "double", ("x", "y")),
+    "idot": ("{x} * {y}", "bigint", ("x", "y")),
+    "checksum": ("{x} * {y}", "bigint", ("q", "i")),
+}
 
-    The ``aggregate(zip_with(...))`` form is the measured-fastest JVM
-    shape for this fold: an r15 A/B rejected a fully unrolled
+
+def fold(engine: str, kernel: str, a: str, b: str | None = None) -> str:
+    """Σ term(a[i], b[i]) for i = 1..DIM as a left fold from a typed zero,
+    as Spark SQL (``engine="spark"``) or DuckDB (``"duck"``).
+
+    Both dialects add the same per-element terms in index order from the
+    same zero, so they agree bit for bit on doubles — every oracle
+    compares engine folds against DuckDB folds of this one text
+    (``tests/test_fold_dialects.py`` pins it on order-sensitive
+    values). ``b=None`` folds against the positions 1..DIM.
+
+    The Spark ``aggregate(zip_with(...))`` form is the measured-fastest
+    JVM shape for this fold: an r15 A/B rejected a fully unrolled
     ``v[0]*w[0]+…`` expression (8× slower, codegen bailout on the giant
     tree) and an r16 A/B rejected an indexed
     ``aggregate(sequence(1, DIM), …, (s, i) -> s + try_element_at(a, i)
@@ -90,24 +117,27 @@ def dot_expr(a: str, b: str) -> str:
     warm on a 2M-pair microbench — per-element bounds checks cost more
     than zip_with's one product-array allocation per pair).
     """
+    term, acc, (x, y) = FOLDS[kernel]
+    if engine == "spark":
+        zero = "cast(0.0 as double)" if acc == "double" else "cast(0 as bigint)"
+        b = f"sequence(1L, {DIM}L)" if b is None else b
+        return (
+            f"aggregate(zip_with({a}, {b}, ({x}, {y}) -> "
+            f"{term.format(x=x, y=y)}), {zero}, (s, x) -> s + x)"
+        )
+    zero = "0.0::DOUBLE" if acc == "double" else "CAST(0 AS BIGINT)"
+    yi = "i" if b is None else f"{b}[i]"
     return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        "cast(0.0 as double), (s, x) -> s + x)"
-    )
-
-
-def _duck_dot(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(generate_series(1, {DIM}), i -> {a}[i] * {b}[i])), "
-        "(s, x) -> s + x)"
+        f"list_reduce(list_prepend({zero}, "
+        f"list_transform(generate_series(1, {DIM}), "
+        f"i -> {term.format(x=f'{a}[i]', y=yi)})), (s, x) -> s + x)"
     )
 
 
 def _duck_cos(a: str, b: str) -> str:
     return (
-        f"{_duck_dot(a, b)} / "
-        f"(sqrt({_duck_dot(a, a)}) * sqrt({_duck_dot(b, b)}))"
+        f"{fold('duck', 'dot', a, b)} / "
+        f"(sqrt({fold('duck', 'dot', a, a)}) * sqrt({fold('duck', 'dot', b, b)}))"
     )
 
 
@@ -206,7 +236,7 @@ def topk_cosine(
     bit-identical result (the same sqrt doubles multiply in the same
     order as the inline form the oracle uses).
     """
-    nrm = F.expr(f"sqrt({dot_expr('v', 'v')})")
+    nrm = F.expr(f"sqrt({fold('spark', 'dot', 'v', 'v')})")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -215,24 +245,127 @@ def topk_cosine(
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"), "v", nrm.alias("nn")
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.expr(dot_expr("qv", "v")) / (F.col("qn") * F.col("nn"))).alias("cos"),
-        )
+    return _cosine_topk(q, c, k, nv="v")
+
+
+def _cosine_topk(
+    q: DataFrame, n: DataFrame, k: int, on: str | None = None, nv: str = "nv"
+) -> DataFrame:
+    """The scored tail of every exact-cosine search: broadcast the
+    |Q|-row query side ``q(query_id, qv, qn)`` against the corpus side
+    ``n(neighbor_id, <nv>, nn)`` — a cross join, or an equi-join on the
+    cell column ``on`` — drop self-pairs, score ``dot / (qn · nn)`` and
+    keep the top ``k`` per query."""
+    j = F.broadcast(q).crossJoin(n) if on is None else F.broadcast(q).join(n, on)
+    scored = j.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        (F.expr(fold("spark", "dot", "qv", nv)) / (F.col("qn") * F.col("nn"))).alias(
+            "cos"
+        ),
     )
+    return _per_query_top(scored, "cos", k)
+
+
+def _per_query_top(df: DataFrame, score: str, k: int, rn: str = "rn") -> DataFrame:
+    """The first ``k`` rows per query_id by ``score`` descending, ties
+    on the smaller neighbor_id — the engine twin of :func:`_duck_top`."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
+        F.col(score).desc(), F.col("neighbor_id")
     )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k).drop(rn)
+
+
+#: The oracle twin of :func:`load_vectors`: the usable vectors as DOUBLE[].
+_DUCK_E = """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+         WHERE len(list_filter(embedding, x -> x <> 0)) > 0)"""
+
+
+def _duck_top(
+    src: str, k: int, cols: str = "query_id, neighbor_id, cos", score: str = "cos"
+) -> str:
+    """``cols`` of the first ``k`` rows of ``src`` per query_id by
+    ``score`` descending, ties on the smaller neighbor_id."""
+    return f"""SELECT {cols} FROM (
+            SELECT *, row_number() OVER (PARTITION BY query_id
+                          ORDER BY {score} DESC, neighbor_id) AS rn
+            FROM {src})
+        WHERE rn <= {k}"""
+
+
+def _duck_exact(k: int) -> str:
+    """``exact``: the brute-force top-``k`` cosine neighbors of each
+    query — the oracle twin of :func:`topk_cosine`."""
+    return f"""exact_scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               {_duck_cos('q.v', 'c.v')} AS cos
+        FROM e q JOIN e c ON c.vec_id != q.vec_id
+        WHERE q.vec_id < {N_QUERIES}
+    ),
+    exact AS ({_duck_top('exact_scored', k)})"""
+
+
+def _duck_nearest(
+    name: str, cents: str, order: str, n: int = 1, where: str = ""
+) -> str:
+    """``name(vec_id, cell)``: each vector of ``e`` (those matching
+    ``where``, if given) in its ``n`` first cells of ``cents(cid, cv)``
+    by ``order``, ties on the smaller cid — the oracle twin of
+    :func:`assign_nearest` and :func:`assign_topn`."""
+    where = f" WHERE {where}" if where else ""
+    return f"""{name} AS (
+        SELECT vec_id, cid AS cell FROM (
+            SELECT e.vec_id, c.cid,
+                   row_number() OVER (PARTITION BY e.vec_id
+                       ORDER BY {order}, c.cid) AS rn
+            FROM e CROSS JOIN {cents} c{where})
+        WHERE rn <= {n}
+    )"""
+
+
+def _duck_cell_top3(qassign: str, nassign: str) -> str:
+    """``ivf``: the exact top-3 of each query of ``qassign(vec_id,
+    cell)`` among the other vectors of its cells in ``nassign``."""
+    return f"""ivf_scored AS (
+        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+               {_duck_cos('qe.v', 'ne.v')} AS cos
+        FROM {qassign} q
+        JOIN {nassign} n ON n.cell = q.cell AND n.vec_id != q.vec_id
+        JOIN e qe ON qe.vec_id = q.vec_id
+        JOIN e ne ON ne.vec_id = n.vec_id
+    ),
+    ivf AS ({_duck_top('ivf_scored', 3)})"""
+
+
+def _duck_ivf(nprobe: int) -> str:
+    """``ivf``: the oracle twin of :func:`_ivf_topk` — corpus vectors
+    in their nearest sampled cell, queries in their top-``nprobe``
+    cells, the exact top-3 inside the probed cells."""
+    order = f"{_duck_cos('e.v', 'c.cv')} DESC"
+    return f"""cents AS (SELECT vec_id AS cid, v AS cv FROM e
+              WHERE vec_id % {CENTROID_STRIDE} = 0),
+    {_duck_nearest('assign', 'cents', order)},
+    {_duck_nearest('qassign', 'cents', order, nprobe, f"e.vec_id < {N_QUERIES}")},
+    {_duck_cell_top3('qassign', 'assign')}"""
+
+
+def _duck_recall(nprobe: int) -> str:
+    """The oracle of :func:`_ann_recall`: recall@3 of ``_duck_ivf``
+    against the exact top-3."""
+    return f"""
+    WITH {_DUCK_E},
+    {_duck_exact(3)},
+    {_duck_ivf(nprobe)}
+    SELECT x.query_id,
+           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_hits,
+           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS DOUBLE) / 3 AS recall
+    FROM exact x
+    LEFT JOIN ivf i ON i.query_id = x.query_id
+                   AND i.neighbor_id = x.neighbor_id
+    GROUP BY x.query_id
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -243,19 +376,9 @@ def topk_cosine(
 @register(
     "sim_topk_cosine",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_duck_cos('q.v', 'c.v')} AS cos
-        FROM e q JOIN e c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-    )
-    SELECT query_id, neighbor_id, cos
-    FROM (SELECT *, row_number() OVER
-              (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= {TOP_K}
+    WITH {_DUCK_E},
+    {_duck_exact(TOP_K)}
+    SELECT * FROM exact
     """,
 )
 def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,13 +432,10 @@ def _table_sig(engine: str, t: int, bits: int) -> str:
         j = t * bits + r
         plane = _plane(j)
         if engine == "spark":
-            dot = dot_expr(
-                "v", "array({})".format(",".join(f"{w}.0D" for w in plane))
-            )
+            arr = "array({})".format(",".join(f"{w}.0D" for w in plane))
         else:
-            dot = _duck_dot(
-                "v", "([{}]::DOUBLE[])".format(",".join(map(str, plane)))
-            )
+            arr = "([{}]::DOUBLE[])".format(",".join(map(str, plane)))
+        dot = fold(engine, "dot", "v", arr)
         terms.append(f"(CASE WHEN {dot} > 0.0 THEN {1 << r} ELSE 0 END)")
     return " + ".join(terms)
 
@@ -323,8 +443,7 @@ def _table_sig(engine: str, t: int, bits: int) -> str:
 @register(
     "sim_ann_hyperplane",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
+    WITH {_DUCK_E},
     sigs AS (SELECT vec_id, CAST({_table_sig('duck', 0, NBITS)} AS BIGINT) AS sig FROM e)
     SELECT vec_id, sig,
            COUNT(*) OVER (PARTITION BY sig) AS bucket_size
@@ -356,32 +475,9 @@ def sim_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_ivf_search",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    cents AS (SELECT vec_id AS cid, v AS cv FROM e
-              WHERE vec_id % {CENTROID_STRIDE} = 0),
-    assign AS (
-        SELECT vec_id, cid AS cell FROM (
-            SELECT e.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {_duck_cos('e.v', 'c.cv')} DESC, c.cid) AS rn
-            FROM e CROSS JOIN cents c)
-        WHERE rn = 1
-    ),
-    scored AS (
-        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               {_duck_cos('qe.v', 'ne.v')} AS cos
-        FROM assign q
-        JOIN assign n ON n.cell = q.cell AND n.vec_id != q.vec_id
-        JOIN e qe ON qe.vec_id = q.vec_id
-        JOIN e ne ON ne.vec_id = n.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-    )
-    SELECT query_id, neighbor_id, cos
-    FROM (SELECT *, row_number() OVER
-              (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 3
+    WITH {_DUCK_E},
+    {_duck_ivf(1)}
+    SELECT * FROM ivf
     """,
 )
 def sim_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,7 +538,7 @@ def _ivf_topk(
     # fold left, 3× fewer folds than the inline cosine with bit-identical
     # arithmetic (same sqrt doubles, same multiply/divide order as the
     # oracle's inline form).
-    dist = f"-({dot_expr('v', 'ct.cv')} / (nrm * ct.cn))"
+    dist = f"-({fold('spark', 'dot', 'v', 'ct.cv')} / (nrm * ct.cn))"
     # r16: BOTH assignment sides (query and corpus) fold the SAME
     # centroid table; Catalyst does not CSE across the cell join's
     # branches, so the un-shared form re-scanned the corpus and re-ran
@@ -473,72 +569,15 @@ def _ivf_topk(
         F.col("v").alias("nv"),
         F.col("nrm").alias("nn"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(n, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.expr(dot_expr("qv", "nv")) / (F.col("qn") * F.col("nn"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .drop("rn")
-    )
-
-
-#: Oracle CTE fragments shared by the nprobe>1 queries: corpus assign
-#: (nearest cell) + query assign (top-nprobe cells) + probed-cell scoring.
-_IVF_CENTS_ASSIGN = f"""
-    cents AS (SELECT vec_id AS cid, v AS cv FROM e
-              WHERE vec_id % {CENTROID_STRIDE} = 0),
-    assign AS (
-        SELECT vec_id, cid AS cell FROM (
-            SELECT e.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {_duck_cos('e.v', 'c.cv')} DESC, c.cid) AS rn
-            FROM e CROSS JOIN cents c)
-        WHERE rn = 1
-    )"""
-
-
-def _ivf_scored_sql(nprobe: int) -> str:
-    return f"""
-    qassign AS (
-        SELECT vec_id, cid AS cell FROM (
-            SELECT e.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {_duck_cos('e.v', 'c.cv')} DESC, c.cid) AS rn
-            FROM e CROSS JOIN cents c
-            WHERE e.vec_id < {N_QUERIES})
-        WHERE rn <= {nprobe}
-    ),
-    ivf_scored AS (
-        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               {_duck_cos('qe.v', 'ne.v')} AS cos
-        FROM qassign q
-        JOIN assign n ON n.cell = q.cell AND n.vec_id != q.vec_id
-        JOIN e qe ON qe.vec_id = q.vec_id
-        JOIN e ne ON ne.vec_id = n.vec_id
-    )"""
+    return _cosine_topk(q, n, 3, on="cell")
 
 
 @register(
     "sim_ivf_nprobe2",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    {_IVF_CENTS_ASSIGN},
-    {_ivf_scored_sql(2)}
-    SELECT query_id, neighbor_id, cos
-    FROM (SELECT *, row_number() OVER
-              (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM ivf_scored)
-    WHERE rn <= 3
+    WITH {_DUCK_E},
+    {_duck_ivf(2)}
+    SELECT * FROM ivf
     """,
 )
 def sim_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,61 +593,7 @@ def sim_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_topk(spark, sf_dir, nprobe=2)
 
 
-@register(
-    "sim_ann_recall",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    exact_scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_duck_cos('q.v', 'c.v')} AS cos
-        FROM e q JOIN e c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id
-        FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-              FROM exact_scored)
-        WHERE rn <= 3
-    ),
-    cents AS (SELECT vec_id AS cid, v AS cv FROM e
-              WHERE vec_id % {CENTROID_STRIDE} = 0),
-    assign AS (
-        SELECT vec_id, cid AS cell FROM (
-            SELECT e.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {_duck_cos('e.v', 'c.cv')} DESC, c.cid) AS rn
-            FROM e CROSS JOIN cents c)
-        WHERE rn = 1
-    ),
-    ivf_scored AS (
-        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               {_duck_cos('qe.v', 'ne.v')} AS cos
-        FROM assign q
-        JOIN assign n ON n.cell = q.cell AND n.vec_id != q.vec_id
-        JOIN e qe ON qe.vec_id = q.vec_id
-        JOIN e ne ON ne.vec_id = n.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-    ),
-    ivf AS (
-        SELECT query_id, neighbor_id
-        FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-              FROM ivf_scored)
-        WHERE rn <= 3
-    )
-    SELECT x.query_id,
-           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_hits,
-           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS DOUBLE) / 3 AS recall
-    FROM exact x
-    LEFT JOIN ivf i ON i.query_id = x.query_id
-                   AND i.neighbor_id = x.neighbor_id
-    GROUP BY x.query_id
-    """,
-)
+@register("sim_ann_recall", oracle=_duck_recall(1))
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation: recall@3 of IVF(nprobe=1) against the
     exact top-3 — the acceptance gate a production ANN index must pass
@@ -649,44 +634,7 @@ def _ann_recall(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     )
 
 
-@register(
-    "sim_ann_recall_nprobe2",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    exact_scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_duck_cos('q.v', 'c.v')} AS cos
-        FROM e q JOIN e c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id
-        FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-              FROM exact_scored)
-        WHERE rn <= 3
-    ),
-    {_IVF_CENTS_ASSIGN},
-    {_ivf_scored_sql(2)},
-    ivf AS (
-        SELECT query_id, neighbor_id
-        FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-              FROM ivf_scored)
-        WHERE rn <= 3
-    )
-    SELECT x.query_id,
-           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_hits,
-           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS DOUBLE) / 3 AS recall
-    FROM exact x
-    LEFT JOIN ivf i ON i.query_id = x.query_id
-                   AND i.neighbor_id = x.neighbor_id
-    GROUP BY x.query_id
-    """,
-)
+@register("sim_ann_recall_nprobe2", oracle=_duck_recall(2))
 def sim_ann_recall_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@3 of IVF with nprobe=2 — paired with ``sim_ann_recall``
     (nprobe=1) this is the quality/latency trade made measurable; a
@@ -873,33 +821,37 @@ def _spread_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.repartition(n)
 
 
-#: Shared oracle candidate CTE: hamming<=1 bucket collision in any
-#: table (the multiprobe contract; DuckDB brute-forces the hamming
-#: predicate — the oracle states WHAT, the engine's probe-explode
-#: equi-join is the HOW).
-_DUCK_CAND_MULTIPROBE = """cand AS (
+#: The oracle chain of the embedding near-dup pairs over ``e``: the
+#: signatures of every table, the candidates — hamming<=1 bucket
+#: collision in any table, the multiprobe contract (DuckDB brute-forces
+#: the hamming predicate; the oracle states WHAT, the engine's
+#: probe-explode equi-join is the HOW) — their exact cosine
+#: (``scored``) and the pairs at or above the threshold (``pairs``).
+_DUCK_EMB_PAIRS = f"""sigs AS (
+        {_DUCK_TABLE_SIGS}
+    ),
+    cand AS (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM sigs a
         JOIN sigs b ON a.t = b.t
                    AND bit_count(xor(a.sig, b.sig)) <= 1
                    AND a.vec_id < b.vec_id
-    )"""
+    ),
+    scored AS (
+        SELECT c.vec_a, c.vec_b, {_duck_cos('ea.v', 'eb.v')} AS cos
+        FROM cand c
+        JOIN e ea ON ea.vec_id = c.vec_a
+        JOIN e eb ON eb.vec_id = c.vec_b
+    ),
+    pairs AS (SELECT * FROM scored WHERE cos >= {COS_DUP_THRESHOLD})"""
 
 
 @register(
     "dedup_embedding_cosine",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    sigs AS (
-        {_DUCK_TABLE_SIGS}
-    ),
-    {_DUCK_CAND_MULTIPROBE}
-    SELECT c.vec_a, c.vec_b, {_duck_cos('ea.v', 'eb.v')} AS cos
-    FROM cand c
-    JOIN e ea ON ea.vec_id = c.vec_a
-    JOIN e eb ON eb.vec_id = c.vec_b
-    WHERE {_duck_cos('ea.v', 'eb.v')} >= {COS_DUP_THRESHOLD}
+    WITH {_DUCK_E},
+    {_DUCK_EMB_PAIRS}
+    SELECT * FROM pairs
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -930,7 +882,7 @@ def _with_nrm(emb: DataFrame) -> DataFrame:
     """(vec_id, v, nrm): vectors with their norms — one sqrt-fold per
     vector, never per pair."""
     return emb.select(
-        "vec_id", "v", F.expr(f"sqrt({dot_expr('v', 'v')})").alias("nrm")
+        "vec_id", "v", F.expr(f"sqrt({fold('spark', 'dot', 'v', 'v')})").alias("nrm")
     )
 
 
@@ -954,7 +906,9 @@ def _pair_cosines(cand: DataFrame, vecs: DataFrame) -> DataFrame:
     return eb.join(ea.join(cand, "vec_a"), "vec_b").select(
         "vec_a",
         "vec_b",
-        (F.expr(dot_expr("va", "vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
+        (F.expr(fold("spark", "dot", "va", "vb")) / (F.col("na") * F.col("nb"))).alias(
+            "cos"
+        ),
     )
 
 
@@ -985,14 +939,6 @@ KMEANS_ITERS = 2
 KMEANS_SCALE = 1_000_000  # integer-cents scale for associative mean sums
 
 
-def _sqdist_expr(a: str, b: str) -> str:
-    """Sequential-fold squared L2 distance (deterministic sum order)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "cast(0.0 as double), (s, x) -> s + x)"
-    )
-
-
 def kmeans_iterate(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
     """K-means on (vec_id, v): ``iters`` rounds of assign + update.
 
@@ -1020,7 +966,9 @@ def kmeans_iterate(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataF
     def step(cents_df: DataFrame) -> DataFrame:
         # Carry v through the assignment: the mean update then needs no
         # join back to emb on vec_id (one N-row shuffle saved per round).
-        assign = assign_nearest(emb, cents_df, _sqdist_expr("v", "ct.cv"), carry=("v",))
+        assign = assign_nearest(
+            emb, cents_df, fold("spark", "sqdist", "v", "ct.cv"), carry=("v",)
+        )
         assigned.append(assign)
         per_dim = (
             assign
@@ -1054,63 +1002,44 @@ def kmeans_iterate(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataF
     return assigned[-1], cents_df
 
 
-#: Shared k-means oracle CTE chain (2 unrolled rounds): e, c0, a1,
-#: c1, a2 (final assignment), c2 (final centroids). Reused by
-#: sim_kmeans and the kmeans-backed IVF search.
-_KMEANS_CTES = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {KMEANS_K}),
-    a1 AS (
-        SELECT vec_id, cid AS cell FROM (
-            SELECT e.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                       list_reduce(list_prepend(0.0::DOUBLE,
-                           list_transform(generate_series(1, {DIM}),
-                               i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))),
-                           (s, x) -> s + x) ASC, c.cid) AS rn
-            FROM e CROSS JOIN c0 c) WHERE rn = 1
-    ),
-    c1 AS (
+def _duck_kmeans_round(r: int) -> str:
+    """Round ``r`` of the k-means oracle: the assignment ``a{r}`` to the
+    nearest centroid of ``c{r-1}`` and its integer-numerator means
+    ``c{r}`` — one round of :func:`kmeans_iterate`."""
+    nearest = f"{fold('duck', 'sqdist', 'e.v', 'c.cv')} ASC"
+    return f"""{_duck_nearest(f'a{r}', f'c{r - 1}', nearest)},
+    c{r} AS (
         SELECT cid, list(val ORDER BY d) AS cv FROM (
             SELECT x.cell AS cid, g.d,
                    CAST(SUM(TRY_CAST(round(e.v[g.d] * {KMEANS_SCALE}) AS BIGINT)) AS DOUBLE)
                        / {KMEANS_SCALE}.0 / COUNT(*) AS val
-            FROM a1 x JOIN e ON e.vec_id = x.vec_id
-            CROSS JOIN (SELECT unnest(generate_series(1, {DIM})) AS d) g
-            GROUP BY x.cell, g.d)
-        GROUP BY cid
-    ),
-    a2 AS (
-        SELECT vec_id, cid AS cell FROM (
-            SELECT e.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                       list_reduce(list_prepend(0.0::DOUBLE,
-                           list_transform(generate_series(1, {DIM}),
-                               i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))),
-                           (s, x) -> s + x) ASC, c.cid) AS rn
-            FROM e CROSS JOIN c1 c) WHERE rn = 1
-    ),
-    c2 AS (
-        SELECT cid, list(val ORDER BY d) AS cv FROM (
-            SELECT x.cell AS cid, g.d,
-                   CAST(SUM(TRY_CAST(round(e.v[g.d] * {KMEANS_SCALE}) AS BIGINT)) AS DOUBLE)
-                       / {KMEANS_SCALE}.0 / COUNT(*) AS val
-            FROM a2 x JOIN e ON e.vec_id = x.vec_id
+            FROM a{r} x JOIN e ON e.vec_id = x.vec_id
             CROSS JOIN (SELECT unnest(generate_series(1, {DIM})) AS d) g
             GROUP BY x.cell, g.d)
         GROUP BY cid
     )"""
 
 
+#: The k-means oracle CTE chain: e, the seeds c0, then one
+#: ``a{r}``/``c{r}`` pair per round up to ``KMEANS_ITERS`` — consumers
+#: read the final assignment ``a{KMEANS_ITERS}`` and centroids
+#: ``c{KMEANS_ITERS}``. Shared by sim_kmeans and the kmeans-backed IVF
+#: searches.
+_KMEANS_CTES = f"""
+    WITH {_DUCK_E},
+    c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {KMEANS_K}),
+    """ + ",\n    ".join(_duck_kmeans_round(r) for r in range(1, KMEANS_ITERS + 1))
+
+
 @register(
     "sim_kmeans",
     oracle=f"""
     {_KMEANS_CTES}
-    SELECT c2.cid AS cluster, n.n AS n_members,
-           c2.cv[1] AS c_first, c2.cv[{DIM}] AS c_last
-    FROM c2
-    JOIN (SELECT cell, count(*) AS n FROM a2 GROUP BY cell) n ON n.cell = c2.cid
+    SELECT c.cid AS cluster, n.n AS n_members,
+           c.cv[1] AS c_first, c.cv[{DIM}] AS c_last
+    FROM c{KMEANS_ITERS} c
+    JOIN (SELECT cell, count(*) AS n FROM a{KMEANS_ITERS} GROUP BY cell) n
+      ON n.cell = c.cid
     """,
 )
 def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1120,7 +1049,7 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop composes one lazy plan per round — the idiomatic Spark shape
     for bounded iterative refinement (the unbounded version would
     localCheckpoint per round to truncate lineage). The oracle unrolls
-    the same two rounds as CTEs, and the integer-numerator means make
+    the same rounds as CTEs, and the integer-numerator means make
     both engines' centroids bit-identical.
     """
     emb = load_vectors(spark, sf_dir)
@@ -1145,29 +1074,32 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUANT_LEVELS = 127  # symmetric int8 range [-127, 127]
 
 
+def _quant_scale(engine: str) -> str:
+    """The int8 scale of ``v``, 127 / max|x| (0 for an all-zero
+    vector), as Spark SQL or DuckDB."""
+    if engine == "spark":
+        mx = "array_max(transform(v, x -> abs(x)))"
+        return f"CASE WHEN {mx} = 0.0D THEN 0.0D ELSE {QUANT_LEVELS}.0D / {mx} END"
+    mx = "list_max(list_transform(v, x -> abs(x)))"
+    return f"CASE WHEN {mx} = 0.0 THEN 0.0 ELSE {QUANT_LEVELS}.0 / {mx} END"
+
+
+def _quantize(engine: str, scale: str) -> str:
+    """``v`` quantized at ``scale``: round(x · scale) as BIGINT."""
+    if engine == "spark":
+        return f"transform(v, x -> try_cast(round(x * {scale}) as bigint))"
+    return f"list_transform(v, x -> TRY_CAST(round(x * {scale}) AS BIGINT))"
+
+
 @register(
     "sim_embed_quantize",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    scaled AS (
-        SELECT vec_id, v,
-               CASE WHEN list_max(list_transform(v, x -> abs(x))) = 0.0
-                    THEN 0.0
-                    ELSE {QUANT_LEVELS}.0
-                         / list_max(list_transform(v, x -> abs(x)))
-               END AS scale
-        FROM e
-    )
-    SELECT vec_id, scale,
-           list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(generate_series(1, {DIM}),
-                   i -> TRY_CAST(round(v[i] * scale) AS BIGINT) * i)),
-               (s, x) -> s + x) AS checksum,
-           CAST(len(list_filter(v,
-               x -> abs(TRY_CAST(round(x * scale) AS BIGINT)) = {QUANT_LEVELS}))
-               AS BIGINT) AS n_sat
-    FROM scaled
+    WITH {_DUCK_E},
+    scaled AS (SELECT vec_id, v, {_quant_scale('duck')} AS scale FROM e),
+    qz AS (SELECT vec_id, scale, {_quantize('duck', 'scale')} AS q FROM scaled)
+    SELECT vec_id, scale, {fold('duck', 'checksum', 'q')} AS checksum,
+           CAST(len(list_filter(q, x -> abs(x) = {QUANT_LEVELS})) AS BIGINT) AS n_sat
+    FROM qz
     """,
 )
 def sim_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1184,22 +1116,13 @@ def sim_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     value).
     """
     emb = load_vectors(spark, sf_dir)
-    mx = "array_max(transform(v, x -> abs(x)))"
-    scaled = emb.withColumn(
-        "scale",
-        F.expr(
-            f"CASE WHEN {mx} = 0.0D THEN 0.0D "
-            f"ELSE {QUANT_LEVELS}.0D / {mx} END"
-        ),
-    )
+    scaled = emb.withColumn("scale", F.expr(_quant_scale("spark")))
     return scaled.select(
         "vec_id",
         "scale",
-        F.expr(
-            f"aggregate(zip_with(transform(v, x -> try_cast(round(x * scale) as bigint)), "
-            f"sequence(1L, {DIM}L), (q, i) -> q * i), "
-            "cast(0 as bigint), (s, x) -> s + x)"
-        ).alias("checksum"),
+        F.expr(fold("spark", "checksum", _quantize("spark", "scale"))).alias(
+            "checksum"
+        ),
         F.expr(
             f"cast(size(filter(v, x -> "
             f"abs(try_cast(round(x * scale) as bigint)) = {QUANT_LEVELS})) as bigint)"
@@ -1293,18 +1216,9 @@ def probe_embedding_store(
 @register(
     "sim_embedding_store",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    sigs AS (
-        {_DUCK_TABLE_SIGS}
-    ),
-    {_DUCK_CAND_MULTIPROBE}
-    SELECT c.vec_a, c.vec_b, {_duck_cos('ea.v', 'eb.v')} AS cos
-    FROM cand c
-    JOIN e ea ON ea.vec_id = c.vec_a
-    JOIN e eb ON eb.vec_id = c.vec_b
-    WHERE {_duck_cos('ea.v', 'eb.v')} >= {COS_DUP_THRESHOLD}
-      AND (c.vec_a % 4 = 3 OR c.vec_b % 4 = 3)
+    WITH {_DUCK_E},
+    {_DUCK_EMB_PAIRS}
+    SELECT * FROM pairs WHERE vec_a % 4 = 3 OR vec_b % 4 = 3
     """,
 )
 def sim_embedding_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1329,20 +1243,9 @@ def sim_embedding_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_ivf_kmeans",
     oracle=f"""
     {_KMEANS_CTES},
-    q AS (SELECT vec_id AS query_id, cell FROM a2 WHERE vec_id < {N_QUERIES}),
-    scored AS (
-        SELECT q.query_id, n.vec_id AS neighbor_id,
-               {_duck_cos('eq.v', 'en.v')} AS cos
-        FROM q
-        JOIN a2 n ON n.cell = q.cell AND n.vec_id <> q.query_id
-        JOIN e eq ON eq.vec_id = q.query_id
-        JOIN e en ON en.vec_id = n.vec_id
-    )
-    SELECT query_id, neighbor_id, cos
-    FROM (SELECT *, row_number() OVER
-              (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 3
+    q AS (SELECT * FROM a{KMEANS_ITERS} WHERE vec_id < {N_QUERIES}),
+    {_duck_cell_top3('q', f'a{KMEANS_ITERS}')}
+    SELECT * FROM ivf
     """,
 )
 def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1361,7 +1264,7 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_vectors(spark, sf_dir)
     assign, _cents = kmeans_iterate(emb, KMEANS_K, KMEANS_ITERS)
-    nrm = F.expr(f"sqrt({dot_expr('v', 'v')})")
+    nrm = F.expr(f"sqrt({fold('spark', 'dot', 'v', 'v')})")
     q = assign.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         "cell",
@@ -1374,26 +1277,7 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("nv"),
         nrm.alias("nn"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(n, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.expr(dot_expr("qv", "nv")) / (F.col("qn") * F.col("nn"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .drop("rn")
-    )
+    return _cosine_topk(q, n, 3, on="cell")
 
 
 # ---------------------------------------------------------------------------
@@ -1405,44 +1289,27 @@ RERANK_CANDIDATES = 10  # int8-scored shortlist per query
 RERANK_TOP_K = 3
 
 
-def _duck_idot(a: str, b: str) -> str:
-    """Exact INTEGER dot product, DuckDB flavor."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(generate_series(1, {DIM}), i -> {a}[i] * {b}[i])), "
-        "(s, x) -> s + x)"
-    )
-
-
-_SCALE_DUCK = (
-    "CASE WHEN list_max(list_transform(v, x -> abs(x))) = 0.0 THEN 0.0 "
-    f"ELSE {QUANT_LEVELS}.0 / list_max(list_transform(v, x -> abs(x))) END"
-)
-
-
 @register(
     "sim_ivf_quantized_rerank",
     oracle=f"""
     {_KMEANS_CTES},
     qz AS (
-        SELECT vec_id, v,
-               list_transform(v, x -> TRY_CAST(round(x * ({_SCALE_DUCK})) AS BIGINT))
-                   AS q
+        SELECT vec_id, v, {_quantize('duck', f"({_quant_scale('duck')})")} AS q
         FROM e
     ),
-    qn AS (SELECT vec_id, v, q, {_duck_idot('q', 'q')} AS qq FROM qz),
+    qn AS (SELECT vec_id, v, q, {fold('duck', 'idot', 'q', 'q')} AS qq FROM qz),
     qside AS (
-        SELECT a2.vec_id AS query_id, a2.cell, qn.q, qn.qq, qn.v
-        FROM a2 JOIN qn ON qn.vec_id = a2.vec_id
-        WHERE a2.vec_id < {N_QUERIES}
+        SELECT a.vec_id AS query_id, a.cell, qn.q, qn.qq, qn.v
+        FROM a{KMEANS_ITERS} a JOIN qn ON qn.vec_id = a.vec_id
+        WHERE a.vec_id < {N_QUERIES}
     ),
     nside AS (
-        SELECT a2.vec_id AS neighbor_id, a2.cell, qn.q, qn.qq, qn.v
-        FROM a2 JOIN qn ON qn.vec_id = a2.vec_id
+        SELECT a.vec_id AS neighbor_id, a.cell, qn.q, qn.qq, qn.v
+        FROM a{KMEANS_ITERS} a JOIN qn ON qn.vec_id = a.vec_id
     ),
     approx AS (
         SELECT qside.query_id, nside.neighbor_id, qside.v AS vq, nside.v AS vn,
-               CAST({_duck_idot('qside.q', 'nside.q')} AS DOUBLE)
+               CAST({fold('duck', 'idot', 'qside.q', 'nside.q')} AS DOUBLE)
                    / (sqrt(CAST(qside.qq AS DOUBLE))
                       * sqrt(CAST(nside.qq AS DOUBLE))) AS approx_cos
         FROM qside
@@ -1450,23 +1317,15 @@ _SCALE_DUCK = (
                   AND nside.neighbor_id <> qside.query_id
         WHERE qside.qq > 0 AND nside.qq > 0
     ),
-    shortlist AS (
-        SELECT * FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                          ORDER BY approx_cos DESC, neighbor_id) AS rn
-            FROM approx)
-        WHERE rn <= {RERANK_CANDIDATES}
-    ),
+    shortlist AS ({_duck_top(
+        'approx', RERANK_CANDIDATES,
+        'query_id, neighbor_id, vq, vn, approx_cos', 'approx_cos')}),
     reranked AS (
         SELECT query_id, neighbor_id, approx_cos,
                {_duck_cos('vq', 'vn')} AS cos
         FROM shortlist
     )
-    SELECT query_id, neighbor_id, approx_cos, cos
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id) AS rn2
-          FROM reranked)
-    WHERE rn2 <= {RERANK_TOP_K}
+    {_duck_top('reranked', RERANK_TOP_K, 'query_id, neighbor_id, approx_cos, cos')}
     """,
 )
 def sim_ivf_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1494,24 +1353,12 @@ def sim_ivf_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_vectors(spark, sf_dir)
     assign, _cents = kmeans_iterate(emb, KMEANS_K, KMEANS_ITERS)
-    mx = "array_max(transform(v, x -> abs(x)))"
-    scale = (
-        f"CASE WHEN {mx} = 0.0D THEN 0.0D ELSE {QUANT_LEVELS}.0D / {mx} END"
-    )
     quantized = assign.select(
         "vec_id",
         "cell",
         "v",
-        F.expr(
-            f"transform(v, x -> try_cast(round(x * ({scale})) as bigint))"
-        ).alias("q"),
-    ).withColumn(
-        "qq",
-        F.expr(
-            "aggregate(zip_with(q, q, (x, y) -> x * y), "
-            "cast(0 as bigint), (s, x) -> s + x)"
-        ),
-    )
+        F.expr(_quantize("spark", f"({_quant_scale('spark')})")).alias("q"),
+    ).withColumn("qq", F.expr(fold("spark", "idot", "q", "q")))
     qside = quantized.filter(
         (F.col("vec_id") < N_QUERIES) & (F.col("qq") > 0)
     ).select(
@@ -1528,10 +1375,6 @@ def sim_ivf_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qq").alias("qq_n"),
         F.col("v").alias("vn"),
     )
-    idot = (
-        "aggregate(zip_with(q_q, q_n, (x, y) -> x * y), "
-        "cast(0 as bigint), (s, x) -> s + x)"
-    )
     approx = (
         F.broadcast(qside)
         .join(nside, "cell")
@@ -1542,7 +1385,7 @@ def sim_ivf_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vq",
             "vn",
             (
-                F.expr(idot).cast("double")
+                F.expr(fold("spark", "idot", "q_q", "q_n")).cast("double")
                 / (
                     F.sqrt(F.col("qq_q").cast("double"))
                     * F.sqrt(F.col("qq_n").cast("double"))
@@ -1550,66 +1393,23 @@ def sim_ivf_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("approx_cos"),
         )
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        approx.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= RERANK_CANDIDATES)
-        .drop("rn")
+    shortlist = _per_query_top(approx, "approx_cos", RERANK_CANDIDATES)
+    cos = F.expr(fold("spark", "dot", "vq", "vn")) / (
+        F.sqrt(F.expr(fold("spark", "dot", "vq", "vq")))
+        * F.sqrt(F.expr(fold("spark", "dot", "vn", "vn")))
     )
     reranked = shortlist.select(
-        "query_id",
-        "neighbor_id",
-        "approx_cos",
-        (
-            F.expr(dot_expr("vq", "vn"))
-            / (
-                F.sqrt(F.expr(dot_expr("vq", "vq")))
-                * F.sqrt(F.expr(dot_expr("vn", "vn")))
-            )
-        ).alias("cos"),
+        "query_id", "neighbor_id", "approx_cos", cos.alias("cos")
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rn2", F.row_number().over(w2))
-        .filter(F.col("rn2") <= RERANK_TOP_K)
-        .drop("rn2")
-    )
+    return _per_query_top(reranked, "cos", RERANK_TOP_K, rn="rn2")
 
 
 @register(
     "sim_embedding_clusters",
     oracle=f"""
-    WITH RECURSIVE e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ),
-    sigs AS (
-        {_DUCK_TABLE_SIGS}
-    ),
-    {_DUCK_CAND_MULTIPROBE},
-    pairs AS (
-        SELECT c.vec_a, c.vec_b
-        FROM cand c
-        JOIN e ea ON ea.vec_id = c.vec_a
-        JOIN e eb ON eb.vec_id = c.vec_b
-        WHERE {_duck_cos('ea.v', 'eb.v')} >= {COS_DUP_THRESHOLD}
-    ),
-    edges AS (
-        SELECT vec_a AS src, vec_b AS dst FROM pairs
-        UNION ALL
-        SELECT vec_b, vec_a FROM pairs
-    ),
-    reach AS (
-        SELECT DISTINCT src AS v, src AS label FROM edges
-        UNION
-        SELECT e2.dst AS v, r.label
-        FROM reach r JOIN edges e2 ON e2.src = r.v
-    ),
-    comp AS (SELECT v, MIN(label) AS component FROM reach GROUP BY v),
+    WITH RECURSIVE {_DUCK_E},
+    {_DUCK_EMB_PAIRS},
+    {components_ctes('pairs', 'vec_a', 'vec_b')},
     csizes AS (
         SELECT component, COUNT(*) AS cluster_size FROM comp GROUP BY component
     )
@@ -1634,8 +1434,6 @@ def sim_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME recursive min-label fixpoint the text-side CC oracles use, so
     neither pair semantics nor clustering can drift between surfaces.
     """
-    from spark_etl_pipeline_spark.operators.dedup import connected_components
-
     pairs = dedup_embedding_cosine(spark, sf_dir).select("vec_a", "vec_b")
     labels = connected_components(pairs, "vec_a", "vec_b")
     sizes = labels.groupBy(F.col("label").alias("component")).agg(
@@ -1655,18 +1453,8 @@ def sim_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_threshold_profile",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0),
-    sigs AS (
-        {_DUCK_TABLE_SIGS}
-    ),
-    {_DUCK_CAND_MULTIPROBE},
-    scored AS (
-        SELECT {_duck_cos('ea.v', 'eb.v')} AS cos
-        FROM cand c
-        JOIN e ea ON ea.vec_id = c.vec_a
-        JOIN e eb ON eb.vec_id = c.vec_b
-    )
+    WITH {_DUCK_E},
+    {_DUCK_EMB_PAIRS}
     SELECT CAST(floor(cos * 10.0) AS INTEGER) AS cos_bin,
            CAST(COUNT(*) AS BIGINT) AS n_pairs
     FROM scored GROUP BY 1
@@ -1680,7 +1468,8 @@ def sim_threshold_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the current {COS_DUP_THRESHOLD} cut says the threshold is shaving
     a real dup cluster. Same MULTIPROBE candidate generation and
     bit-exact sequential-fold cosine as ``dedup_embedding_cosine``
-    (whose SQL this oracle shares minus the WHERE) — the histogram
+    (this oracle reads the shared chain's ``scored``, before the
+    threshold) — the histogram
     profiles exactly the candidate set the dedup queries decide over,
     and so also measures the probe tables' candidate yield directly.
     Binning by ``floor(cos·10)`` is deterministic because the cosine
@@ -1702,33 +1491,9 @@ def sim_threshold_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "docs_dedup_semantic",
     oracle=f"""
-    WITH RECURSIVE e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ),
-    sigs AS (
-        {_DUCK_TABLE_SIGS}
-    ),
-    {_DUCK_CAND_MULTIPROBE},
-    pairs AS (
-        SELECT c.vec_a, c.vec_b
-        FROM cand c
-        JOIN e ea ON ea.vec_id = c.vec_a
-        JOIN e eb ON eb.vec_id = c.vec_b
-        WHERE {_duck_cos('ea.v', 'eb.v')} >= {COS_DUP_THRESHOLD}
-    ),
-    edges AS (
-        SELECT vec_a AS src, vec_b AS dst FROM pairs
-        UNION ALL
-        SELECT vec_b, vec_a FROM pairs
-    ),
-    reach AS (
-        SELECT DISTINCT src AS v, src AS label FROM edges
-        UNION
-        SELECT e2.dst AS v, r.label
-        FROM reach r JOIN edges e2 ON e2.src = r.v
-    ),
-    comp AS (SELECT v, MIN(label) AS component FROM reach GROUP BY v),
+    WITH RECURSIVE {_DUCK_E},
+    {_DUCK_EMB_PAIRS},
+    {components_ctes('pairs', 'vec_a', 'vec_b')},
     drops AS (SELECT v AS doc_id FROM comp WHERE v != component)
     SELECT d.source,
            CAST(COUNT(*) AS BIGINT) AS n_before,
@@ -1756,8 +1521,6 @@ def docs_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; the drop-list join broadcasts while the label table's row
     count fits.
     """
-    from spark_etl_pipeline_spark.operators.dedup import connected_components
-
     docs = table(spark, sf_dir, "documents")
     pairs = dedup_embedding_cosine(spark, sf_dir).select("vec_a", "vec_b")
     labels = connected_components(pairs, "vec_a", "vec_b")

@@ -1202,7 +1202,10 @@ def _curation_oracle() -> str:
     statement (imported lazily to keep module import order acyclic).
     Every sub-pipeline's SQL is the SAME text the standalone queries
     use, so this row fails if ANY stage drifts."""
-    from spark_etl_pipeline_spark.operators.dedup import _MINHASH_PAIRS_CTES
+    from spark_etl_pipeline_spark.operators.dedup import (
+        _MINHASH_PAIRS_CTES,
+        components_ctes,
+    )
     from spark_etl_pipeline_spark.operators.text import (
         EN_STOPWORDS,
         REP_DUP_TRIGRAM_MAX,
@@ -1212,20 +1215,8 @@ def _curation_oracle() -> str:
 
     return f"""
     WITH RECURSIVE {_MINHASH_PAIRS_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM dup_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT src AS v, src AS label FROM edges
-        UNION
-        SELECT e.dst AS v, r.label
-        FROM reach r JOIN edges e ON e.src = r.v
-    ),
-    dropped AS (
-        SELECT v FROM reach GROUP BY v HAVING MIN(label) != v
-    ),
+    {components_ctes('dup_pairs', 'doc_a', 'doc_b')},
+    dropped AS (SELECT v FROM comp WHERE component != v),
     qtoks AS (
         SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
@@ -1361,25 +1352,17 @@ def docs_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_safe_oracle() -> str:
-    from spark_etl_pipeline_spark.operators.dedup import _MINHASH_PAIRS_CTES
+    from spark_etl_pipeline_spark.operators.dedup import (
+        _MINHASH_PAIRS_CTES,
+        components_ctes,
+    )
 
     return f"""
     WITH RECURSIVE {_MINHASH_PAIRS_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM dup_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT src AS v, src AS label FROM edges
-        UNION
-        SELECT e.dst AS v, r.label
-        FROM reach r JOIN edges e ON e.src = r.v
-    ),
-    groups AS (SELECT v, MIN(label) AS grp FROM reach GROUP BY v),
+    {components_ctes('dup_pairs', 'doc_a', 'doc_b')},
     tagged AS (
-        SELECT d.lang, d.n_chars, COALESCE(g.grp, d.doc_id) AS grp
-        FROM documents d LEFT JOIN groups g ON g.v = d.doc_id
+        SELECT d.lang, d.n_chars, COALESCE(c.component, d.doc_id) AS grp
+        FROM documents d LEFT JOIN comp c ON c.v = d.doc_id
     )
     SELECT lang,
            CASE WHEN {id_hash_duck('grp', 100)} < {SPLIT_TRAIN_PCT}

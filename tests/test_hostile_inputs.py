@@ -1745,6 +1745,9 @@ DUP3_COUNT_COLUMNS: dict[str, tuple[str, ...]] = {
     "docs_tfidf_topk": ("tf", "doc_freq", "score"),
     # counts the shared eval shingle rows, which triple
     "text_decontaminate": ("n_shared",),
+    # counts each document's passages per input row; each kept passage
+    # survives once, whichever copy of its document holds it
+    "docs_dedup_passages": ("n_passages",),
 }
 
 

@@ -365,3 +365,23 @@ def test_round_loops_checkpoint_only_through_rounds():
                 and id(node) not in allowed
             ]
     assert not bad, f"localCheckpoint inside a loop outside rounds(): {bad}"
+
+
+def test_shared_oracle_fragments_have_one_site():
+    """The connected-components fixpoint and the usable-embeddings CTE
+    are oracle fragments with one text each (``dedup.components_ctes``,
+    ``similarity._DUCK_E``): a second copy under ``operators/`` is a
+    kernel that can drift from the one every other oracle reads."""
+    from pathlib import Path
+
+    import spark_etl_pipeline_spark
+
+    ops = Path(spark_etl_pipeline_spark.__file__).parent / "operators"
+    for text in ("reach AS (", "embedding::DOUBLE[] AS v FROM embeddings"):
+        sites = [
+            f"{path.name}:{n}"
+            for path in sorted(ops.rglob("*.py"))
+            for n, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+            if text in line
+        ]
+        assert len(sites) == 1, f"{text!r} written at {len(sites)} sites: {sites}"
