@@ -1,22 +1,27 @@
-"""Session factory defaults: the local-only driver JIT policy and the two
-stderr-noise fixes ``get_spark`` applies to every session."""
+"""Session factory defaults: the local-only driver JIT policy, the
+generated-class cache size and the two stderr-noise fixes ``get_spark``
+applies to every session."""
 
 from __future__ import annotations
 
 import os
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 import pytest
 from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
+from spark_etl_pipeline_spark.plans import registry
 from spark_etl_pipeline_spark.session import (
     _STREAMING_AQE_LOGGER,
+    CODEGEN_CACHE_ENTRIES,
     LOCAL_DRIVER_JAVA_OPTIONS,
     get_spark,
 )
+from tests.conftest import SF_SMOKE
 
 _JAVA_OPTS = "spark.driver.defaultJavaOptions"
 
@@ -116,3 +121,47 @@ def test_streaming_aqe_warning_silenced_root_stays_warn(spark):
     assert not log_manager.getLogger(name).isWarnEnabled()
     assert log_manager.getLogger(name).getLevel().toString() == "ERROR"
     assert log_manager.getRootLogger().getLevel().toString() == "WARN"
+
+
+#: perfbench's ``corpus_curation`` pass (``perfbench/workloads.py``
+#: ``CURATION``) without ``docs_bm25_topk``: its two broadcast query
+#: stages finish in either order, AQE numbers their whole-stage codegen
+#: ids (``*(3)``/``*(4)``) in that order, and the id is part of the
+#: generated source, so some repeats compile new classes however
+#: large the cache is.
+_CURATION_PASS = (
+    "docs_dedup_corpus", "dedup_minhash_lsh", "dedup_simhash",
+    "dedup_embedding_cosine", "text_quality_score", "text_repetition_filter",
+    "text_decontaminate", "docs_pack_sequences", "sim_ivf_search",
+    "sim_kmeans",
+)
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_holds_a_curation_pass(spark):
+    """A second pass over the curation queries compiles no class: the
+    generated-class cache holds the whole pass. At Spark's default of
+    100 entries the LRU cache evicts each class before the next pass
+    asks for it again, and every pass compiles its ~200 classes anew."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    # the count is live: a literal no earlier plan holds is inlined into
+    # the generated source, so this plan compiles at least one class
+    before = _compiles(spark)
+    probe = spark.range(1).selectExpr(f"id + {time.time_ns()}")
+    probe.write.format("noop").mode("overwrite").save()
+    assert _compiles(spark) > before
+    registry.load_all()
+    counts = []
+    for _ in range(2):
+        before = _compiles(spark)
+        for name in _CURATION_PASS:
+            df = registry.REGISTRY[name].builder(spark, SF_SMOKE)
+            df.write.format("noop").mode("overwrite").save()
+        counts.append(_compiles(spark) - before)
+    assert counts[1] == 0, f"the second pass compiled {counts[1]} classes: {counts}"
